@@ -4,22 +4,31 @@ must be byte/value-identical to the DataFrame pipeline."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_fastscan_states_equal_dataframe_path(spark, transcripts_path):
+    """The split-list fabric's merged states equal both DataFrame
+    adapters': the leaf-scan (a plain parquet read) and mapInArrow (a
+    frame that is not a plain projection)."""
     from zetasketch_spark.operators.agg import (
-        SKETCH_COL, sketch_merge, sketch_partial)
-    from zetasketch_spark.operators.fastscan import sketch_agg_fastscan
+        SKETCH_COL, _plain_parquet_files, sketch_merge, sketch_partial)
+    from zetasketch_spark.operators.fastscan import sketch_agg_rdd
     from zetasketch_spark.sketches.base import HllFamily
-    from zetasketch_spark.sources.transcripts import load_transcripts
 
     fam = HllFamily(precision=13)
-    fast = {r["role"]: bytes(r[SKETCH_COL]) for r in sketch_agg_fastscan(
-        spark, transcripts_path, ["role"], "conv_id", fam, keep_sketch=True).collect()}
-    df = load_transcripts(spark, transcripts_path)
-    pipe = {r["role"]: bytes(r[SKETCH_COL]) for r in
-            sketch_merge(sketch_partial(df, ["role"], "conv_id", fam), ["role"], fam).collect()}
-    assert fast == pipe
+    fast = {r["role"]: bytes(r[SKETCH_COL]) for r in sketch_agg_rdd(
+        spark, transcripts_path, ["role"], "conv_id", fam,
+        keep_sketch=True).collect()}
+    plain = spark.read.parquet(transcripts_path)
+    shuffled = plain.repartition(3)
+    assert _plain_parquet_files(plain, ["role", "conv_id"])
+    assert _plain_parquet_files(shuffled, ["role", "conv_id"]) is None
+    for df in (plain, shuffled):
+        pipe = {r["role"]: bytes(r[SKETCH_COL]) for r in sketch_merge(
+            sketch_partial(df, ["role"], "conv_id", fam), ["role"],
+            fam).collect()}
+        assert fast == pipe
 
 
 def test_rdd_fabric_matches_dataframe_estimates(spark, transcripts_path):
@@ -340,3 +349,61 @@ def test_multi_sketch_agg_rdd_countsketch_spec(spark, transcripts_path):
         want_f2, want_n = cs.result(direct)
         assert out[role]["toolsq_f2_est"] == want_f2, role
         assert out[role]["toolsq_n"] == want_n, role
+
+
+@pytest.mark.parametrize("name", ["countmin", "countsketch"])
+def test_generic_prepare_path_states_equal_pandas_fold(spark, tmp_path, name):
+    """Families without a vectorized Arrow kernel go through the default
+    ``prepare_arrow`` (one pandas Series per batch, sliced per group).
+    Their merged bytes on both DataFrame adapters (leaf-scan and
+    mapInArrow) must equal (a) a driver-side ``family.update`` fold over
+    pandas Series and (b) ``sketch_agg_rdd(keep_sketch=True)``, for a
+    string, a nullable bigint and a date value column. The mapInArrow
+    frame is a filter, not a shuffle, so rows keep their order.
+
+    Count-Min lists its heavy-hitter candidates in the order its batches
+    brought them, so its bytes are compared where every fabric sees the
+    table as one batch (one row group); CountSketch's bytes do not depend
+    on batching and are compared over six row groups, i.e. six splits
+    merged by the fold."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zetasketch_spark.operators.agg import (
+        SKETCH_COL, sketch_merge, sketch_partial)
+    from zetasketch_spark.operators.fastscan import sketch_agg_rdd
+    from zetasketch_spark.sketches.countmin import CountMinFamily
+    from zetasketch_spark.sketches.countsketch import CountSketchFamily
+
+    fam, row_group = {"countmin": (CountMinFamily(width=256, depth=4), None),
+                      "countsketch": (CountSketchFamily(width=256, depth=4),
+                                      500)}[name]
+    n = 3000
+    tbl = pa.table({
+        "g": [f"g{i % 3}" for i in range(n)],
+        "s": [f"s{i % 37}" for i in range(n)],
+        "b": pa.array([None if i % 11 == 0 else i % 53 for i in range(n)],
+                      pa.int64()),
+        "d": pa.array([dt.date(2024, 1, 1) + dt.timedelta(days=i % 29)
+                       for i in range(n)], pa.date32()),
+    })
+    path = tmp_path / "t"
+    path.mkdir()
+    pq.write_table(tbl, str(path / "part-0.parquet"), row_group_size=row_group)
+    pdf = tbl.to_pandas()
+    plain = spark.read.parquet(str(path))
+    for col in ("s", "b", "d"):
+        ref = {}
+        for g, grp in pdf.groupby("g"):
+            st = fam.make()
+            fam.update(st, grp[col].reset_index(drop=True))
+            ref[g] = fam.serialize(st)
+        rdd = {r["g"]: bytes(r[SKETCH_COL]) for r in sketch_agg_rdd(
+            spark, str(path), ["g"], col, fam, keep_sketch=True).collect()}
+        assert rdd == ref, col
+        for df in (plain, plain.filter(F.col("g").isNotNull())):
+            got = {r["g"]: bytes(r[SKETCH_COL]) for r in sketch_merge(
+                sketch_partial(df, ["g"], col, fam), ["g"], fam).collect()}
+            assert got == ref, col

@@ -221,10 +221,13 @@ def test_prepare_arrow_gather_matches_pandas_cells():
 
 
 def test_arrow_fabric_state_equals_pandas_fabric(spark):
-    """sketch_partial's mapInArrow path (supports_arrow=True) must
-    produce byte-identical merged states to the generic mapInPandas path
-    on the same input/partitioning — absorption order is preserved, so
-    even this order-sensitive family agrees at the byte level."""
+    """sketch_partial's mapInArrow fabric must produce byte-identical
+    merged states to a driver-side ``family.update`` fold over pandas
+    Series — absorption order is preserved, so even this order-sensitive
+    family agrees at the byte level. Each group sits in one partition, in
+    a known row order, so the reference fold is one update per group."""
+    import pyarrow as pa
+
     from zetasketch_spark.operators.agg import (SKETCH_COL, sketch_merge,
                                                 sketch_partial)
 
@@ -232,18 +235,19 @@ def test_arrow_fabric_state_equals_pandas_fabric(spark):
     rows = [(int(i % 3),
              None if i % 17 == 0 else rng.normal(size=10).tolist())
             for i in range(600)]
-    df = spark.createDataFrame(rows, "g int, emb array<float>") \
-              .repartition(5, "g")
-    fam_arrow = FreqDirsFamily(ell=6)
-    fam_pandas = FreqDirsFamily(ell=6)
-    fam_pandas.supports_arrow = False  # force the generic fabric
-    out = {}
-    for tag, fam in (("arrow", fam_arrow), ("pandas", fam_pandas)):
-        merged = sketch_merge(sketch_partial(df, ["g"], "emb", fam),
-                              ["g"], fam)
-        out[tag] = {r["g"]: bytes(r[SKETCH_COL]) for r in merged.collect()}
-    assert out["arrow"] == out["pandas"]
-    st = FrequentDirections.deserialize(out["arrow"][0])
+    rows.sort(key=lambda r: r[0])  # stable: 3 contiguous groups of 200
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+                               "g int, emb array<float>")
+    fam = FreqDirsFamily(ell=6)
+    merged = sketch_merge(sketch_partial(df, ["g"], "emb", fam), ["g"], fam)
+    got = {r["g"]: bytes(r[SKETCH_COL]) for r in merged.collect()}
+    assert set(got) == {0, 1, 2}
+    for g, blob in got.items():
+        embs = [e for gg, e in rows if gg == g]
+        ref = fam.make()
+        fam.update(ref, pa.array(embs, type=pa.list_(pa.float32())).to_pandas())
+        assert blob == fam.serialize(ref)
+    st = FrequentDirections.deserialize(got[0])
     expect = [e for g, e in rows if g == 0 and e is not None]
     assert st.n == len(expect)
     _theorems_hold(np.array(expect), st)

@@ -816,3 +816,48 @@ def test_windowed_heavy_hitters_from_day_table_rollup(spark, tmp_path):
     fam.update(direct, events.filter(F.col("day") >= cutoff)
                .select("user_id").toPandas()["user_id"])
     assert cm.total == direct.total
+
+
+def test_update_tables_redelivery_starts_no_spark_job(spark, tmp_path):
+    """Redelivering a delta every table has applied is decided from the
+    tables' logs alone: no scan, no Spark job. A table that missed the
+    delta still gets the scan, for itself only."""
+    from zetasketch_spark.operators.incremental import update_tables
+    from zetasketch_spark.sketches.countmin import CountMinFamily
+
+    delta = _events(spark)
+    tables = {
+        "users": SketchTable(str(tmp_path / "u"), ["event_type"], "user_id",
+                             HllFamily(precision=12)),
+        "events": SketchTable(str(tmp_path / "e"), ["event_type"],
+                              "event_id", CountMinFamily(width=256, depth=4)),
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("first-delivery", "fold")
+        first = update_tables(spark, delta, tables, fingerprint="d0")
+        assert tracker.getJobIdsForGroup("first-delivery")
+        sc.setJobGroup("redelivery", "replay")
+        again = update_tables(spark, delta, tables, fingerprint="d0")
+        assert tracker.getJobIdsForGroup("redelivery") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert all(m["applied"] for m in first.values())
+    assert all(m["applied"] is False for m in again.values())
+    assert {n: m["version"] for n, m in again.items()} == \
+        {n: m["version"] for n, m in first.items()}
+
+
+def test_update_n_keys_equals_snapshot_rows(spark, tmp_path):
+    """``n_keys`` (from the written files' footers) is the snapshot's row
+    count, in the metrics and in the log record."""
+    events = _events(spark).withColumn("day", F.dayofmonth("ts"))
+    table = SketchTable(str(tmp_path / "t"), ["event_type", "day"],
+                        "user_id", HllFamily(precision=12))
+    for i in range(2):
+        m = table.update(spark, events.filter(F.col("day") % 2 == i),
+                         fingerprint=f"d{i}")
+        assert m["applied"]
+        assert m["n_keys"] == table.read(spark).count() > 0
+        assert table.history()[0]["n_keys"] == m["n_keys"]

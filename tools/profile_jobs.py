@@ -48,9 +48,10 @@ def main():
 
     run()  # warm (JIT, python workers, broadcast machinery)
     ui = spark.sparkContext.uiWebUrl
-    appid = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))[0]["id"]
+    appid = json.load(urllib.request.urlopen(
+        f"{ui}/api/v1/applications", timeout=30))[0]["id"]
     jobs_before = json.load(urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{appid}/jobs?length=1000"))
+        f"{ui}/api/v1/applications/{appid}/jobs?length=1000", timeout=30))
     seen = {j["jobId"] for j in jobs_before}
 
     t0 = time.time()
@@ -58,7 +59,7 @@ def main():
     wall = time.time() - t0
 
     jobs = json.load(urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{appid}/jobs?length=1000"))
+        f"{ui}/api/v1/applications/{appid}/jobs?length=1000", timeout=30))
     new = sorted((j for j in jobs if j["jobId"] not in seen),
                  key=lambda j: j["jobId"])
     from datetime import datetime

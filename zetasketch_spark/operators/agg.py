@@ -6,9 +6,12 @@ sketches, serialized state protos cross process boundaries, anyone merges
 (`HyperLogLogPlusPlus.java:40-42`, demonstrated by 100 partials -> 1 final in
 `HyperLogLogPlusPlusMergeTest.java:36-73`). Here the host engine is Spark:
 
-* **stage 1 (partial)** — ``mapInPandas``: one pass over each input
+* **stage 1 (partial)** — ``mapInArrow`` (``arrow_partials``) around the
+  one split kernel ``fastscan.split_states``: one pass over each input
   partition's Arrow batches, one sketch per (group key) per partition,
-  vectorized updates. Output: ``(keys..., sketch binary, rows_seen,
+  vectorized updates. A plain parquet projection skips the JVM->Python
+  row handoff through the split-list adapter (``fastscan.split_partials``).
+  Output: ``(keys..., sketch binary, rows_seen,
   partition_id)``. This is the skew defuser: a hot key costs register
   updates, never a wide shuffle of raw rows — shuffle volume is
   O(#keys x #partitions x state_size), independent of row count.
@@ -16,10 +19,11 @@ sketches, serialized state protos cross process boundaries, anyone merges
 * **stage 2 (final)** — ``groupBy(keys).applyInPandas``: associative merge.
   With ``tree_levels=2`` an intermediate merge on ``(keys, salt)`` bounds
   fan-in per task when #partitions is huge (1000-executor scale).
-* **stage 3 (result)** — scalar pandas UDF extracts estimates.
+* **stage 3 (result)** — scalar pandas UDF extracts estimates, or fused
+  into the final merge (``merge_result``) when the states are not kept.
 
 Column pruning/pushdown note: stage 1 selects only ``keys + [col]`` before
-the ``mapInPandas`` so Parquet scans read just those columns.
+the ``mapInArrow`` so Parquet scans read just those columns.
 """
 
 from __future__ import annotations
@@ -108,29 +112,17 @@ def _plain_parquet_files(df: DataFrame, cols: list[str]) -> list[str] | None:
 def sketch_partial(df: DataFrame, keys: list[str], col: str,
                    family: SketchFamily,
                    skip_partitions: frozenset = frozenset()) -> DataFrame:
-    """Stage 1: per-(partition, key) partial sketches, vectorized.
-
-    Families with ``supports_arrow`` get the ``mapInArrow`` path: the value
-    column is consumed straight from Arrow buffers (strings never become
-    Python objects), prepared (hashed/cast) once per batch, and
-    group-sliced by numpy indices. Others fall back to pandas batches.
+    """Stage 1: per-(partition, key) partial sketches — the one-spec case
+    of ``multi.multi_sketch_partial``, with the spec named ``sketch``.
 
     ``skip_partitions``: partition ids to return immediately for (without
     hashing/sketching their batches) — the checkpoint-resume hook."""
-    out_schema = StructType(
-        _key_fields(df, keys)
-        + [StructField(SKETCH_COL, BinaryType()),
-           StructField(ROWS_COL, LongType()),
-           StructField(PARTITION_COL, IntegerType())]
-    )
-    keys_t = tuple(keys)
-
     # Pin the hash domain from the Spark schema (single rule:
     # functions.sketch_udfs.pin_value_type; returns a copy, never mutates
     # the caller's family or its checkpoint query_signature).
     from zetasketch_spark.functions.sketch_udfs import pin_value_type
 
-    family = pin_value_type(family, df, col)
+    specs = {SKETCH_COL: (col, pin_value_type(family, df, col))}
 
     # NOTE (measured, sf1): spreading the partial stage with a round-robin
     # repartition here LOSES ~2.5x — the shuffle plus 32x more partial
@@ -139,109 +131,63 @@ def sketch_partial(df: DataFrame, keys: list[str], col: str,
     # inputs is real but the fix must not multiply state volume; see
     # OPTIMIZATION_r06.md ("sketch_partial spread" experiment).
 
-    # Leaf-scan short circuit (the DataSourceV2-style python-native scan
-    # fastscan.py documents): when df is provably a plain projection of a
-    # local parquet scan, decode the files in the RDD runner instead of
-    # shipping every row across the JVM->Python Arrow boundary. Same
-    # output schema and states; merge/result compose unchanged.
-    # skip_partitions addresses DataFrame partition ids, which this path
-    # renumbers — resume callers keep the mapInArrow fabric.
-    # (any family qualifies: the generic prepare_arrow fallback routes
-    # update_prepared to update(), state-equal to the pandas fabric)
+    # Leaf-scan short circuit: when df is provably a plain projection of a
+    # local parquet scan, the split-list adapter decodes the files in the
+    # RDD runner instead of shipping every row across the JVM->Python
+    # Arrow boundary. Same output schema and states; merge/result compose
+    # unchanged. skip_partitions addresses DataFrame partition ids, which
+    # this path renumbers — resume callers keep the mapInArrow adapter.
     if not skip_partitions:
         files = _plain_parquet_files(df, [*keys, col])
         if files:
-            from zetasketch_spark.operators.fastscan import \
-                sketch_partial_filescan
+            from zetasketch_spark.operators.fastscan import split_partials
 
-            return sketch_partial_filescan(
-                df.sparkSession, files, keys, col, family,
-                _key_fields(df, keys))
-
-    if getattr(family, "supports_arrow", False):
-        return _sketch_partial_arrow(df, keys, col, family, out_schema,
-                                     skip_partitions)
-
-    def partial_fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        if pid in skip_partitions:
-            return
-        acc: dict = {}
-        rows: dict = {}
-        for pdf in batches:
-            if len(keys_t) == 0:
-                grouped = [((), pdf)]
-            else:
-                grouped = pdf.groupby(list(keys_t), sort=False, dropna=False)
-            for key, grp in grouped:
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update(state, grp[col])
-                rows[key] += len(grp)
-        if acc:
-            yield pd.DataFrame(
-                [[*k, family.serialize(s), rows[k], pid] for k, s in acc.items()],
-                columns=[*keys_t, SKETCH_COL, ROWS_COL, PARTITION_COL],
-            )
-
-    return df.select(*keys, col).mapInPandas(partial_fn, out_schema)
+            return split_partials(df.sparkSession, files, keys, specs,
+                                  _key_fields(df, keys))
+    return arrow_partials(df, keys, specs, skip_partitions)
 
 
-def _sketch_partial_arrow(df: DataFrame, keys: list[str], col: str,
-                          family: SketchFamily, out_schema: StructType,
-                          skip_partitions: frozenset = frozenset()) -> DataFrame:
-    import numpy as np
-    import pyarrow as pa
-
+def arrow_partials(df: DataFrame, keys: list[str],
+                   specs: dict[str, tuple[str, SketchFamily]],
+                   skip_partitions: frozenset = frozenset()) -> DataFrame:
+    """The DataFrame ``mapInArrow`` adapter around the one split kernel
+    (``fastscan.split_states``): value columns are consumed straight from
+    Arrow buffers, each prepared once per batch. Output:
+    ``keys..., <name> binary per spec, rows_seen, partition_id``."""
+    out_schema = StructType(
+        _key_fields(df, keys)
+        + [StructField(n, BinaryType()) for n in specs]
+        + [StructField(ROWS_COL, LongType()),
+           StructField(PARTITION_COL, IntegerType())]
+    )
     keys_t = tuple(keys)
 
     def partial_fn(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from zetasketch_spark.operators.fastscan import split_states
+
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         if pid in skip_partitions:
             return
-        acc: dict = {}
-        rows: dict = {}
-        for batch in batches:
-            val = batch.column(batch.schema.get_field_index(col))
-            prepared = family.prepare_arrow(val)
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
+        rows = [(*k, *blobs, n, pid) for k, (blobs, n) in split_states(
+            ((b, None) for b in batches), keys_t, specs)]
+        if rows:
+            schema = to_arrow_schema(out_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)],
+                schema=schema)
 
-                groups = arrow_group_indices(
-                    {k: batch.column(batch.schema.get_field_index(k))
-                     for k in keys_t})
-            else:
-                groups = {(): np.arange(batch.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        if acc:
-            import pandas as pd
-            from pyspark.sql.pandas.types import to_arrow_schema
+    # backtick-quote names so a dot in a JSON-ingested column name is
+    # never parsed as a nested-field path
+    def _ref(name):
+        return F.col("`" + name.replace("`", "``") + "`")
 
-            out = pd.DataFrame(
-                [[*k, family.serialize(s), rows[k], pid] for k, s in acc.items()],
-                columns=[*keys_t, SKETCH_COL, ROWS_COL, PARTITION_COL],
-            )
-            yield pa.RecordBatch.from_pandas(
-                out, schema=to_arrow_schema(out_schema), preserve_index=False)
-
-    return df.select(*keys, col).mapInArrow(partial_fn, out_schema)
+    cols = sorted({c for c, _ in specs.values()} - set(keys))
+    return df.select(*[_ref(c) for c in [*keys, *cols]]).mapInArrow(
+        partial_fn, out_schema)
 
 
 def sketch_merge(partials: DataFrame, keys: list[str], family: SketchFamily,
@@ -256,11 +202,14 @@ def sketch_merge(partials: DataFrame, keys: list[str], family: SketchFamily,
         + [StructField(SKETCH_COL, BinaryType()), StructField(ROWS_COL, LongType())]
     )
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = family.merge_serialized(pdf[SKETCH_COL])
-        head = [pdf.iloc[0][k] for k in keys]
-        return pd.DataFrame([[*head, blob, int(pdf[ROWS_COL].sum())]],
-                            columns=[*keys, SKETCH_COL, ROWS_COL])
+    def merger(group: list[str]):
+        def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            head = [pdf.iloc[0][c] for c in group]
+            return pd.DataFrame(
+                [[*head, family.merge_serialized(pdf[SKETCH_COL]),
+                  int(pdf[ROWS_COL].sum())]],
+                columns=[*group, SKETCH_COL, ROWS_COL])
+        return merge_fn
 
     # the salt is pmod(partition_id, fan_in): with at most fan_in distinct
     # origin partitions every (keys, salt) level-1 group holds exactly ONE
@@ -277,19 +226,13 @@ def sketch_merge(partials: DataFrame, keys: list[str], family: SketchFamily,
             "_salt", F.pmod(F.coalesce(F.col(PARTITION_COL), F.lit(0)), F.lit(fan_in))
         )
         salted_schema = StructType(list(merged_schema.fields) + [StructField("_salt", IntegerType())])
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            blob = family.merge_serialized(pdf[SKETCH_COL])
-            head = [pdf.iloc[0][k] for k in keys]
-            return pd.DataFrame([[*head, blob, int(pdf[ROWS_COL].sum()), int(pdf.iloc[0]["_salt"])]],
-                                columns=[*keys, SKETCH_COL, ROWS_COL, "_salt"])
-
-        level1 = salted.groupBy(*keys, "_salt").applyInPandas(merge_salted, salted_schema)
+        level1 = salted.groupBy(*keys, "_salt").applyInPandas(
+            merger([*keys, "_salt"]), salted_schema)
         if _stop_after_salt:
             return level1  # caller fuses the final merge with extraction
-        return level1.groupBy(*keys).applyInPandas(merge_fn, merged_schema)
+        return level1.groupBy(*keys).applyInPandas(merger(keys), merged_schema)
 
-    return partials.groupBy(*keys).applyInPandas(merge_fn, merged_schema)
+    return partials.groupBy(*keys).applyInPandas(merger(keys), merged_schema)
 
 
 def collect_merged_states(partials: DataFrame, keys: list[str],
@@ -356,32 +299,44 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, family: SketchFamily,
     computed at fine grain re-merge exactly across grouping levels).
 
     Without ``keep_sketch`` the final merge EMITS the result columns
-    directly (one fused ``applyInPandas``): the separate extraction UDF
-    was a second JVM->Python crossing over the merged rows, pure constant
-    cost per query on this boundary (guide §4.1)."""
-    if not keep_sketch:
-        from zetasketch_spark.functions.sketch_udfs import pin_value_type
-
-        files = _plain_parquet_files(df, [*keys, col])
-        if files:
-            # fully-fused RDD pipeline: partial, merge and result without
-            # any SQL-layer Python crossing (see sketch_agg_filescan)
-            from zetasketch_spark.operators.fastscan import \
-                sketch_agg_filescan
-
-            return sketch_agg_filescan(
-                df.sparkSession, files, keys, col,
-                pin_value_type(family, df, col), _key_fields(df, keys))
-
-    partials = sketch_partial(df, keys, col, family)
+    directly (``merge_result``, one fused ``applyInPandas``): the separate
+    extraction UDF was a second JVM->Python crossing over the merged rows,
+    pure constant cost per query on this boundary (guide §4.1)."""
     if keep_sketch:
-        merged = sketch_merge(partials, keys, family,
-                              tree_levels=tree_levels, fan_in=fan_in)
+        merged = sketch_merge(sketch_partial(df, keys, col, family), keys,
+                              family, tree_levels=tree_levels, fan_in=fan_in)
         return sketch_result(merged, family, keep_sketch=True)
 
+    from zetasketch_spark.functions.sketch_udfs import pin_value_type
+
+    specs = {SKETCH_COL: (col, pin_value_type(family, df, col))}
+    files = _plain_parquet_files(df, [*keys, col])
+    if files:
+        # fully-fused RDD pipeline: partial, merge and result without any
+        # SQL-layer Python crossing — the SQL exchange + applyInPandas
+        # merge cost ~1.7 s of a 2 s query at sf1 while the kernel work
+        # was ~0.3 s
+        from zetasketch_spark.operators.fastscan import fold_splits
+
+        return fold_splits(df.sparkSession, files, keys, specs,
+                           key_fields=_key_fields(df, keys), prefixed=False)
+    partials = sketch_partial(df, keys, col, family)
+    if tree_levels >= 2 and partials.rdd.getNumPartitions() > fan_in:
+        partials = sketch_merge(partials, keys, family, tree_levels=2,
+                                fan_in=fan_in, _stop_after_salt=True)
+    return merge_result(partials, keys, specs, prefixed=False)
+
+
+def merge_result(partials: DataFrame, keys: list[str],
+                 specs: dict[str, tuple[str, SketchFamily]],
+                 prefixed: bool = True) -> DataFrame:
+    """Stages 2+3 fused: one ``applyInPandas`` merges each spec's blob
+    column per key and emits ``keys + rows_seen + result fields`` (named
+    ``<spec>_<field>`` when ``prefixed``)."""
     from pyspark.sql.types import _parse_datatype_string
 
-    fields = family.result_fields
+    fields = [(f"{n}_{fn}" if prefixed else fn, t)
+              for n, (_, fam) in specs.items() for fn, t in fam.result_fields]
     out_schema = StructType(
         [f for f in partials.schema.fields if f.name in keys]
         + [StructField(ROWS_COL, LongType())]
@@ -389,17 +344,14 @@ def sketch_agg(df: DataFrame, keys: list[str], col: str, family: SketchFamily,
     )
 
     def merge_result_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = family.merge_serialized(pdf[SKETCH_COL])
-        res = family.result(family.deserialize(blob))
+        res = []
+        for n, (_, fam) in specs.items():
+            res += fam.result(fam.deserialize(fam.merge_serialized(pdf[n])))
         head = [pdf.iloc[0][k] for k in keys]
         return pd.DataFrame(
             [[*head, int(pdf[ROWS_COL].sum()), *res]],
             columns=[*keys, ROWS_COL, *[n for n, _ in fields]])
 
-    if tree_levels >= 2 and partials.rdd.getNumPartitions() > fan_in:
-        level1 = sketch_merge(partials, keys, family, tree_levels=2,
-                              fan_in=fan_in, _stop_after_salt=True)
-        return level1.groupBy(*keys).applyInPandas(merge_result_fn, out_schema)
     return partials.groupBy(*keys).applyInPandas(merge_result_fn, out_schema)
 
 

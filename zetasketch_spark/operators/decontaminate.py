@@ -44,9 +44,11 @@ def benchmark_shingle_bloom(benchmark: DataFrame, text_col: str = "text",
 def _bloom_from_shingles(shingles: DataFrame, m: int, k: int) -> bytes:
     """Fold a ``shingle`` column into one serialized Bloom digest.
 
-    Bloom insertion is idempotent (bit OR), so the digest bytes are
-    identical whether ``shingles`` carries duplicates or is distinct —
-    which lets :func:`decontaminate` build the digest from the SAME
+    Bloom insertion is idempotent (bit OR), so the bit array is identical
+    whether ``shingles`` carries duplicates or is distinct (``n_added``,
+    hence the serialized blob and ``expected_fpr``, counts the
+    duplicates and differs) — membership is unchanged, which lets
+    :func:`decontaminate` build the digest from the SAME
     distinct-shingle table its exact-verify join needs, instead of
     shingling the benchmark twice (r6: the duplicate pandas-UDF pass was
     ~40% of the digest cost at bench scale)."""

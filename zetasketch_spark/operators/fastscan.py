@@ -1,5 +1,4 @@
-"""Columnar fast path for sketch partials: decode parquet inside the
-Python workers.
+"""Parquet split-list adapter, the one split kernel, and the RDD fold.
 
 Why this exists: sketch partial aggregation is an update-heavy leaf — every
 input row crosses into Python, but only tiny serialized states come back.
@@ -10,15 +9,19 @@ Reading the parquet row groups directly with pyarrow inside each worker
 removes the boundary from the per-row path entirely: the JVM ships only
 (file, row-group) split descriptors out and sketch blobs back.
 
-Scope and honesty:
-* This is a *leaf-scan short circuit* for plain parquet inputs with a
-  column-pruned projection — exactly the pushdown Catalyst would do, done
-  by the source itself (the same trick a DataSourceV2 "python-native scan"
-  would implement). Everything after the partial stage (shuffle, merge,
-  result, joins, windows) stays DataFrame/Catalyst.
-* Filters or non-parquet sources fall back to the mapInArrow path in
-  `zetasketch_spark.operators.agg` (same semantics; tests assert
-  state-level equality between the two paths).
+One kernel, two adapters, one fold:
+* ``split_states`` is the zetasketch Aggregator contract (create / add /
+  serialize) over Arrow tables: each spec's column is prepared once per
+  table (``family.prepare_arrow``), rows are grouped by
+  ``grouping.arrow_group_indices`` and every group slice goes to
+  ``update_prepared``. Single-family aggregation is the one-spec case.
+* Input adapters: a parquet split list (a directory, a single file, or
+  the explicit file list ``operators.agg._plain_parquet_files`` hands
+  over — the *leaf-scan short circuit* for plain parquet projections),
+  and the DataFrame ``mapInArrow`` adapter in ``operators.agg``.
+* ``fold_splits``: one ``reduceByKey`` over tuples of blobs, then the result
+  rows straight from the reducer. Everything after a DataFrame partial
+  stage (shuffle, merge, result, joins, windows) stays DataFrame/Catalyst.
 * At cluster scale the split planning below is what Spark's own
   FileSourceScan does: row-group-aligned splits, bin-packed by bytes.
 
@@ -35,13 +38,17 @@ import glob as _glob
 import os
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StructField, StructType)
+    BinaryType, IntegerType, LongType, StructField, StructType,
+    _parse_datatype_string)
 
-from zetasketch_spark.operators.agg import (
-    PARTITION_COL, ROWS_COL, SKETCH_COL, sketch_merge, sketch_result)
-from zetasketch_spark.sketches.base import SketchFamily
+from zetasketch_spark.operators.agg import PARTITION_COL, ROWS_COL, SKETCH_COL
+from zetasketch_spark.operators.grouping import arrow_group_indices
+
+# row-group splits are bin-packed to this many bytes before the
+# under-parallel re-plan (``_plan``)
+SPLIT_BYTES = 96 << 20
 
 
 def partition_values(f: str, root: str) -> dict[str, str]:
@@ -56,7 +63,7 @@ def partition_values(f: str, root: str) -> dict[str, str]:
     return out
 
 
-def plan_splits(path: str, target_bytes: int = 96 << 20,
+def plan_splits(path: str, target_bytes: int = SPLIT_BYTES,
                 partition_filter: dict | None = None,
                 ) -> list[tuple[str, list[int]]]:
     """Row-group-aligned splits bin-packed to ~target_bytes, like
@@ -218,12 +225,14 @@ def _plan_key_types(splits, keys, derived, part_keys) -> list[str]:
 
 def _coerce_key(v, t):
     # pandas surfaces nullable int keys as floats with NaN — restore
-    # the declared type (None for NaN) so the explicit schema accepts it
+    # the declared type (None for NaN) so the explicit schema accepts it;
+    # a NaN in a float key column is a group of its own, as in Spark
     import math
 
     if isinstance(v, np.generic):
         v = v.item()
-    if v is None or (isinstance(v, float) and math.isnan(v)):
+    if v is None or (isinstance(v, float) and math.isnan(v)
+                      and t not in ("double", "float")):
         return None
     if t in ("bigint", "int") and isinstance(v, float):
         return int(v)
@@ -232,261 +241,165 @@ def _coerce_key(v, t):
     return v
 
 
-def sketch_partial_fastscan(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    col: str,
-    family: SketchFamily,
-    key_schema: list[tuple[str, str]] | None = None,
-    derived_keys: dict | None = None,
-    target_split_bytes: int = 96 << 20,
-) -> DataFrame:
-    """Stage 1 over a parquet directory, decoding in the workers.
+def split_states(tables, keys, specs: dict[str, tuple], derived=None):
+    """The one split kernel: fold one task's Arrow tables (parquet splits
+    or ``mapInArrow`` batches, given as ``(table, partition_values)``
+    pairs) into per-key states, then yield ``(key, (blobs, rows))`` with
+    one serialized blob per spec in ``specs`` order.
 
-    ``derived_keys``: {out_name: (op, source_col)} with op in
-    {"to_date", "date_str"}. ``key_schema``: [(name, spark_type_str)] for
-    derived keys (plain columns are inferred by reading one footer)."""
-    import pyarrow.parquet as pq
-
-    derived = derived_keys or {}
-    splits = plan_splits(path, target_split_bytes)
-    read_cols = sorted({_value_source(col),
-                        *[k for k in keys if k not in derived],
-                        *[src for (_, src) in derived.values()]})
-
-    # output schema: derive plain key types from the parquet schema
-    sample_schema = pq.read_schema(splits[0][0])
-    type_map = {"string": "string", "large_string": "string", "int64": "bigint",
-                "int32": "int", "double": "double", "float": "float",
-                "timestamp[us]": "timestamp", "date32[day]": "date"}
-    ks = dict(key_schema or [])
-    fields = []
-    from pyspark.sql.types import _parse_datatype_string
-
-    for k in keys:
-        if k in ks:
-            fields.append(StructField(k, _parse_datatype_string(ks[k])))
-        elif k in derived:
-            op = derived[k][0]
-            fields.append(StructField(k, _parse_datatype_string(
-                "date" if op == "to_date" else "string")))
+    ``specs``: ``{name: (value_col_or_derived, family)}``. Each spec's
+    column is prepared once per table; groups are sliced by row indices
+    in ascending order, so each group's rows reach ``update_prepared`` in
+    table order."""
+    fams = [fam for _, fam in specs.values()]
+    derived = derived or {}
+    acc: dict = {}
+    for tbl, part_values in tables:
+        prepared = [fam.prepare_arrow(_derive_value_array(tbl, c))
+                    for c, fam in specs.values()]
+        if keys:
+            groups = arrow_group_indices(
+                _derive_key_arrays(tbl, keys, derived, part_values))
         else:
-            pa_t = str(sample_schema.field(k).type)
-            fields.append(StructField(k, _parse_datatype_string(type_map[pa_t])))
-    out_schema = StructType(fields + [
-        StructField(SKETCH_COL, BinaryType()),
-        StructField(ROWS_COL, LongType()),
-        StructField(PARTITION_COL, IntegerType()),
-    ])
+            groups = {(): np.arange(tbl.num_rows)}
+        for key, idx in groups.items():
+            if not isinstance(key, tuple):
+                key = (key,)
+            entry = acc.get(key)
+            if entry is None:
+                entry = acc[key] = [[fam.make() for fam in fams], 0]
+            for fam, state, prep in zip(fams, entry[0], prepared):
+                fam.update_prepared(state, prep[idx])
+            entry[1] += len(idx)
+    for key, (states, rows) in acc.items():
+        yield key, (tuple(fam.serialize(s) for fam, s in zip(fams, states)),
+                    rows)
 
-    sc = spark.sparkContext
-    n_parts = len(splits)
-    rdd = sc.parallelize(list(enumerate(splits)), n_parts)
 
+def _plan(sc, path, partition_filter=None):
+    """``(splits, n_tasks, n_reduce)`` for a parquet path or file list.
+
+    * An under-parallel input (fewer splits than cores, e.g. one ~150MB
+      file) is re-planned at row-group granularity, so every row group is
+      its own task instead of 1-2 byte-binned splits (measured 4.5 s ->
+      ~1 s on a 10M-row single-file table at sf10).
+    * One wave of ``min(splits, cores)`` tasks, not two: every (task, key)
+      state is serialized, shuffled and re-merged, so more tasks cost more
+      partial states plus scheduling — measured 0.9 s -> 0.63 s for the
+      map stage at 80 splits / 32 cores. Splits are size-binned, so one
+      wave stays balanced.
+    * Reduce width: every reduce partition is a Python-worker round trip;
+      with key counts far below the partition count most trips carry
+      almost nothing (measured 1.6 s -> 1.3 s going 64 -> 16 at 465
+      keys). Half the cores locally, capped at 64 on big clusters."""
+    cpus = sc.defaultParallelism
+    splits = plan_splits(path, partition_filter=partition_filter)
+    if 0 < len(splits) < cpus:
+        splits = plan_splits(path, 1, partition_filter)
+    return (splits, max(1, min(len(splits), cpus)),
+            max(4, min(64, max(cpus // 2, 4), len(splits))))
+
+
+def _scan(spark, path, keys, specs, derived=None, partition_filter=None):
+    """The parquet split-list adapter: ``(rdd, splits, part_keys,
+    n_reduce)`` where ``rdd`` runs ``split_states`` over each task's
+    splits, so states accumulate per task, not per split. Group keys
+    naming Hive/Iceberg partition columns come from the path."""
+    derived = derived or {}
+    splits, n_tasks, n_red = _plan(spark.sparkContext, path, partition_filter)
+    part_cols = (set(partition_values(splits[0][0], path))
+                 if splits and isinstance(path, str) else set())
+    part_keys = {k for k in keys if k in part_cols and k not in derived}
+    read_cols = sorted({*[_value_source(c) for c, _ in specs.values()],
+                        *[k for k in keys
+                          if k not in derived and k not in part_keys],
+                        *[src for (_, src) in derived.values()]})
+    items = [(f, rgs, partition_values(f, path) if part_keys else None)
+             for f, rgs in splits]
     keys_t = tuple(keys)
 
-    def run_split(it):
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq  # noqa: F811
+    def run_task(it):
+        import pyarrow.parquet as pq
 
-        for pid, (f, rgs) in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols, use_threads=False)
-            tbl = tbl.combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            acc: dict = {}
-            rows: dict = {}
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
-                karrs = _derive_key_arrays(tbl, keys_t, derived)
-                groups = arrow_group_indices(karrs)
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-            for k, s in acc.items():
-                yield (*k, family.serialize(s), rows[k], pid)
+        tables = ((pq.ParquetFile(f).read_row_groups(
+                      rgs, columns=read_cols, use_threads=False)
+                   .combine_chunks(), pv) for f, rgs, pv in it)
+        return split_states(tables, keys_t, specs, derived)
 
-    return spark.createDataFrame(rdd.mapPartitions(run_split), out_schema)
+    rdd = spark.sparkContext.parallelize(items, n_tasks).mapPartitions(run_task)
+    return rdd, splits, part_keys, n_red
 
 
-def sketch_partial_filescan(spark, files, keys, col, family,
-                            key_fields: list[StructField],
-                            target_split_bytes: int = 96 << 20) -> DataFrame:
-    """Stage-1 partials over an explicit parquet FILE LIST — the leaf-scan
-    short circuit behind ``operators.agg.sketch_partial``: when a
-    DataFrame is provably a plain column projection of a parquet scan,
-    the partial stage reads the files directly in the RDD runner (no
-    JVM->Python Arrow handoff of every row) and returns the SAME
-    ``keys + (sketch, rows_seen, partition_id)`` DataFrame the
-    ``mapInArrow`` path produces, so merge/result compose unchanged.
-    Splits are row-group-aligned and binned into one wave of ``cpus``
-    tasks; states accumulate across a task's splits, so partial-state
-    volume matches the task count, not the split count."""
-    sc = spark.sparkContext
-    splits = plan_splits(files, target_split_bytes)
-    if 0 < len(splits) < sc.defaultParallelism:
-        # under-parallel input: re-plan at row-group granularity so a
-        # 2-row-group table uses 2 tasks instead of 1 (the bin packing
-        # targets bytes, not cores)
-        splits = plan_splits(files, 1)
+def split_partials(spark, files, keys, specs, key_fields) -> DataFrame:
+    """Stage-1 partials over an explicit parquet file list — the leaf-scan
+    short circuit behind ``operators.agg.sketch_partial``: the SAME
+    ``keys + (one blob per spec, rows_seen, partition_id)`` frame the
+    ``mapInArrow`` adapter produces, so merge/result compose unchanged;
+    ``partition_id`` is the Spark task partition id."""
+    rdd = _scan(spark, files, keys, specs)[0]
     out_schema = StructType(list(key_fields) + [
-        StructField(SKETCH_COL, BinaryType()),
+        StructField(n, BinaryType()) for n in specs] + [
         StructField(ROWS_COL, LongType()),
-        StructField(PARTITION_COL, IntegerType()),
-    ])
-    if not splits:
-        return spark.createDataFrame([], out_schema)
-    read_cols = sorted({col, *keys})
-    keys_t = tuple(keys)
-    cpus = sc.defaultParallelism
-    n_tasks = max(1, min(len(splits), cpus))
-    rdd = sc.parallelize(splits, n_tasks)
-
-    def run_task(it):
-        import pyarrow.parquet as pq  # noqa: F811
-        from pyspark import TaskContext
-
-        from zetasketch_spark.operators.grouping import arrow_group_indices
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols,
-                                     use_threads=False).combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            if keys_t:
-                groups = arrow_group_indices({k: tbl[k] for k in keys_t})
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        for k, s in acc.items():
-            yield (*k, family.serialize(s), rows[k], pid)
-
-    return spark.createDataFrame(rdd.mapPartitions(run_task), out_schema)
+        StructField(PARTITION_COL, IntegerType())])
+    return spark.createDataFrame(rdd.mapPartitionsWithIndex(
+        lambda pid, it: ((*k, *blobs, rows, pid) for k, (blobs, rows) in it)),
+        out_schema)
 
 
-def sketch_agg_filescan(spark, files, keys, col, family,
-                        key_fields: list[StructField],
-                        target_split_bytes: int = 96 << 20) -> DataFrame:
-    """Full partial->merge->result over an explicit parquet file list,
-    entirely in the RDD runner — the fused twin of
-    ``sketch_partial_filescan`` for ``sketch_agg(keep_sketch=False)``:
-    the SQL-layer exchange + applyInPandas merge crossing cost ~1.7 s of
-    a 2 s query at sf1 while the actual kernel work was ~0.3 s; here only
-    serialized states cross the reduceByKey shuffle and the result rows
-    materialize straight from the reducer."""
-    sc = spark.sparkContext
-    splits = plan_splits(files, target_split_bytes)
-    fields = list(key_fields) + [StructField(ROWS_COL, LongType())] + [
-        StructField(n, _parse_dt(t)) for n, t in family.result_fields]
-    schema = StructType(fields)
-    if not splits:
-        return spark.createDataFrame([], schema)
-    if len(splits) < sc.defaultParallelism:
-        splits = plan_splits(files, 1)
-    read_cols = sorted({col, *keys})
-    keys_t = tuple(keys)
-    cpus = sc.defaultParallelism
-    n_tasks = max(1, min(len(splits), cpus))
-    rdd = sc.parallelize(splits, n_tasks)
-
-    def run_task(it):
-        import pyarrow.parquet as pq  # noqa: F811
-
-        from zetasketch_spark.operators.grouping import arrow_group_indices
-
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols,
-                                     use_threads=False).combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            if keys_t:
-                groups = arrow_group_indices({k: tbl[k] for k in keys_t})
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        for k, s in acc.items():
-            yield (k, (family.serialize(s), rows[k]))
+def fold_splits(spark, path, keys, specs, derived=None, partition_filter=None,
+                key_fields=None, prefixed=True,
+                keep_sketch=False) -> DataFrame:
+    """Scan + ``reduceByKey`` fold + result rows, entirely in the RDD
+    runner: ``keys + (rows_seen, result fields per spec)``. Result columns
+    are ``<spec>_<field>`` when ``prefixed``; ``keep_sketch`` appends each
+    spec's merged blob under the spec name. ``key_fields`` (from a
+    DataFrame schema) override the types planned from the footers."""
+    derived = derived or {}
+    rdd, splits, part_keys, n_red = _scan(spark, path, keys, specs, derived,
+                                          partition_filter)
+    if key_fields is None:
+        key_fields = [StructField(k, _parse_datatype_string(t)) for k, t in
+                      zip(keys, _plan_key_types(splits, keys, derived,
+                                                part_keys))]
+    key_types = [f.dataType.simpleString() for f in key_fields]
+    fams = [fam for _, fam in specs.values()]
+    fields = list(key_fields) + [StructField(ROWS_COL, LongType())]
+    for n, fam in zip(specs, fams):
+        fields += [StructField(f"{n}_{fn}" if prefixed else fn,
+                               _parse_datatype_string(t))
+                   for fn, t in fam.result_fields]
+    if keep_sketch:
+        fields += [StructField(n, BinaryType()) for n in specs]
 
     def merge_pair(a, b):
-        return (family.serialize(family.merge(family.deserialize(a[0]),
-                                              family.deserialize(b[0]))),
+        return (tuple(fam.serialize(fam.merge(fam.deserialize(x),
+                                              fam.deserialize(y)))
+                      for fam, x, y in zip(fams, a[0], b[0])),
                 a[1] + b[1])
 
-    n_red = max(4, min(64, max(cpus // 2, 4), len(splits)))
-    merged = rdd.mapPartitions(run_task).reduceByKey(
-        merge_pair, numPartitions=n_red)
-
     def to_row(kv):
-        key, (blob, rows_seen) = kv
-        rec = [v.item() if isinstance(v, np.generic) else v for v in key]
+        key, (blobs, rows_seen) = kv
+        rec = [_coerce_key(v, t) for v, t in zip(key, key_types)]
         rec.append(int(rows_seen))
-        rec += [x.item() if isinstance(x, np.generic) else x
-                for x in family.result(family.deserialize(blob))]
+        for fam, blob in zip(fams, blobs):
+            rec += [x.item() if isinstance(x, np.generic) else x
+                    for x in fam.result(fam.deserialize(blob))]
+        if keep_sketch:
+            rec += blobs
         return tuple(rec)
 
-    return spark.createDataFrame(merged.map(to_row), schema)
+    # result extraction stays distributed: no driver collect, so a
+    # high-cardinality group key is as safe here as in the DataFrame path
+    merged = rdd.reduceByKey(merge_pair, numPartitions=n_red)
+    return spark.createDataFrame(merged.map(to_row), StructType(fields))
 
 
-def _parse_dt(t: str):
-    from pyspark.sql.types import _parse_datatype_string
-
-    return _parse_datatype_string(t)
-
-
-def sketch_agg_fastscan(spark, path, keys, col, family,
-                        derived_keys=None, tree_levels: int = 1,
-                        target_split_bytes: int = 96 << 20,
-                        keep_sketch: bool = False) -> DataFrame:
-    partials = sketch_partial_fastscan(
-        spark, path, keys, col, family, derived_keys=derived_keys,
-        target_split_bytes=target_split_bytes)
-    merged = sketch_merge(partials, keys, family, tree_levels=tree_levels)
-    return sketch_result(merged, family, keep_sketch=keep_sketch)
-
-
-def sketch_agg_rdd(spark, path, keys, col, family,
-                   derived_keys=None, target_split_bytes: int = 96 << 20,
-                   reduce_partitions: int | None = None,
+def sketch_agg_rdd(spark, path, keys, col, family, derived_keys=None,
                    keep_sketch: bool = False,
                    partition_filter: dict | None = None):
     """Flagship execution fabric: parquet-split scan + ``reduceByKey`` tree
-    merge, entirely in the RDD runner.
+    merge, entirely in the RDD runner — ``multi_sketch_agg_rdd`` with one
+    spec and unprefixed result names.
 
     Measured on this sandbox, Spark's SQL Arrow runner adds a ~2-3 s
     constant per data-bearing Python stage (independent of bytes, cores,
@@ -497,121 +410,20 @@ def sketch_agg_rdd(spark, path, keys, col, family,
     process boundaries. State equality with the DataFrame path is
     asserted in tests (same cores, same bytes, same estimates).
 
-    Returns a Spark DataFrame of ``keys + (rows_seen, estimate fields)``.
+    Returns a Spark DataFrame of ``keys + (rows_seen, estimate fields)``
+    (``+ sketch`` with ``keep_sketch``).
 
     Partitioned (Hive/Iceberg ``key=value`` directory) layouts are read
     natively: ``partition_filter`` prunes whole files at planning time
     (zero I/O), and group keys naming partition columns are materialized
     from the path instead of the file.
     """
-    derived = derived_keys or {}
-    splits = plan_splits(path, target_split_bytes, partition_filter)
-    if 0 < len(splits) < spark.sparkContext.defaultParallelism:
-        # under-parallel input (e.g. one ~150MB file): re-plan at
-        # row-group granularity so every row group is its own task
-        # instead of 1-2 byte-binned splits (measured 4.5 s -> ~1 s on a
-        # 10M-row single-file table at sf10)
-        splits = plan_splits(path, 1, partition_filter)
-    part_cols = set(partition_values(splits[0][0], path)) if splits else set()
-    part_keys = {k for k in keys if k in part_cols and k not in derived}
-    read_cols = sorted({_value_source(col),
-                        *[k for k in keys
-                          if k not in derived and k not in part_keys],
-                        *[src for (_, src) in derived.values()]})
-    sc = spark.sparkContext
-    # several splits per task: one accumulated state per (task, key) crosses
-    # the boundary instead of one per (split, key) — partial-state volume
-    # shrinks by the splits-per-task factor
-    cpus = sc.defaultParallelism
-    # one wave of cpus tasks, not two: more tasks means more per-task
-    # partial states (every (task, key) state is serialized, shuffled and
-    # re-merged) plus scheduling overhead — measured 0.9 s -> 0.63 s for
-    # the map stage at 80 splits / 32 cores. Splits are size-binned, so
-    # one wave stays balanced; huge inputs still get len(splits) >> cpus
-    # rebalancing via the size-capped splits themselves.
-    n_tasks = max(1, min(len(splits), cpus))
-    items = [(f, rgs, partition_values(f, path) if part_keys else None)
-             for f, rgs in splits]
-    rdd = sc.parallelize(items, n_tasks)
-    keys_t = tuple(keys)
-
-    def run_split(it):
-        import pyarrow as pa
-        import pyarrow.parquet as pq  # noqa: F811
-
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs, pv in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols, use_threads=False)
-            tbl = tbl.combine_chunks()
-            prepared = family.prepare_arrow(_derive_value_array(tbl, col))
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
-                karrs = _derive_key_arrays(tbl, keys_t, derived, pv)
-                groups = arrow_group_indices(karrs)
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_prepared(state, prepared[idx])
-                rows[key] += len(idx)
-        for key, state in acc.items():
-            yield (key, (family.serialize(state), rows[key]))
-
-    def merge_pair(a, b):
-        sa = family.deserialize(a[0])
-        sb = family.deserialize(b[0])
-        return (family.serialize(family.merge(sa, sb)), a[1] + b[1])
-
-    # reduce-side width: every reduce partition is a Python-worker round
-    # trip; with key counts far below the partition count most trips carry
-    # almost nothing (measured 1.6 s -> 1.3 s going 64 -> 16 at 465 keys).
-    # Scale-adaptive: half the cores locally, capped at 64 on big clusters
-    # (callers with known huge key cardinality pass reduce_partitions).
-    n_red = reduce_partitions or max(4, min(64, max(cpus // 2, 4), len(splits)))
-    merged = rdd.mapPartitions(run_split).reduceByKey(merge_pair, numPartitions=n_red)
-
-    # estimate extraction stays distributed: map over the merged states and
-    # build the DataFrame from the RDD with an explicit schema — no driver
-    # collect, so a high-cardinality group key is as safe here as in the
-    # DataFrame path (the old collect() shortcut capped this fabric at
-    # driver-memory group counts).
-    from pyspark.sql.types import _parse_datatype_string
-
-    key_types = _plan_key_types(splits, keys, derived, part_keys)
-    fields = [StructField(k, _parse_datatype_string(t))
-              for k, t in zip(keys, key_types)]
-    fields.append(StructField(ROWS_COL, LongType()))
-    fields += [StructField(n, _parse_datatype_string(t))
-               for n, t in family.result_fields]
-    if keep_sketch:
-        fields.append(StructField(SKETCH_COL, BinaryType()))
-
-    def to_row(kv):
-        key, (blob, rows_seen) = kv
-        rec = [_coerce_key(v, t) for v, t in zip(key, key_types)]
-        rec.append(int(rows_seen))
-        rec += [x.item() if isinstance(x, np.generic) else x
-                for x in family.result(family.deserialize(blob))]
-        if keep_sketch:
-            rec.append(blob)
-        return tuple(rec)
-
-    return spark.createDataFrame(merged.map(to_row), StructType(fields))
+    return fold_splits(spark, path, keys, {SKETCH_COL: (col, family)},
+                       derived_keys, partition_filter, prefixed=False,
+                       keep_sketch=keep_sketch)
 
 
-def multi_sketch_agg_rdd(spark, path, keys, specs,
-                         derived_keys=None,
-                         target_split_bytes: int = 96 << 20,
-                         reduce_partitions: int | None = None,
+def multi_sketch_agg_rdd(spark, path, keys, specs, derived_keys=None,
                          partition_filter: dict | None = None):
     """One parquet scan, many sketches, on the flagship RDD fabric.
 
@@ -630,104 +442,5 @@ def multi_sketch_agg_rdd(spark, path, keys, specs,
     boundary. State equality with per-family ``sketch_agg_rdd`` runs is
     asserted in tests (same splits, same batches, same estimates).
     """
-    derived = derived_keys or {}
-    names = list(specs)
-    splits = plan_splits(path, target_split_bytes, partition_filter)
-    if 0 < len(splits) < spark.sparkContext.defaultParallelism:
-        # under-parallel input (e.g. one ~150MB file): re-plan at
-        # row-group granularity so every row group is its own task
-        # instead of 1-2 byte-binned splits (measured 4.5 s -> ~1 s on a
-        # 10M-row single-file table at sf10)
-        splits = plan_splits(path, 1, partition_filter)
-    part_cols = set(partition_values(splits[0][0], path)) if splits else set()
-    part_keys = {k for k in keys if k in part_cols and k not in derived}
-    read_cols = sorted({*[_value_source(c) for c, _ in specs.values()],
-                        *[k for k in keys
-                          if k not in derived and k not in part_keys],
-                        *[src for (_, src) in derived.values()]})
-    sc = spark.sparkContext
-    cpus = sc.defaultParallelism
-    # one wave of cpus tasks, not two: more tasks means more per-task
-    # partial states (every (task, key) state is serialized, shuffled and
-    # re-merged) plus scheduling overhead — measured 0.9 s -> 0.63 s for
-    # the map stage at 80 splits / 32 cores. Splits are size-binned, so
-    # one wave stays balanced; huge inputs still get len(splits) >> cpus
-    # rebalancing via the size-capped splits themselves.
-    n_tasks = max(1, min(len(splits), cpus))
-    items = [(f, rgs, partition_values(f, path) if part_keys else None)
-             for f, rgs in splits]
-    rdd = sc.parallelize(items, n_tasks)
-    keys_t = tuple(keys)
-
-    def run_split(it):
-        import pyarrow as pa
-        import pyarrow.parquet as pq  # noqa: F811
-
-        acc: dict = {}
-        rows: dict = {}
-        for f, rgs, pv in it:
-            pf = pq.ParquetFile(f)
-            tbl = pf.read_row_groups(rgs, columns=read_cols, use_threads=False)
-            tbl = tbl.combine_chunks()
-            prepared = {n: fam.prepare_arrow(_derive_value_array(tbl, c))
-                        for n, (c, fam) in specs.items()}
-            if keys_t:
-                from zetasketch_spark.operators.grouping import \
-                    arrow_group_indices
-                karrs = _derive_key_arrays(tbl, keys_t, derived, pv)
-                groups = arrow_group_indices(karrs)
-            else:
-                groups = {(): np.arange(tbl.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                states = acc.get(key)
-                if states is None:
-                    states = {n: specs[n][1].make() for n in names}
-                    acc[key] = states
-                    rows[key] = 0
-                for n in names:
-                    specs[n][1].update_prepared(states[n], prepared[n][idx])
-                rows[key] += len(idx)
-        for key, states in acc.items():
-            yield (key, (tuple(specs[n][1].serialize(states[n])
-                               for n in names), rows[key]))
-
-    def merge_pair(a, b):
-        blobs = tuple(
-            specs[n][1].serialize(
-                specs[n][1].merge(specs[n][1].deserialize(ba),
-                                  specs[n][1].deserialize(bb)))
-            for n, ba, bb in zip(names, a[0], b[0]))
-        return (blobs, a[1] + b[1])
-
-    # reduce-side width: every reduce partition is a Python-worker round
-    # trip; with key counts far below the partition count most trips carry
-    # almost nothing (measured 1.6 s -> 1.3 s going 64 -> 16 at 465 keys).
-    # Scale-adaptive: half the cores locally, capped at 64 on big clusters
-    # (callers with known huge key cardinality pass reduce_partitions).
-    n_red = reduce_partitions or max(4, min(64, max(cpus // 2, 4), len(splits)))
-    merged = rdd.mapPartitions(run_split).reduceByKey(
-        merge_pair, numPartitions=n_red)
-
-    from pyspark.sql.types import _parse_datatype_string
-
-    key_types = _plan_key_types(splits, keys, derived, part_keys)
-    fields = [StructField(k, _parse_datatype_string(t))
-              for k, t in zip(keys, key_types)]
-    fields.append(StructField(ROWS_COL, LongType()))
-    for n in names:
-        fields += [StructField(f"{n}_{fn}", _parse_datatype_string(t))
-                   for fn, t in specs[n][1].result_fields]
-
-    def to_row(kv):
-        key, (blobs, rows_seen) = kv
-        rec = [_coerce_key(v, t) for v, t in zip(key, key_types)]
-        rec.append(int(rows_seen))
-        for n, blob in zip(names, blobs):
-            fam = specs[n][1]
-            rec += [x.item() if isinstance(x, np.generic) else x
-                    for x in fam.result(fam.deserialize(blob))]
-        return tuple(rec)
-
-    return spark.createDataFrame(merged.map(to_row), StructType(fields))
+    return fold_splits(spark, path, keys, specs, derived_keys,
+                       partition_filter)

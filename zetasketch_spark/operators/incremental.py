@@ -68,6 +68,7 @@ import os
 import re
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
@@ -423,7 +424,10 @@ class SketchTable:
             # 'overwrite' targets only our freshly reserved, empty dir
             merged.select(*self.keys, SKETCH_COL, ROWS_COL) \
                   .write.mode("overwrite").parquet(vpath)
-            n_keys = spark.read.parquet(vpath).count()
+            # the written files' footers hold the row count: no read job
+            n_keys = sum(pq.read_metadata(os.path.join(vpath, f)).num_rows
+                         for f in os.listdir(vpath)
+                         if f.endswith(".parquet") and f[0] not in "._")
         except Exception:
             # the lazy read of the prior snapshot executes inside the
             # write job above; if a concurrent vacuum collected our base
@@ -664,17 +668,27 @@ def update_tables(spark: SparkSession, delta: DataFrame,
     # delta each partial state is actually derived from
     for t in tables.values():
         t._check_value_domain(delta)
+    # scan only for the tables that have not applied this fingerprint: a
+    # redelivered delta runs no Spark job at all. The others get the raw
+    # delta, and update() re-checks the fingerprint under its own logic,
+    # so exactly-once per table holds even if a table moved meanwhile.
+    pending = {name: spec for name, spec in specs.items()
+               if fingerprint is None
+               or fingerprint not in tables[name].applied_fingerprints()}
     # one scan; the result is O(partitions × keys) serialized states —
     # pin it so each table's fold reuses the frame instead of rescanning
-    parts = multi_sketch_partial(delta, keys, specs).localCheckpoint(
-        eager=True)
+    parts = (multi_sketch_partial(delta, keys, pending).localCheckpoint(
+        eager=True) if pending else None)
     out = {}
     for name, t in tables.items():
-        p = parts.select(*keys, F.col(name).alias(SKETCH_COL),
-                         ROWS_COL, PARTITION_COL)
+        if name in pending:
+            p = parts.select(*keys, F.col(name).alias(SKETCH_COL),
+                             ROWS_COL, PARTITION_COL)
+        else:
+            p = delta
         out[name] = t.update(spark, p, fingerprint=fingerprint,
                              tree_levels=tree_levels,
-                             delta_is_partials=True)
+                             delta_is_partials=name in pending)
     return out
 
 

@@ -3,129 +3,37 @@
 At 100 TB the scan dominates, so computing HLL distinct + KLL quantiles +
 Count-Min heavy hitters (possibly over different columns) in ONE pass over
 the table beats running three jobs. Same treeAggregate shape as
-``operators.agg`` but the per-(partition, key) state is a tuple of sketch
-states, each updated from its own prepared column per Arrow batch.
+``operators.agg`` — single-family aggregation is the one-spec case of this
+module: the per-(partition, key) state is a tuple of sketch states, each
+updated from its own column prepared once per Arrow batch by the one
+split kernel (``fastscan.split_states``, through ``agg.arrow_partials``).
 
 Output: ``keys..., <name> binary per spec, rows_seen, partition_id`` after
-the partial stage; merged + result columns after the full pipeline.
+the partial stage; ``keys..., rows_seen, <name>_<field>...`` after the
+full pipeline.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
-from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StructField, StructType)
 
-from zetasketch_spark.operators.agg import PARTITION_COL, ROWS_COL, _key_fields
+from zetasketch_spark.operators.agg import arrow_partials, merge_result
 from zetasketch_spark.sketches.base import SketchFamily
 
 
 def multi_sketch_partial(df: DataFrame, keys: list[str],
                          specs: dict[str, tuple[str, SketchFamily]]) -> DataFrame:
     """Stage 1. ``specs``: {output_name: (value_col, family)}. Families
-    with a vectorized Arrow kernel (supports_arrow) hash the batch once;
-    the rest go through the generic per-batch pandas fallback
-    (`sketches/base.py::_SeriesPrepared`) — state-equal to the pandas
-    fabric, just not zero-copy."""
-    names = list(specs)
-    cols = sorted({c for c, _ in specs.values()})
-    out_schema = StructType(
-        _key_fields(df, keys)
-        + [StructField(n, BinaryType()) for n in names]
-        + [StructField(ROWS_COL, LongType()),
-           StructField(PARTITION_COL, IntegerType())]
-    )
-    keys_t = tuple(keys)
-
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        acc: dict = {}
-        rows: dict = {}
-        for batch in batches:
-            prepared = {}
-            for name, (col, fam) in specs.items():
-                val = batch.column(batch.schema.get_field_index(col))
-                prepared[name] = fam.prepare_arrow(val)
-            if keys_t:
-                kpdf = pa.Table.from_batches([batch]).select(list(keys_t)).to_pandas()
-                groups = kpdf.groupby(list(keys_t), sort=False, dropna=False).indices
-            else:
-                groups = {(): np.arange(batch.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                states = acc.get(key)
-                if states is None:
-                    states = {n: specs[n][1].make() for n in names}
-                    acc[key] = states
-                    rows[key] = 0
-                for n in names:
-                    specs[n][1].update_prepared(states[n], prepared[n][idx])
-                rows[key] += len(idx)
-        if acc:
-            out = pd.DataFrame(
-                [[*k, *[specs[n][1].serialize(s[n]) for n in names], rows[k], pid]
-                 for k, s in acc.items()],
-                columns=[*keys_t, *names, ROWS_COL, PARTITION_COL],
-            )
-            yield pa.RecordBatch.from_pandas(
-                out, schema=to_arrow_schema(out_schema), preserve_index=False)
-
-    # backtick-quote names so a dot in a JSON-ingested column name is
-    # never parsed as a nested-field path
-    def _ref(name):
-        return F.col("`" + name.replace("`", "``") + "`")
-
-    return df.select(*[_ref(k) for k in keys],
-                     *[_ref(c) for c in cols]).mapInArrow(fn, out_schema)
+    with a vectorized Arrow kernel hash the batch once; the rest go
+    through the generic per-batch pandas fallback
+    (`sketches/base.py::_SeriesPrepared`) — state-equal to a pandas
+    ``family.update`` fold, just not zero-copy."""
+    return arrow_partials(df, keys, specs)
 
 
 def multi_sketch_agg(df: DataFrame, keys: list[str],
                      specs: dict[str, tuple[str, SketchFamily]]) -> DataFrame:
     """Full pipeline. Result columns are prefixed by the spec name, e.g.
-    spec 'users' with an HLL family yields ``users_estimate``."""
-    names = list(specs)
-    partials = multi_sketch_partial(df, keys, specs)
-
-    merged_schema = StructType(
-        [f for f in partials.schema.fields if f.name in keys]
-        + [StructField(n, BinaryType()) for n in names]
-        + [StructField(ROWS_COL, LongType())]
-    )
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        blobs = [specs[n][1].merge_serialized(pdf[n]) for n in names]
-        head = [pdf.iloc[0][k] for k in keys]
-        return pd.DataFrame([[*head, *blobs, int(pdf[ROWS_COL].sum())]],
-                            columns=[*keys, *names, ROWS_COL])
-
-    merged = partials.groupBy(*keys).applyInPandas(merge_fn, merged_schema)
-
-    out = merged
-    for n in names:
-        fam = specs[n][1]
-        fields = fam.result_fields
-        struct_t = ", ".join(f"`{fn_}` {t}" for fn_, t in fields)
-
-        from pyspark.sql.functions import pandas_udf
-
-        def make_extract(fam=fam, fields=fields, struct_t=struct_t):
-            @pandas_udf(f"struct<{struct_t}>")
-            def extract(blobs: pd.Series) -> pd.DataFrame:
-                rows = [fam.result(fam.deserialize(bytes(b))) for b in blobs]
-                return pd.DataFrame(rows, columns=[f for f, _ in fields])
-            return extract
-
-        out = out.withColumn(f"_{n}", make_extract()(F.col(n)))
-        for fn_, _ in fields:
-            out = out.withColumn(f"{n}_{fn_}", F.col(f"_{n}.{fn_}"))
-        out = out.drop(f"_{n}", n)
-    return out
+    spec 'users' with an HLL family yields ``users_estimate``; the merge
+    emits them directly (one fused ``applyInPandas``)."""
+    return merge_result(multi_sketch_partial(df, keys, specs), keys, specs)

@@ -66,9 +66,6 @@ class SketchFamily:
     name: str = "abstract"
     #: (column name, spark sql type string) of result() output
     result_fields: list[tuple[str, str]] = [("estimate", "bigint")]
-    #: families that implement prepare_arrow/update_prepared get the
-    #: zero-copy mapInArrow partial stage (no pandas object conversion)
-    supports_arrow: bool = False
 
     def prepare_arrow(self, arr) -> Any:
         """Vectorize the whole Arrow column once per batch (e.g. hash it);
@@ -78,7 +75,7 @@ class SketchFamily:
         Default: materialize the column as ONE pandas Series per batch
         and slice it per group — state-equal to the pandas fabric by
         construction (update_prepared routes to update()). Families with
-        a vectorized hash kernel override both (supports_arrow = True)."""
+        a vectorized hash kernel override both."""
         return _SeriesPrepared(arr.to_pandas())
 
     def update_prepared(self, state: Any, prepared_slice: Any) -> Any:
@@ -140,7 +137,6 @@ class HllFamily(SketchFamily):
 
     name = "hll"
     result_fields = [("estimate", "bigint")]
-    supports_arrow = True
 
     def __init__(self, precision: int = 15, sparse_precision: int | None = None,
                  no_sparse: bool = False, value_type: str | None = None):

@@ -168,7 +168,6 @@ class BloomFamily(SketchFamily):
     name = "bloom"
     result_fields = [("n_added", "bigint"), ("bits_set", "bigint"),
                      ("expected_fpr", "double")]
-    supports_arrow = True
 
     def __init__(self, m: int = 1 << 20, k: int = 7,
                  value_type: str | None = None):

@@ -239,7 +239,6 @@ class DDSketchFamily(SketchFamily):
     """Relative-error quantiles through the shared aggregation harness."""
 
     name = "ddsketch"
-    supports_arrow = True
 
     def __init__(self, alpha: float = 0.01, max_buckets: int = 2048,
                  quantiles: tuple = (0.5, 0.9, 0.99)):

@@ -411,7 +411,6 @@ class FreqDirsFamily(SketchFamily):
     result_fields = [("n", "bigint"), ("dim", "int"),
                      ("err_certificate", "double"),
                      ("err_bound", "double")]
-    supports_arrow = True  # list<float> consumed straight from buffers
 
     def __init__(self, ell: int = 32):
         self.ell = int(ell)

@@ -203,7 +203,6 @@ def _prepare_float_arrow(arr):
 
 class KllFamily(SketchFamily):
     name = "kll"
-    supports_arrow = True
 
     def __init__(self, k: int = 200, quantiles: tuple = (0.1, 0.5, 0.9, 0.99)):
         from zetasketch_spark.sketches.base import quantile_result_fields

@@ -151,7 +151,6 @@ class TDigest:
 
 class TDigestFamily(SketchFamily):
     name = "tdigest"
-    supports_arrow = True
 
     def __init__(self, delta: float = 200.0, quantiles: tuple = (0.1, 0.5, 0.9, 0.99)):
         from zetasketch_spark.sketches.base import quantile_result_fields

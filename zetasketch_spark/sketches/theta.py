@@ -229,7 +229,6 @@ class ThetaSketch:
 class ThetaFamily(SketchFamily):
     name = "theta"
     result_fields = [("estimate", "bigint")]
-    supports_arrow = True
 
     def __init__(self, k: int = 4096):
         self.k = k
