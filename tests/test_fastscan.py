@@ -361,11 +361,9 @@ def test_generic_prepare_path_states_equal_pandas_fold(spark, tmp_path, name):
     string, a nullable bigint and a date value column. The mapInArrow
     frame is a filter, not a shuffle, so rows keep their order.
 
-    Count-Min lists its heavy-hitter candidates in the order its batches
-    brought them, so its bytes are compared where every fabric sees the
-    table as one batch (one row group); CountSketch's bytes do not depend
-    on batching and are compared over six row groups, i.e. six splits
-    merged by the fold."""
+    Neither family's bytes depend on batching (Count-Min serializes its
+    candidates in key order and never prunes here), so both are compared
+    over six row groups, i.e. six splits merged by the fold."""
     import datetime as dt
 
     import pyarrow as pa
@@ -377,9 +375,8 @@ def test_generic_prepare_path_states_equal_pandas_fold(spark, tmp_path, name):
     from zetasketch_spark.sketches.countmin import CountMinFamily
     from zetasketch_spark.sketches.countsketch import CountSketchFamily
 
-    fam, row_group = {"countmin": (CountMinFamily(width=256, depth=4), None),
-                      "countsketch": (CountSketchFamily(width=256, depth=4),
-                                      500)}[name]
+    fam = {"countmin": CountMinFamily(width=256, depth=4),
+           "countsketch": CountSketchFamily(width=256, depth=4)}[name]
     n = 3000
     tbl = pa.table({
         "g": [f"g{i % 3}" for i in range(n)],
@@ -391,7 +388,7 @@ def test_generic_prepare_path_states_equal_pandas_fold(spark, tmp_path, name):
     })
     path = tmp_path / "t"
     path.mkdir()
-    pq.write_table(tbl, str(path / "part-0.parquet"), row_group_size=row_group)
+    pq.write_table(tbl, str(path / "part-0.parquet"), row_group_size=500)
     pdf = tbl.to_pandas()
     plain = spark.read.parquet(str(path))
     for col in ("s", "b", "d"):
@@ -407,3 +404,48 @@ def test_generic_prepare_path_states_equal_pandas_fold(spark, tmp_path, name):
             got = {r["g"]: bytes(r[SKETCH_COL]) for r in sketch_merge(
                 sketch_partial(df, ["g"], col, fam), ["g"], fam).collect()}
             assert got == ref, col
+
+
+@pytest.mark.parametrize("ts_type", ["INT96", "TIMESTAMP_MICROS"])
+def test_timestamp_group_keys_keep_utc_instant(spark, tmp_path, ts_type):
+    """Spark writes timestamps as INT96 by default, which pyarrow decodes
+    as ``timestamp[ns]`` (pandas ``Timestamp`` keys), or as
+    ``timestamp[us, tz=UTC]``. The split-list fold and the leaf-scan
+    partials must hand Spark the same UTC instants, as timestamps, that
+    its own ``groupBy`` sees, under a session time zone that is not
+    UTC."""
+    from zetasketch_spark.operators.agg import (
+        SKETCH_COL, sketch_agg, sketch_merge, sketch_partial)
+    from zetasketch_spark.operators.fastscan import sketch_agg_rdd
+    from zetasketch_spark.sketches.base import HllFamily
+
+    path = str(tmp_path / "t")
+    conf = spark.conf
+    old_tz = conf.get("spark.sql.session.timeZone")
+    old_ts = conf.get("spark.sql.parquet.outputTimestampType")
+    conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    conf.set("spark.sql.parquet.outputTimestampType", ts_type)
+    try:
+        spark.sql("""
+            SELECT TIMESTAMP '2024-03-10 01:30:00' AS ts, 'a' AS v
+            UNION ALL
+            SELECT TIMESTAMP '2024-03-10 03:30:00.123456', 'b'
+        """).coalesce(1).write.parquet(path)
+        df = spark.read.parquet(path)
+        want = {r["ts"]: r["count"] for r in df.groupBy("ts").count().collect()}
+        fam = HllFamily(12)
+        got = {
+            "sketch_agg": sketch_agg(df, ["ts"], "v", fam).collect(),
+            "sketch_agg_rdd": sketch_agg_rdd(spark, path, ["ts"], "v",
+                                             fam).collect(),
+            "sketch_partial": sketch_merge(sketch_partial(df, ["ts"], "v", fam),
+                                           ["ts"], fam).collect(),
+        }
+    finally:
+        conf.set("spark.sql.session.timeZone", old_tz)
+        conf.set("spark.sql.parquet.outputTimestampType", old_ts)
+    assert len(want) == 2
+    for name, rows in got.items():
+        assert {r["ts"] for r in rows} == set(want), name
+    assert all(r["rows_seen"] == want[r["ts"]] for r in got["sketch_agg"])
+    assert all(r[SKETCH_COL] for r in got["sketch_partial"])

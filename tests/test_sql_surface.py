@@ -24,10 +24,10 @@ FAMILIES = {
     "tt": ("timetheta", "64", {"k": 64}, ("s",)),
 }
 # families whose merge is insensitive to the order partials arrive in, so
-# a re-merge of partials is byte-equal to one INIT over all rows (Bloom has
-# no SQL merge)
-MERGE_EXACT = {"hll", "dd", "cs", "theta", "tt"}
-COUNT_FIELD = {"kll": "n", "tdigest": "n", "fd": "n", "cm": "total"}
+# a re-merge of partials is byte-equal to one INIT over all rows (Count-Min
+# while its candidates stay under max_candidates; Bloom has no SQL merge)
+MERGE_EXACT = {"hll", "dd", "cm", "cs", "theta", "tt"}
+COUNT_FIELD = {"kll": "n", "tdigest": "n", "fd": "n"}
 SQL_TYPES = {"s": "string", "b": "bigint", "d": "double"}
 
 
@@ -134,6 +134,20 @@ def test_sql_init_state_equals_family_fold_and_two_level_merge(
                 sketch_partial(spark.table("sql_states_many"), ["g"], c, fam),
                 ["g"], fam).collect()}
             assert pipe == {g: bytes(r[c]) for g, r in one.items()}, c
+
+
+@pytest.mark.parametrize("call, usage", [
+    ("hll_init_agg(id)", r"hll_init_agg\(col, precision, typeof\(col\)\)"),
+    ("cm_init_agg(id, 256, 4, 1)", r"cm_init_agg\(col, width, depth\)"),
+])
+def test_sql_init_wrong_arity_names_usage(spark, call, usage):
+    """A Python UDF has no analysis-time arity, so the INIT checks its
+    argument count in the worker and names its SQL usage."""
+    from zetasketch_spark.functions.sketch_udfs import register_sql
+
+    register_sql(spark)
+    with pytest.raises(Exception, match=r"ValueError: .*usage: " + usage):
+        spark.sql(f"SELECT {call} AS sk FROM range(5)").collect()
 
 
 SQL_NAMES = {

@@ -124,7 +124,7 @@ def theta_churn(old, new, keys: list[str],
         rows = []
         for bo, bn in zip(old_s, new_s):
             # a missing side is the empty set (same rule as the theta
-            # set-op scalars in sketch_udfs._theta_setop_udf)
+            # set-op scalars in sketch_udfs._theta_op)
             so = ThetaSketch.deserialize(bytes(bo)) if bo is not None \
                 else ThetaSketch()
             sn = ThetaSketch.deserialize(bytes(bn)) if bn is not None \

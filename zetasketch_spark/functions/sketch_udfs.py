@@ -2,42 +2,42 @@
 
 ZetaSketch's production surface is BigQuery's ``HLL_COUNT.INIT`` /
 ``HLL_COUNT.MERGE_PARTIAL`` / ``HLL_COUNT.MERGE`` / ``HLL_COUNT.EXTRACT``
-(see the reference README.md:22-27). This module mirrors that surface as
-Spark functions, interoperable byte-for-byte with the engine's sketch
-states (same ``AggregatorStateProto`` wire format):
+(see the reference README.md:22-27), a thin layer over one Aggregator
+contract. Here that contract is ``sketches.base.SketchFamily``, and the
+whole SQL and ``Column`` surface is generated from it by five factories:
 
-* ``hll_init_agg(col, precision)``    — grouped-agg UDF: values -> sketch
-* ``hll_merge_agg(sketch_col)``       — grouped-agg UDF: sketches -> sketch
-* ``hll_estimate(sketch_col)``        — scalar UDF: sketch -> bigint
-* ``register_sql(spark)``             — expose them to ``spark.sql``; the
-  SQL init form is ``hll_init_agg(col, precision, typeof(col))`` (the
-  third argument pins the hash domain from the declared type, exactly
-  like the DataFrame surface). SQL also gets the literal BigQuery
-  spelling — ``hll_count_init`` / ``hll_count_merge_partial`` /
-  ``hll_count_merge`` (merge+extract composite, BIGINT) /
-  ``hll_count_extract`` — so queries port with a dot→underscore rename.
-  Quantile families: ``kll_init_agg``/``kll_quantile``,
-  ``tdigest_init_agg``/``tdigest_quantile`` and ``dd_init_agg(col,
-  alpha)``/``dd_quantile`` (DDSketch — relative-error guarantee), each
-  with a ``*_merge_agg`` for partial→merge rollups. Matrix sketching:
-  ``fd_init_agg(embedding, ell)`` over an ``array<float|double>`` column,
-  ``fd_merge_agg``, ``fd_error_certificate``, and the pairwise
-  ``fd_drift(a, b)``/``fd_drift_bound(a, b)`` embedding-drift scalars.
-  Signed counters: ``cs_init_agg(col, width, depth)``/``cs_merge_agg``
-  (CountSketch), with ``cs_point_est(state, key)`` (unbiased frequency),
-  ``cs_f2(state)`` (AMS second moment) and ``cs_inner_product(a, b)``
-  (unbiased join size with multiplicity). Temporal theta:
-  ``tt_init_agg(key, time_units, k)``/``tt_merge_agg``/``tt_estimate``
-  with ``tt_active_since(state, t)`` / ``tt_new_since(state, t)`` /
-  ``tt_active_sd_since(state, t)`` — trailing-window activity and
-  acquisition distinct counts chosen AFTER aggregation.
+* INIT (``_init_udf``)       — grouped aggregate ``(values, *args)``:
+  the positional SQL arguments bind to the family's constructor, then
+  ``make -> update -> serialize``. States are byte-equal to a driver-side
+  fold of the same rows (``tests/test_sql_surface.py``).
+* MERGE (``_merge_udf``)     — grouped aggregate over states
+  (``SketchFamily.merge_states``): NULL for a group with no state;
+  ``hll_count_merge`` adds the result step (0 with no state).
+* per-state scalar (``_state_udf``), e.g. ``hll_estimate``, ``cs_f2``.
+* (state, arg) extract (``_extract_udf``), e.g. ``kll_quantile``.
+* pairwise scalar (``_pair_udf``): ``fd_drift``, ``cs_inner_product`` and
+  the theta set ops (a null theta side is the empty set).
 
-The grouped-agg form shuffles raw values per group (Catalyst's own
-aggregation path), which is the convenient-but-shuffle-heavy shape; for
-10^12-row inputs use ``zetasketch_spark.operators.agg.sketch_agg`` (partial
-sketches before the shuffle). The two produce byte-identical states —
-asserted in tests — because merge is associative and order-insensitive
-post-compact.
+``register_sql(spark)`` registers, per family prefix ``hll``, ``kll``,
+``tdigest``, ``dd`` (DDSketch), ``cm`` (Count-Min), ``bloom``, ``theta``,
+``fd`` (Frequent Directions over ``array<float|double>``), ``cs``
+(CountSketch) and ``tt`` (temporal theta), a ``<prefix>_init_agg`` and
+(Bloom excepted) a ``<prefix>_merge_agg``, plus the extractors listed in
+``_PER_STATE`` / ``_BY_STATE`` / ``_PAIRWISE``. The SQL HLL init form is
+``hll_init_agg(col, precision, typeof(col))``: the third argument pins the
+hash domain from the declared type, exactly like the DataFrame surface.
+SQL also gets the literal BigQuery spelling — ``hll_count_init`` /
+``hll_count_merge_partial`` / ``hll_count_merge`` (merge+extract, BIGINT)
+/ ``hll_count_extract`` — so queries port with a dot→underscore rename.
+An INIT called with the wrong number of arguments raises a ``ValueError``
+naming its usage (inside the worker: a Python UDF has no analysis-time
+arity).
+
+SQL INIT ships raw rows to one pandas call per group and has no map-side
+partial. For large inputs build states with
+``zetasketch_spark.operators.agg.sketch_partial`` (partial sketches before
+the shuffle) and merge them with ``*_merge_agg``: merge is associative and
+order-insensitive post-compact, so the two paths give the same bytes.
 
 Usage::
 
@@ -50,6 +50,8 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql.functions import pandas_udf
+
+from zetasketch_spark.sketches.base import get_family
 
 
 SPARK_TYPE_TO_HASH_DOMAIN = {
@@ -76,233 +78,8 @@ def pin_value_type(family, df, col: str):
     return family
 
 
-def hll_init_agg(col, precision: int = 15, sparse_precision: int | None = None,
-                 value_type: str | None = None):
-    """Grouped-aggregate: build an HLL++ sketch from a value column.
-    Equivalent of BigQuery ``HLL_COUNT.INIT(col, precision)``.
-
-    The hash domain is pinned from the column's DECLARED Spark type
-    (shipped into the UDF via ``typeof()``), never guessed from batch
-    dtypes: Arrow promotes nullable int columns to float64 per batch, so
-    any per-batch heuristic would hash the same column through different
-    recipes in different groups. ``value_type`` ('long' | 'int' |
-    'double' | 'float') overrides the declared type if set."""
-
-    @pandas_udf("binary")
-    def _init(values: pd.Series, typeofs: pd.Series) -> bytes:
-        from zetasketch_spark.hll import HllSketch
-        from zetasketch_spark.sketches.base import HllFamily
-
-        vt = value_type
-        if vt is None and len(typeofs):
-            vt = SPARK_TYPE_TO_HASH_DOMAIN.get(str(typeofs.iloc[0]))
-        fam = HllFamily(precision=precision, sparse_precision=sparse_precision,
-                        value_type=vt)
-        sk = fam.make()
-        fam.update(sk, values)
-        return sk.serialize()
-
-    c = F.col(col) if isinstance(col, str) else col
-    return _init(c, F.call_function("typeof", c))
-
-
-def hll_merge_agg(col):
-    """Grouped-aggregate: merge serialized sketches. Equivalent of BigQuery
-    ``HLL_COUNT.MERGE_PARTIAL``; compose with :func:`hll_estimate` for
-    ``HLL_COUNT.MERGE``. Re-merging fine-grained sketches to coarser
-    grouping levels is exact (sketch rollup property)."""
-
-    @pandas_udf("binary")
-    def _merge(states: pd.Series) -> bytes:
-        from zetasketch_spark.hll import HllSketch
-
-        acc = None
-        for b in states:
-            if b is None:
-                continue
-            sk = HllSketch.deserialize(bytes(b))
-            if acc is None:
-                acc = sk
-            else:
-                acc.merge(sk)
-        return acc.serialize() if acc is not None else None
-
-    return _merge(F.col(col) if isinstance(col, str) else col)
-
-
-def _estimate_udf():
-    # created lazily: pandas_udf needs an active SparkSession to parse the
-    # return type, so module import must stay session-free
-    @pandas_udf("long")
-    def _estimate(states: pd.Series) -> pd.Series:
-        from zetasketch_spark.hll import HllSketch
-
-        return pd.Series([
-            HllSketch.deserialize(bytes(b)).estimate() if b is not None else 0
-            for b in states
-        ])
-
-    return _estimate
-
-
-def hll_estimate(col):
-    """Scalar: cardinality estimate from a serialized sketch. Equivalent of
-    BigQuery ``HLL_COUNT.EXTRACT``."""
-    return _estimate_udf()(F.col(col) if isinstance(col, str) else col)
-
-
-def _num_values_udf():
-    @pandas_udf("long")
-    def _num_values(states: pd.Series) -> pd.Series:
-        from zetasketch_spark.hll import HllSketch
-
-        return pd.Series([
-            HllSketch.deserialize(bytes(b)).num_values if b is not None else 0
-            for b in states
-        ])
-
-    return _num_values
-
-
-def _unique_stats_udf():
-    @pandas_udf("binary")
-    def _unique_stats(states: pd.Series) -> pd.Series:
-        from zetasketch_spark.hll import HllSketch
-
-        return pd.Series([
-            HllSketch.deserialize(bytes(b)).unique_stats_proto()
-            if b is not None else None
-            for b in states
-        ])
-
-    return _unique_stats
-
-
-def hll_unique_stats(col) -> "Column":
-    """Serialized ``UniqueStatsProto`` (unique-stats.proto:25-31) for a
-    serialized HLL state column — the stats-consumer wire surface
-    (estimated cardinality + published expected error)."""
-    return _unique_stats_udf()(F.col(col) if isinstance(col, str) else col)
-
-
-def hll_num_values(col):
-    """Scalar: total values absorbed (`Aggregator.numValues`)."""
-    return _num_values_udf()(F.col(col) if isinstance(col, str) else col)
-
-
-def _theta_build(values: pd.Series, k: int) -> bytes:
-    """One shared build body for both surfaces (DataFrame + SQL).
-    Canonicalization and null-dropping live INSIDE add_series
-    (`theta._hash_series` -> `hashing.canon_key_series`), so a second
-    pre-pass here would just pay the rendering twice."""
-    from zetasketch_spark.sketches.theta import ThetaSketch
-
-    sk = ThetaSketch(k=k)
-    sk.add_series(values)
-    return sk.serialize()
-
-
-def _theta_estimate_udf():
-    @pandas_udf("long")
-    def _est(states: pd.Series) -> pd.Series:
-        from zetasketch_spark.sketches.theta import ThetaSketch
-
-        return pd.Series([
-            ThetaSketch.deserialize(bytes(b)).estimate() if b is not None else 0
-            for b in states
-        ])
-
-    return _est
-
-
-def theta_init_agg(col, k: int = 4096):
-    """Grouped-aggregate: build a theta (KMV) sketch from a key column —
-    the set-operation-capable distinct counter (`sketches/theta.py`).
-    Keys go through the same string-canonical domain as Count-Min/Bloom."""
-
-    @pandas_udf("binary")
-    def _init(values: pd.Series) -> bytes:
-        return _theta_build(values, k)
-
-    return _init(F.col(col) if isinstance(col, str) else col)
-
-
-def theta_merge_agg(col):
-    """Grouped-aggregate: union serialized theta sketches."""
-    from zetasketch_spark.sketches.theta import ThetaSketch
-
-    return _merge_agg_udf(ThetaSketch.deserialize)(
-        F.col(col) if isinstance(col, str) else col)
-
-
-def theta_estimate(col):
-    """Scalar: distinct estimate from a serialized theta sketch."""
-    return _theta_estimate_udf()(F.col(col) if isinstance(col, str) else col)
-
-
-def _theta_setop_udf(op: str, rettype: str):
-    """Factory for the binary theta set-op scalars: evaluate ``op`` on
-    each (state_a, state_b) row pair. Null on either side follows set
-    semantics against the empty sketch: union -> the other side's
-    estimate, intersect/jaccard -> 0, a_not_b -> a's estimate."""
-
-    @pandas_udf(rettype)
-    def _f(a: pd.Series, b: pd.Series) -> pd.Series:
-        from zetasketch_spark.sketches.theta import ThetaSketch
-
-        out = []
-        for ba, bb in zip(a, b):
-            sa = ThetaSketch.deserialize(bytes(ba)) if ba is not None else None
-            sb = ThetaSketch.deserialize(bytes(bb)) if bb is not None else None
-            if op == "union":
-                # a null side must NOT degrade the other's k (merge takes
-                # min-k): union with the empty set is the other side
-                if sa is None and sb is None:
-                    out.append(0)
-                    continue
-                if sa is None or sb is None:
-                    out.append((sa or sb).estimate())
-                    continue
-                sa.merge(sb)
-                out.append(sa.estimate())
-                continue
-            sa = sa if sa is not None else ThetaSketch()
-            sb = sb if sb is not None else ThetaSketch()
-            if op == "intersect":
-                out.append(sa.intersect(sb).estimate())
-            elif op == "a_not_b":
-                out.append(sa.a_not_b(sb).estimate())
-            else:  # jaccard
-                out.append(float(sa.jaccard(sb)))
-        return pd.Series(out)
-
-    return _f
-
-
-def theta_union_estimate(a, b):
-    """Scalar: distinct estimate of A ∪ B from two serialized theta
-    sketch columns — per-ROW, so grouped set ops run distributed."""
-    c = [F.col(x) if isinstance(x, str) else x for x in (a, b)]
-    return _theta_setop_udf("union", "long")(*c)
-
-
-def theta_intersection_estimate(a, b):
-    """Scalar: distinct estimate of A ∩ B (direct, not
-    inclusion-exclusion) from two serialized theta sketch columns."""
-    c = [F.col(x) if isinstance(x, str) else x for x in (a, b)]
-    return _theta_setop_udf("intersect", "long")(*c)
-
-
-def theta_a_not_b_estimate(a, b):
-    """Scalar: distinct estimate of A ∖ B."""
-    c = [F.col(x) if isinstance(x, str) else x for x in (a, b)]
-    return _theta_setop_udf("a_not_b", "long")(*c)
-
-
-def theta_jaccard(a, b):
-    """Scalar: Jaccard similarity of the two key sets."""
-    c = [F.col(x) if isinstance(x, str) else x for x in (a, b)]
-    return _theta_setop_udf("jaccard", "double")(*c)
+def _col(c):
+    return F.col(c) if isinstance(c, str) else c
 
 
 def _canon_keys(s: pd.Series) -> pd.Series:
@@ -314,27 +91,6 @@ def _canon_keys(s: pd.Series) -> pd.Series:
     from zetasketch_spark.hashing import canon_key_series
 
     return canon_key_series(s)
-
-
-def _merge_agg_udf(deserialize):
-    """Factory for MERGE_PARTIAL aggregates: skip nulls, deserialize,
-    associative merge, re-serialize (None when the group had no state —
-    the null/empty-state no-op invariant)."""
-
-    @pandas_udf("binary")
-    def _merge(states: pd.Series) -> bytes:
-        acc = None
-        for b in states:
-            if b is None:
-                continue
-            sk = deserialize(bytes(b))
-            if acc is None:
-                acc = sk
-            else:
-                acc.merge(sk)
-        return acc.serialize() if acc is not None else None
-
-    return _merge
 
 
 def _extract_by_state(states: pd.Series, args: pd.Series, deserialize,
@@ -356,330 +112,327 @@ def _extract_by_state(states: pd.Series, args: pd.Series, deserialize,
     return pd.Series(out)
 
 
-def register_sql(spark) -> None:
-    """Register the scalar/agg functions for use from ``spark.sql`` —
-    the BigQuery-style INIT / MERGE_PARTIAL / EXTRACT triple for every
-    sketch family."""
-    from zetasketch_spark.hll import HllSketch
-    from zetasketch_spark.sketches.bloom import BloomFilter
-    from zetasketch_spark.sketches.countmin import CountMinSketch
-    from zetasketch_spark.sketches.kll import KllSketch
-    from zetasketch_spark.sketches.tdigest import TDigest
+# SQL prefix -> (family, value columns, constructor parameters in SQL
+# argument order); HLL's ``value_type`` is passed as ``typeof(col)``
+_SQL = {
+    "hll": ("hll", ("col",), ("precision", "value_type")),
+    "kll": ("kll", ("col",), ("k",)),
+    "tdigest": ("tdigest", ("col",), ("delta",)),
+    "dd": ("ddsketch", ("col",), ("alpha",)),
+    "cm": ("countmin", ("col",), ("width", "depth")),
+    "bloom": ("bloom", ("col",), ("m", "k")),
+    "theta": ("theta", ("col",), ("k",)),
+    "fd": ("freqdirs", ("embedding",), ("ell",)),
+    "cs": ("countsketch", ("col",), ("width", "depth")),
+    "tt": ("timetheta", ("key", "time_units"), ("k",)),
+}
 
-    spark.udf.register("hll_estimate", _estimate_udf())
-    spark.udf.register("hll_num_values", _num_values_udf())
-    spark.udf.register("hll_unique_stats", _unique_stats_udf())
-    spark.udf.register("hll_merge_agg", _merge_agg_udf(HllSketch.deserialize))
-    spark.udf.register("kll_merge_agg", _merge_agg_udf(KllSketch.deserialize))
-    spark.udf.register("tdigest_merge_agg", _merge_agg_udf(TDigest.deserialize))
-    spark.udf.register("cm_merge_agg", _merge_agg_udf(CountMinSketch.deserialize))
-    from zetasketch_spark.sketches.ddsketch import DDSketch
 
-    spark.udf.register("dd_merge_agg", _merge_agg_udf(DDSketch.deserialize))
+def _param(param: str, v):
+    """One SQL literal argument -> ``(constructor argument, value)``."""
+    if param == "value_type":
+        return param, SPARK_TYPE_TO_HASH_DOMAIN.get(str(v))
+    return param, float(v) if param == "alpha" else int(v)
 
-    @pandas_udf("binary")
-    def _init(values: pd.Series, precision: pd.Series,
-              coltype: pd.Series) -> bytes:
-        from zetasketch_spark.sketches.base import HllFamily
 
-        p = int(precision.iloc[0]) if len(precision) else 15
-        vt = (SPARK_TYPE_TO_HASH_DOMAIN.get(str(coltype.iloc[0]))
-              if len(coltype) else None)
-        fam = HllFamily(precision=p, value_type=vt)
-        sk = fam.make()
-        fam.update(sk, values)
-        return sk.serialize()
-
-    # SQL usage: hll_init_agg(col, 15, typeof(col)) — typeof pins the hash
-    # domain exactly like the DataFrame surface, so the two surfaces
-    # produce byte-identical states for the same column
-    spark.udf.register("hll_init_agg", _init)
-
-    # Literal BigQuery HLL_COUNT.* spelling (dots aren't valid in Spark
-    # function names, so underscores): the reference's production surface
-    # is HLL_COUNT.INIT / MERGE_PARTIAL / MERGE / EXTRACT, and states are
-    # wire-compatible both ways (byte-exact goldens, tests/test_ref_goldens
-    # .py). MERGE is the one composite: merge partials AND extract, BIGINT.
-    spark.udf.register("hll_count_init", _init)
-    spark.udf.register("hll_count_merge_partial",
-                       _merge_agg_udf(HllSketch.deserialize))
-    spark.udf.register("hll_count_extract", _estimate_udf())
-
-    @pandas_udf("long")
-    def _merge_extract(states: pd.Series) -> int:
-        acc = None
-        for b in states:
-            if b is None:
-                continue
-            sk = HllSketch.deserialize(bytes(b))
-            if acc is None:
-                acc = sk
-            else:
-                acc.merge(sk)
-        # BigQuery HLL_COUNT.MERGE over zero non-null sketches returns 0
-        return int(acc.estimate()) if acc is not None else 0
-
-    spark.udf.register("hll_count_merge", _merge_extract)
+def _init_udf(prefix: str, name: str | None = None, **fixed):
+    """INIT: a ``(values, *args)`` grouped aggregate -> serialized state.
+    The positional arguments after the value column(s) bind, in order, to
+    the constructor parameters ``fixed`` leaves open (a ``None`` in
+    ``fixed`` leaves it open); an empty group keeps the family defaults."""
+    family, value_cols, params = _SQL[prefix]
+    name = name or f"{prefix}_init_agg"
+    fixed = {k: v for k, v in fixed.items() if v is not None}
+    free = [p for p in params if p not in fixed]
+    n_args = len(value_cols) + len(free)
+    usage = "{}({})".format(name, ", ".join(
+        value_cols + params).replace("value_type", "typeof(col)"))
 
     @pandas_udf("binary")
-    def _kll_init(values: pd.Series, k: pd.Series) -> bytes:
-        sk = KllSketch(k=int(k.iloc[0]) if len(k) else 200)
-        sk.add_series(values.dropna().to_numpy(dtype="float64"))
-        return sk.serialize()
-
-    spark.udf.register("kll_init_agg", _kll_init)
-
-    @pandas_udf("double")
-    def _kll_quantile(states: pd.Series, q: pd.Series) -> pd.Series:
-        return _extract_by_state(
-            states, q, KllSketch.deserialize,
-            lambda sk, qs: [sk.quantile(float(x)) for x in qs], None)
-
-    spark.udf.register("kll_quantile", _kll_quantile)
-
-    @pandas_udf("binary")
-    def _td_init(values: pd.Series, delta: pd.Series) -> bytes:
-        td = TDigest(delta=int(delta.iloc[0]) if len(delta) else 200)
-        td.add_series(values.dropna().to_numpy(dtype="float64"))
-        return td.serialize()
-
-    spark.udf.register("tdigest_init_agg", _td_init)
-
-    @pandas_udf("double")
-    def _td_quantile(states: pd.Series, q: pd.Series) -> pd.Series:
-        return _extract_by_state(
-            states, q, TDigest.deserialize,
-            lambda td, qs: [td.quantile(float(x)) for x in qs], None)
-
-    spark.udf.register("tdigest_quantile", _td_quantile)
-
-    @pandas_udf("binary")
-    def _dd_init(values: pd.Series, alpha: pd.Series) -> bytes:
-        from zetasketch_spark.sketches.ddsketch import DDSketch
-
-        sk = DDSketch(alpha=float(alpha.iloc[0]) if len(alpha) else 0.01)
-        sk.add_series(values)
-        return sk.serialize()
-
-    spark.udf.register("dd_init_agg", _dd_init)
-
-    @pandas_udf("double")
-    def _dd_quantile(states: pd.Series, q: pd.Series) -> pd.Series:
-        from zetasketch_spark.sketches.ddsketch import DDSketch
-
-        return _extract_by_state(
-            states, q, DDSketch.deserialize,
-            lambda sk, qs: [sk.quantile(float(x)) for x in qs], None)
-
-    spark.udf.register("dd_quantile", _dd_quantile)
-
-    @pandas_udf("binary")
-    def _cm_init(values: pd.Series, width: pd.Series, depth: pd.Series) -> bytes:
-        cm = CountMinSketch(width=int(width.iloc[0]) if len(width) else 2048,
-                            depth=int(depth.iloc[0]) if len(depth) else 5)
-        # canonicalization lives inside add_series (countmin._hash_series)
-        cm.add_series(values)
-        return cm.serialize()
-
-    spark.udf.register("cm_init_agg", _cm_init)
-
-    @pandas_udf("long")
-    def _cm_count(states: pd.Series, keys: pd.Series) -> pd.Series:
-        def q(cm, ks):
-            kk = _canon_keys(ks)
-            mask = kk.isna().to_numpy()
-            est = cm.point_query_series(kk.fillna(""))
-            est[mask] = 0  # null keys have no identity
-            return [int(v) for v in est]
-
-        return _extract_by_state(states, keys, CountMinSketch.deserialize, q, 0)
-
-    spark.udf.register("cm_point_query", _cm_count)
-
-    @pandas_udf("binary")
-    def _bloom_init(values: pd.Series, m: pd.Series, k: pd.Series) -> bytes:
-        bf = BloomFilter(m=int(m.iloc[0]) if len(m) else 1 << 20,
-                         k=int(k.iloc[0]) if len(k) else 7)
-        bf.add_series(_canon_keys(values).dropna())
-        return bf.serialize()
-
-    spark.udf.register("bloom_init_agg", _bloom_init)
-
-    @pandas_udf("boolean")
-    def _bloom_contains(states: pd.Series, keys: pd.Series) -> pd.Series:
-        return _extract_by_state(
-            states, keys, BloomFilter.deserialize,
-            lambda bf, ks: [bool(v) for v in bf.contains_series(_canon_keys(ks))],
-            False)
-
-    spark.udf.register("bloom_contains", _bloom_contains)
-
-    from zetasketch_spark.sketches.theta import ThetaSketch
-
-    spark.udf.register("theta_merge_agg", _merge_agg_udf(ThetaSketch.deserialize))
-
-    @pandas_udf("binary")
-    def _theta_init(values: pd.Series, k: pd.Series) -> bytes:
-        return _theta_build(values, int(k.iloc[0]) if len(k) else 4096)
-
-    spark.udf.register("theta_init_agg", _theta_init)
-    spark.udf.register("theta_estimate", _theta_estimate_udf())
-    spark.udf.register("theta_union_estimate", _theta_setop_udf("union", "long"))
-    spark.udf.register("theta_intersection_estimate",
-                       _theta_setop_udf("intersect", "long"))
-    spark.udf.register("theta_a_not_b_estimate",
-                       _theta_setop_udf("a_not_b", "long"))
-    spark.udf.register("theta_jaccard", _theta_setop_udf("jaccard", "double"))
-
-    from zetasketch_spark.sketches.freqdirs import (FreqDirsFamily,
-                                                    FrequentDirections,
-                                                    gram_drift)
-
-    spark.udf.register("fd_merge_agg",
-                       _merge_agg_udf(FrequentDirections.deserialize))
-
-    @pandas_udf("binary")
-    def _fd_init(values: pd.Series, ell: pd.Series) -> bytes:
-        fam = FreqDirsFamily(ell=int(ell.iloc[0]) if len(ell) else 32)
+    def _init(values: pd.Series, *args: pd.Series) -> object:
+        if 1 + len(args) != n_args:
+            raise ValueError(f"{name} takes {n_args} arguments, got "
+                             f"{1 + len(args)}; usage: {usage}")
+        lits = args[len(value_cols) - 1:]
+        fam = get_family(family, **fixed, **dict(
+            _param(p, s.iloc[0]) for p, s in zip(free, lits) if len(s)))
         st = fam.make()
-        fam.update(st, values)
-        return st.serialize()
+        if prefix == "tt":
+            fam.update_pair(st, values, args[0])
+        elif prefix == "bloom":
+            fam.update(st, _canon_keys(values).dropna())
+        else:
+            fam.update(st, values)
+        return fam.serialize(st)
 
-    # SQL usage: fd_init_agg(embedding, 16) over an array<float|double>
-    # column — the matrix-sketch INIT; states merge with fd_merge_agg
-    spark.udf.register("fd_init_agg", _fd_init)
+    return _init
 
-    @pandas_udf("double")
-    def _fd_err(states: pd.Series) -> pd.Series:
+
+def _merge_udf(family: str, extract: bool = False):
+    """MERGE_PARTIAL: merge a group's states, skipping nulls; NULL for a
+    group with no state. ``extract`` adds the result step (BigQuery
+    ``HLL_COUNT.MERGE``): the first result field, 0 with no state."""
+    fam = get_family(family)
+
+    @pandas_udf("long" if extract else "binary")
+    def _merge(states: pd.Series) -> object:
+        acc = fam.merge_states(states)
+        if extract:
+            return int(fam.result(acc)[0]) if acc is not None else 0
+        return fam.serialize(acc) if acc is not None else None
+
+    return _merge
+
+
+def _state_udf(rettype: str, family: str, fn, missing):
+    """Per-state scalar: ``fn(state)`` per row, ``missing`` for NULL."""
+    fam = get_family(family)
+
+    @pandas_udf(rettype)
+    def _per_state(states: pd.Series) -> pd.Series:
         return pd.Series(
-            [float(FrequentDirections.deserialize(bytes(b))
-                   .error_certificate()) if b is not None else None
-             for b in states], dtype="float64")
+            [fn(fam.deserialize(bytes(b))) if b is not None else missing
+             for b in states],
+            dtype="float64" if rettype == "double" else None)
 
-    spark.udf.register("fd_error_certificate", _fd_err)
+    return _per_state
 
-    def _fd_drift_udf(idx: int):
-        @pandas_udf("double")
-        def _f(a: pd.Series, b: pd.Series) -> pd.Series:
-            out = []
-            for x, y in zip(a, b):
-                if x is None or y is None:
-                    out.append(None)
-                    continue
-                pair = gram_drift(FrequentDirections.deserialize(bytes(x)),
-                                  FrequentDirections.deserialize(bytes(y)))
-                out.append(float(pair[idx]))
-            return pd.Series(out, dtype="float64")
 
-        return _f
+def _extract_udf(rettype: str, family: str, fn, missing):
+    """(state, arg) extract: ``fn(state, args)`` over each distinct
+    state's rows, ``missing`` for a NULL state."""
+    fam = get_family(family)
 
-    # pairwise embedding-drift over two state columns: estimate + its
-    # sound error interval (sketches/freqdirs.py::gram_drift)
-    spark.udf.register("fd_drift", _fd_drift_udf(0))
-    spark.udf.register("fd_drift_bound", _fd_drift_udf(1))
+    @pandas_udf(rettype)
+    def _extract(states: pd.Series, args: pd.Series) -> pd.Series:
+        return _extract_by_state(states, args, fam.deserialize, fn, missing)
 
-    from zetasketch_spark.sketches.countsketch import CountSketch
+    return _extract
 
-    spark.udf.register("cs_merge_agg", _merge_agg_udf(CountSketch.deserialize))
 
-    @pandas_udf("binary")
-    def _cs_init(values: pd.Series, width: pd.Series,
-                 depth: pd.Series) -> bytes:
-        sk = CountSketch(width=int(width.iloc[0]) if len(width) else 2048,
-                         depth=int(depth.iloc[0]) if len(depth) else 5)
-        sk.add_series(values)
-        return sk.serialize()
+def _pair_udf(rettype: str, family: str, fn):
+    """Pairwise scalar over two state columns: ``fn(a, b)`` per row on the
+    deserialized states, ``None`` standing for a NULL side."""
+    fam = get_family(family)
 
-    # SQL usage: cs_init_agg(col, 2048, 5) — the signed-counter
-    # CountSketch INIT; states merge with cs_merge_agg
-    spark.udf.register("cs_init_agg", _cs_init)
-
-    @pandas_udf("long")
-    def _cs_point(states: pd.Series, keys: pd.Series) -> pd.Series:
-        return _extract_by_state(
-            states, keys, CountSketch.deserialize,
-            lambda sk, ks: [int(v) for v in sk.point_query_series(ks)],
-            None)
-
-    # unbiased median-of-rows frequency estimate of key within state
-    spark.udf.register("cs_point_est", _cs_point)
-
-    @pandas_udf("double")
-    def _cs_f2(states: pd.Series) -> pd.Series:
+    @pandas_udf(rettype)
+    def _pair(a: pd.Series, b: pd.Series) -> pd.Series:
         return pd.Series(
-            [float(CountSketch.deserialize(bytes(b)).f2_estimate())
-             if b is not None else None for b in states], dtype="float64")
+            [fn(*(fam.deserialize(bytes(x)) if x is not None else None
+                  for x in xy)) for xy in zip(a, b)],
+            dtype="float64" if rettype == "double" else None)
 
+    return _pair
+
+
+def _quantiles(sk, qs):
+    return [sk.quantile(float(q)) for q in qs]
+
+
+def _cm_point(cm, keys):
+    kk = _canon_keys(keys)
+    est = cm.point_query_series(kk.fillna(""))
+    est[kk.isna().to_numpy()] = 0  # null keys have no identity
+    return [int(v) for v in est]
+
+
+def _since(method: str, cast):
+    return lambda sk, ts: [cast(getattr(sk, method)(int(t))) for t in ts]
+
+
+def _strict(fn):
+    """NULL when either side is NULL."""
+    return lambda a, b: None if a is None or b is None else fn(a, b)
+
+
+def _fd_drift(i: int):
+    def drift(a, b):
+        from zetasketch_spark.sketches.freqdirs import gram_drift
+
+        return float(gram_drift(a, b)[i])
+
+    return _strict(drift)
+
+
+def _theta_op(op: str):
+    """A theta set op where a NULL side is the empty set: union -> the
+    other side's estimate, intersect/jaccard -> 0, a_not_b -> a's."""
+    def setop(sa, sb):
+        from zetasketch_spark.sketches.theta import ThetaSketch
+
+        if op == "union":
+            # a null side must NOT degrade the other's k (merge takes
+            # min-k): union with the empty set is the other side
+            if sa is None or sb is None:
+                one = sb if sa is None else sa
+                return one.estimate() if one is not None else 0
+            sa.merge(sb)
+            return sa.estimate()
+        sa = sa if sa is not None else ThetaSketch()
+        sb = sb if sb is not None else ThetaSketch()
+        if op == "intersect":
+            return sa.intersect(sb).estimate()
+        if op == "a_not_b":
+            return sa.a_not_b(sb).estimate()
+        return float(sa.jaccard(sb))
+
+    return setop
+
+
+# SQL name -> (return type, family, fn(state), value for a NULL state)
+_PER_STATE = {
+    "hll_estimate": ("long", "hll", lambda sk: sk.estimate(), 0),
+    "hll_count_extract": ("long", "hll", lambda sk: sk.estimate(), 0),
+    "hll_num_values": ("long", "hll", lambda sk: sk.num_values, 0),
+    "hll_unique_stats": ("binary", "hll",
+                         lambda sk: sk.unique_stats_proto(), None),
+    "theta_estimate": ("long", "theta", lambda sk: sk.estimate(), 0),
+    # the FD error certificate of the merged embeddings
+    "fd_error_certificate": ("double", "freqdirs",
+                             lambda sk: float(sk.error_certificate()), None),
     # AMS second frequency moment (self-join size) of the sketched column
-    spark.udf.register("cs_f2", _cs_f2)
+    "cs_f2": ("double", "countsketch", lambda sk: float(sk.f2_estimate()),
+              None),
+    "tt_estimate": ("long", "timetheta", lambda sk: sk.estimate(), 0),
+}
+# SQL name -> (return type, family, fn(state, args), value for a NULL state)
+_BY_STATE = {
+    "kll_quantile": ("double", "kll", _quantiles, None),
+    "tdigest_quantile": ("double", "tdigest", _quantiles, None),
+    "dd_quantile": ("double", "ddsketch", _quantiles, None),
+    "cm_point_query": ("long", "countmin", _cm_point, 0),
+    "bloom_contains": ("boolean", "bloom", lambda bf, ks: [
+        bool(v) for v in bf.contains_series(_canon_keys(ks))], False),
+    # unbiased median-of-rows frequency estimate of key within state
+    "cs_point_est": ("long", "countsketch", lambda sk, ks: [
+        int(v) for v in sk.point_query_series(ks)], None),
+    # distinct keys last seen at time unit >= since (suffix window) ...
+    "tt_active_since": ("long", "timetheta", _since("estimate_since", int),
+                        None),
+    # ... and FIRST seen at time unit >= since (acquisition window)
+    "tt_new_since": ("long", "timetheta", _since("estimate_new_since", int),
+                     None),
+    "tt_active_sd_since": ("double", "timetheta",
+                           _since("estimate_sd_since", float), None),
+}
+# SQL name -> (return type, family, fn(state_a, state_b))
+_PAIRWISE = {
+    "theta_union_estimate": ("long", "theta", _theta_op("union")),
+    "theta_intersection_estimate": ("long", "theta", _theta_op("intersect")),
+    "theta_a_not_b_estimate": ("long", "theta", _theta_op("a_not_b")),
+    "theta_jaccard": ("double", "theta", _theta_op("jaccard")),
+    # embedding drift between two FD states and its sound error interval
+    # (sketches/freqdirs.py::gram_drift)
+    "fd_drift": ("double", "freqdirs", _fd_drift(0)),
+    "fd_drift_bound": ("double", "freqdirs", _fd_drift(1)),
+    # unbiased join-size-with-multiplicity estimate from two states built
+    # with the same (width, depth, seed)
+    "cs_inner_product": ("double", "countsketch", _strict(
+        lambda a, b: float(a.inner_product(b)))),
+}
 
-    @pandas_udf("double")
-    def _cs_inner(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            if x is None or y is None:
-                out.append(None)
-                continue
-            out.append(float(CountSketch.deserialize(bytes(x)).inner_product(
-                CountSketch.deserialize(bytes(y)))))
-        return pd.Series(out, dtype="float64")
 
-    # unbiased join-size-with-multiplicity estimate from two states
-    # built with the same (width, depth, seed)
-    spark.udf.register("cs_inner_product", _cs_inner)
+def register_sql(spark) -> None:
+    """Register the INIT / MERGE_PARTIAL / EXTRACT functions of every
+    sketch family for use from ``spark.sql``."""
+    udfs = {}
+    for prefix, (family, _, _) in _SQL.items():
+        udfs[f"{prefix}_init_agg"] = _init_udf(prefix)
+        if prefix != "bloom":
+            udfs[f"{prefix}_merge_agg"] = _merge_udf(family)
+    # the literal BigQuery HLL_COUNT.* spelling (dots are not valid in
+    # Spark function names); MERGE is the merge+extract composite
+    udfs["hll_count_init"] = _init_udf("hll", "hll_count_init")
+    udfs["hll_count_merge_partial"] = udfs["hll_merge_agg"]
+    udfs["hll_count_merge"] = _merge_udf("hll", extract=True)
+    udfs.update({n: _state_udf(*s) for n, s in _PER_STATE.items()})
+    udfs.update({n: _extract_udf(*s) for n, s in _BY_STATE.items()})
+    udfs.update({n: _pair_udf(*s) for n, s in _PAIRWISE.items()})
+    for name, udf in udfs.items():
+        spark.udf.register(name, udf)
 
-    from zetasketch_spark.sketches.timetheta import TimeThetaSketch
 
-    spark.udf.register("tt_merge_agg",
-                       _merge_agg_udf(TimeThetaSketch.deserialize))
+def hll_init_agg(col, precision: int = 15, sparse_precision: int | None = None,
+                 value_type: str | None = None):
+    """Grouped-aggregate: build an HLL++ sketch from a value column.
+    Equivalent of BigQuery ``HLL_COUNT.INIT(col, precision)``.
 
-    @pandas_udf("binary")
-    def _tt_init(keys: pd.Series, times: pd.Series, k: pd.Series) -> bytes:
-        sk = TimeThetaSketch(k=int(k.iloc[0]) if len(k) else 4096)
-        sk.add_series(keys, times)
-        return sk.serialize()
+    The hash domain is pinned from the column's DECLARED Spark type
+    (shipped into the UDF via ``typeof()``), never guessed from batch
+    dtypes: Arrow promotes nullable int columns to float64 per batch, so
+    any per-batch heuristic would hash the same column through different
+    recipes in different groups. ``value_type`` ('long' | 'int' |
+    'double' | 'float') overrides the declared type if set."""
+    c = _col(col)
+    init = _init_udf("hll", precision=precision,
+                     sparse_precision=sparse_precision, value_type=value_type)
+    return init(c) if value_type else init(c, F.call_function("typeof", c))
 
-    # SQL usage: tt_init_agg(key, unix_date(to_date(ts)), 4096) — the
-    # temporal theta INIT (key + int64 time units, calendrical days for
-    # TZ/DST immunity); states merge with tt_merge_agg
-    spark.udf.register("tt_init_agg", _tt_init)
 
-    @pandas_udf("long")
-    def _tt_estimate(states: pd.Series) -> pd.Series:
-        return pd.Series(
-            [TimeThetaSketch.deserialize(bytes(b)).estimate()
-             if b is not None else 0 for b in states], dtype="int64")
+def hll_merge_agg(col):
+    """Grouped-aggregate: merge serialized sketches. Equivalent of BigQuery
+    ``HLL_COUNT.MERGE_PARTIAL``; compose with :func:`hll_estimate` for
+    ``HLL_COUNT.MERGE``. Re-merging fine-grained sketches to coarser
+    grouping levels is exact (sketch rollup property)."""
+    return _merge_udf("hll")(_col(col))
 
-    spark.udf.register("tt_estimate", _tt_estimate)
 
-    @pandas_udf("long")
-    def _tt_active(states: pd.Series, since: pd.Series) -> pd.Series:
-        return _extract_by_state(
-            states, since, TimeThetaSketch.deserialize,
-            lambda sk, ts: [int(sk.estimate_since(int(t))) for t in ts],
-            None)
+def hll_estimate(col):
+    """Scalar: cardinality estimate from a serialized sketch. Equivalent of
+    BigQuery ``HLL_COUNT.EXTRACT``."""
+    return _state_udf(*_PER_STATE["hll_estimate"])(_col(col))
 
-    # distinct keys last seen at time unit >= since (suffix window)
-    spark.udf.register("tt_active_since", _tt_active)
 
-    @pandas_udf("long")
-    def _tt_new(states: pd.Series, since: pd.Series) -> pd.Series:
-        return _extract_by_state(
-            states, since, TimeThetaSketch.deserialize,
-            lambda sk, ts: [int(sk.estimate_new_since(int(t))) for t in ts],
-            None)
+def hll_unique_stats(col) -> "Column":
+    """Serialized ``UniqueStatsProto`` (unique-stats.proto:25-31) for a
+    serialized HLL state column — the stats-consumer wire surface
+    (estimated cardinality + published expected error)."""
+    return _state_udf(*_PER_STATE["hll_unique_stats"])(_col(col))
 
-    # distinct keys FIRST seen at time unit >= since (acquisition window)
-    spark.udf.register("tt_new_since", _tt_new)
 
-    @pandas_udf("double")
-    def _tt_active_sd(states: pd.Series, since: pd.Series) -> pd.Series:
-        return _extract_by_state(
-            states, since, TimeThetaSketch.deserialize,
-            lambda sk, ts: [float(sk.estimate_sd_since(int(t))) for t in ts],
-            None)
+def hll_num_values(col):
+    """Scalar: total values absorbed (`Aggregator.numValues`)."""
+    return _state_udf(*_PER_STATE["hll_num_values"])(_col(col))
 
-    spark.udf.register("tt_active_sd_since", _tt_active_sd)
+
+def theta_init_agg(col, k: int = 4096):
+    """Grouped-aggregate: build a theta (KMV) sketch from a key column —
+    the set-operation-capable distinct counter (`sketches/theta.py`).
+    Keys go through the same string-canonical domain as Count-Min/Bloom."""
+    return _init_udf("theta", k=k)(_col(col))
+
+
+def theta_merge_agg(col):
+    """Grouped-aggregate: union serialized theta sketches."""
+    return _merge_udf("theta")(_col(col))
+
+
+def theta_estimate(col):
+    """Scalar: distinct estimate from a serialized theta sketch."""
+    return _state_udf(*_PER_STATE["theta_estimate"])(_col(col))
+
+
+def theta_union_estimate(a, b):
+    """Scalar: distinct estimate of A ∪ B from two serialized theta
+    sketch columns — per-ROW, so grouped set ops run distributed."""
+    return _pair_udf(*_PAIRWISE["theta_union_estimate"])(_col(a), _col(b))
+
+
+def theta_intersection_estimate(a, b):
+    """Scalar: distinct estimate of A ∩ B (direct, not
+    inclusion-exclusion) from two serialized theta sketch columns."""
+    return _pair_udf(*_PAIRWISE["theta_intersection_estimate"])(
+        _col(a), _col(b))
+
+
+def theta_a_not_b_estimate(a, b):
+    """Scalar: distinct estimate of A ∖ B."""
+    return _pair_udf(*_PAIRWISE["theta_a_not_b_estimate"])(_col(a), _col(b))
+
+
+def theta_jaccard(a, b):
+    """Scalar: Jaccard similarity of the two key sets."""
+    return _pair_udf(*_PAIRWISE["theta_jaccard"])(_col(a), _col(b))
 
 
 def tuple_distinct_col(*cols) -> "Column":
@@ -688,8 +441,5 @@ def tuple_distinct_col(*cols) -> "Column":
     string concatenation, so the standard HLL string recipe applies
     unchanged and states stay wire-compatible. NULL fields are skipped by
     concat_ws (match that in any exact companion)."""
-    import pyspark.sql.functions as F
-
     return F.concat_ws(
-        "\u001f", *[(F.col(c) if isinstance(c, str) else c).cast("string")
-                     for c in cols])
+        "\u001f", *[_col(c).cast("string") for c in cols])

@@ -199,8 +199,7 @@ _ARROW_TO_DDL = {"string": "string", "large_string": "string",
                  "int64": "bigint", "int32": "int", "int16": "int",
                  "int8": "int", "bool": "boolean",
                  "double": "double", "float": "float",
-                 "timestamp[us]": "timestamp", "timestamp[ns]": "timestamp",
-                 "timestamp[ms]": "timestamp", "date32[day]": "date"}
+                 "date32[day]": "date"}
 
 
 def _plan_key_types(splits, keys, derived, part_keys) -> list[str]:
@@ -218,7 +217,10 @@ def _plan_key_types(splits, keys, derived, part_keys) -> list[str]:
             return "string"
         if sample_schema is None:
             return "string"
-        return _ARROW_TO_DDL.get(str(sample_schema.field(k).type), "string")
+        typ = str(sample_schema.field(k).type)
+        if typ.startswith("timestamp"):  # any unit, with or without tz
+            return "timestamp"
+        return _ARROW_TO_DDL.get(typ, "string")
 
     return [_key_type(k) for k in keys]
 
@@ -227,10 +229,17 @@ def _coerce_key(v, t):
     # pandas surfaces nullable int keys as floats with NaN — restore
     # the declared type (None for NaN) so the explicit schema accepts it;
     # a NaN in a float key column is a group of its own, as in Spark
+    import datetime
     import math
 
     if isinstance(v, np.generic):
         v = v.item()
+    if hasattr(v, "to_pydatetime"):
+        # timestamp[ns] keys (Spark's INT96) come as pandas Timestamps of
+        # UTC instants; Spark keeps whole microseconds
+        v = v.floor("us").to_pydatetime()
+        if v.tzinfo is None and t == "timestamp":
+            v = v.replace(tzinfo=datetime.timezone.utc)
     if v is None or (isinstance(v, float) and math.isnan(v)
                       and t not in ("double", "float")):
         return None
@@ -337,12 +346,14 @@ def split_partials(spark, files, keys, specs, key_fields) -> DataFrame:
     ``mapInArrow`` adapter produces, so merge/result compose unchanged;
     ``partition_id`` is the Spark task partition id."""
     rdd = _scan(spark, files, keys, specs)[0]
+    key_types = [f.dataType.simpleString() for f in key_fields]
     out_schema = StructType(list(key_fields) + [
         StructField(n, BinaryType()) for n in specs] + [
         StructField(ROWS_COL, LongType()),
         StructField(PARTITION_COL, IntegerType())])
     return spark.createDataFrame(rdd.mapPartitionsWithIndex(
-        lambda pid, it: ((*k, *blobs, rows, pid) for k, (blobs, rows) in it)),
+        lambda pid, it: ((*map(_coerce_key, k, key_types), *blobs, rows, pid)
+                         for k, (blobs, rows) in it)),
         out_schema)
 
 

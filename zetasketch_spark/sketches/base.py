@@ -101,19 +101,24 @@ class SketchFamily:
 
     # -- conveniences shared by the harness ---------------------------------
 
-    def merge_serialized(self, blobs) -> bytes:
-        """Merge an iterable of serialized states into one blob. None and
-        empty blobs are no-ops (`HyperLogLogPlusPlus.java:231-243`: null /
-        empty proto merges are ignored)."""
+    def merge_states(self, blobs) -> Any:
+        """Merge an iterable of serialized states into one state, or None
+        when there is none. None and empty blobs are no-ops
+        (`HyperLogLogPlusPlus.java:231-243`: null / empty proto merges
+        are ignored)."""
         acc = None
         for b in blobs:
             if b is None or len(b) == 0:
                 continue
             s = self.deserialize(bytes(b))
             acc = s if acc is None else self.merge(acc, s)
-        if acc is None:
-            acc = self.make()
-        return self.serialize(acc)
+        return acc
+
+    def merge_serialized(self, blobs) -> bytes:
+        """Merge an iterable of serialized states into one blob (an empty
+        state when there is none)."""
+        acc = self.merge_states(blobs)
+        return self.serialize(self.make() if acc is None else acc)
 
 
 class _HashPrepared:

@@ -95,10 +95,9 @@ class CountMinSketch:
         Misra-Gries candidate prune stays mergeable for any positive
         integer weights (Agarwal et al., 'Mergeable Summaries', cover
         weighted MG). Rows with null key/weight or weight <= 0 are
-        dropped. Unlike add_series, keys feed the counters in sorted
-        canonical order (groupby), so this path is deterministic but not
-        byte-interchangeable with an unweighted build's candidate
-        ordering."""
+        dropped. Keys feed the counters in sorted canonical order
+        (groupby); counters, total and candidate content do not depend
+        on that order."""
         from zetasketch_spark.hashing import canon_key_series
 
         keys = pd.Series(keys)
@@ -132,7 +131,9 @@ class CountMinSketch:
         count from everything and drop non-positives. Unlike truncation,
         this preserves the mergeable guarantee: any key with global share
         > 1/(max_candidates+1) survives every merge, and each surviving
-        count is a lower bound within the decremented mass."""
+        count is a lower bound within the decremented mass. The survivors
+        are exactly the keys counted above the cut, whatever the order of
+        ties at it."""
         if len(s) <= self.max_candidates:
             return s
         s = s.sort_values(ascending=False)
@@ -180,12 +181,15 @@ class CountMinSketch:
         self._prune()
 
     def serialize(self) -> bytes:
-        # candidates as length-prefixed UTF-8 (keys may contain any byte)
-        key_blobs = [k.encode("utf-8") for k in self.candidates.keys()]
+        # candidates as length-prefixed UTF-8 (keys may contain any byte),
+        # in key order: the dict's insertion order follows batch history,
+        # its content does not (while no prune has run)
+        keys = sorted(self.candidates)
+        key_blobs = [k.encode("utf-8") for k in keys]
         key_lens = np.array([len(b) for b in key_blobs], dtype=np.int32)
         cand_keys = b"".join(key_blobs)
-        cand_counts = np.fromiter(self.candidates.values(), dtype=np.int64,
-                                  count=len(self.candidates))
+        cand_counts = np.fromiter((self.candidates[k] for k in keys),
+                                  dtype=np.int64, count=len(keys))
         from zetasketch_spark.sketches.wire import pack_header
 
         header = pack_header(_MAGIC, _ENCODING_VERSION) + struct.pack(

@@ -129,8 +129,10 @@ class DDSketch:
                 "DDSketch cannot bucket non-finite values (log-scale "
                 "indexing has no bucket for ±inf)")
         self.n += len(arr)
-        self._min = min(self._min, float(arr.min()))
-        self._max = max(self._max, float(arr.max()))
+        # + 0.0 turns -0.0 into 0.0: which zero numpy's min/max returns
+        # depends on where it sits in the batch, so batching would show
+        self._min = min(self._min, float(arr.min()) + 0.0)
+        self._max = max(self._max, float(arr.max()) + 0.0)
         pos = arr[arr > 0.0]
         neg = arr[arr < 0.0]
         self.zero_count += int(len(arr) - len(pos) - len(neg))
