@@ -797,3 +797,32 @@ def test_theta_containment_direct():
     assert abs(c - 0.4) <= 4 * (0.4 * 0.6 / 4096) ** 0.5 + 0.01
     empty = _theta_of([], k=4096)
     assert empty.containment(sup) == 0.0
+
+
+def test_kll_foreign_blob_typed_errors():
+    """A KLL blob this module could not have written raises ValueError —
+    never a bare struct.error or a silent short parse: every truncation,
+    and single-field flips of k, n, the level count and a level length."""
+    import struct as _struct
+
+    sk = KllSketch(k=200)
+    sk.add_series(pd.Series(np.arange(5000, dtype=np.float64)))
+    blob = sk.serialize()
+    assert KllSketch.deserialize(blob).serialize() == blob
+    for cut in range(len(blob)):
+        with pytest.raises(ValueError):
+            KllSketch.deserialize(blob[:cut])
+
+    def flipped(fmt, off, value):
+        m = bytearray(blob)
+        _struct.pack_into(fmt, m, off, value)
+        return bytes(m)
+
+    # header (5 bytes), then k:i32 @5, n:i64 @9, levels:i32 @17,
+    # rng counter, min, max; the first level's length:i32 @45
+    for fmt, off, value in [("<i", 5, 0), ("<i", 5, 1 << 20),
+                            ("<q", 9, -1), ("<i", 17, -1),
+                            ("<i", 17, 1000), ("<i", 45, -1),
+                            ("<i", 45, 1 << 28)]:
+        with pytest.raises(ValueError):
+            KllSketch.deserialize(flipped(fmt, off, value))

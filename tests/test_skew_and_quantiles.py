@@ -101,3 +101,32 @@ def test_heavy_hitter_tools_cm_vs_exact(spark, transcripts_path):
         if t in top:
             assert top[t] >= n
             assert top[t] <= n + np.e / 4096 * cm.total
+
+
+def test_kll_boundaries_past_fan_in_take_salted_tree(spark, monkeypatch):
+    """`rangepart.kll_boundaries` over more than 64 input partitions folds
+    its KLL partials through the salted executor-side tree before the
+    driver collect (bounded fan-in), and the boundaries stay inside
+    KLL's rank error; empty input keeps an empty sketch's boundaries."""
+    from zetasketch_spark.operators import agg
+    from zetasketch_spark.operators.rangepart import kll_boundaries
+
+    calls = []
+    real = agg.sketch_merge
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs.get("tree_levels"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(agg, "sketch_merge", spy)
+    n = 20_000
+    df = spark.range(n).select(F.col("id").cast("double").alias("v")) \
+        .repartition(80)
+    b = kll_boundaries(df, "v", 8)
+    assert calls == [2]
+    assert len(b) == 7 and b == sorted(b)
+    for i, x in enumerate(b, 1):
+        # true rank of the boundary value (values are 0..n-1) against its
+        # target quantile i/8; KLL's rank error is ~1.5% at k=200
+        assert abs((x + 1) / n - i / 8) <= 0.03, (i, x)
+    assert kll_boundaries(df.limit(0), "v", 8) == []

@@ -177,3 +177,27 @@ def test_tableio_snapshot_resume_contract(spark, tmp_path, monkeypatch):
     r3 = {r["role"]: r["estimate"] for r in res3.collect()}
     assert m3["partitions_computed"] > 0
     assert all(r3[k] > r1[k] for k in r1)  # twice the convs per role
+
+
+def _die_in_worker(args):
+    import os
+
+    os._exit(1)
+
+
+def test_transcript_writer_dead_worker_raises(tmp_path, monkeypatch):
+    """A part writer that dies (as under the OOM killer) fails the
+    multi-part build with BrokenProcessPool instead of hanging it; the
+    two-job build starts at most two processes."""
+    from concurrent.futures.process import BrokenProcessPool
+
+    import pytest
+
+    from zetasketch_spark.sources import transcripts
+
+    monkeypatch.setattr(transcripts, "_write_one_part", _die_in_worker)
+    out = tmp_path / "t"
+    with pytest.raises(BrokenProcessPool):
+        transcripts.write_transcripts_parquet(str(out), n_turns=20,
+                                              n_convs=4, rows_per_file=10)
+    assert not (out / "_MANIFEST").exists()

@@ -342,9 +342,9 @@ def test_streaming_window_activity_matches_batch(spark, tmp_path):
 def test_timetheta_through_sketch_table(spark, tmp_path):
     """Incremental maintenance of a live activity table: daily deltas
     fold into a per-role timetheta SketchTable via the
-    ``delta_is_partials`` seam (`operators/incremental.py` — the
-    two-input family can't ride the single-column scan stage, so the
-    dedicated partial builder produces the stage-1 frame). The folded
+    ``delta_is_partials`` seam (`operators/incremental.py` —
+    ``timetheta_partial`` builds the stage-1 frame from the struct<key,
+    time> column the split kernel reads). The folded
     state is BYTE-equal to a one-shot build over all deltas (pure
     function of the key→max-day set), replay is a no-op, and time
     travel reads the day-1 anchor."""
@@ -432,9 +432,11 @@ def test_timetheta_through_sketch_table(spark, tmp_path):
 
 
 def test_timetheta_partial_fabrics_state_equal(spark):
-    """The Arrow fast path (zero-copy string fingerprinting) produces
-    BYTE-identical merged states to the pandas fallback, including null
-    keys/times and multi-group batches."""
+    """The one split kernel's temporal theta (a struct<key, time> column
+    through ``arrow_partials`` over ``repartition(5)``, merged by
+    ``sketch_merge``) is BYTE-identical per group to a driver-side
+    ``update_pair`` fold, for string and nullable-bigint keys, with null
+    keys, null times and multi-group batches."""
     from zetasketch_spark.operators.agg import SKETCH_COL, sketch_merge
     from zetasketch_spark.operators.window_distinct import timetheta_partial
 
@@ -443,6 +445,8 @@ def test_timetheta_partial_fabrics_state_equal(spark):
     pdf = pd.DataFrame({
         "g": rng.choice(["a", "b"], size=n),
         "user": [None if i % 97 == 0 else f"u{i % 700}" for i in range(n)],
+        "uid": pd.array([None if i % 83 == 0 else i % 700
+                         for i in range(n)], dtype="Int64"),
         "day": pd.array([None if i % 89 == 0 else int(d) for i, d in
                          enumerate(rng.integers(0, 50, size=n))],
                         dtype="Int64"),
@@ -450,14 +454,16 @@ def test_timetheta_partial_fabrics_state_equal(spark):
     df = spark.createDataFrame(pdf).repartition(5)
     fam = TimeThetaFamily(k=256)
 
-    def states(use_arrow):
+    for key_col in ("user", "uid"):
         merged = sketch_merge(
-            timetheta_partial(df, ["g"], "user", "day", fam,
-                              use_arrow=use_arrow), ["g"], fam)
-        return {r["g"]: bytes(r[SKETCH_COL]) for r in merged.collect()}
-
-    a, p = states(True), states(False)
-    assert set(a) == {"a", "b"} and a == p
+            timetheta_partial(df, ["g"], key_col, "day", fam), ["g"], fam)
+        got = {r["g"]: bytes(r[SKETCH_COL]) for r in merged.collect()}
+        want = {}
+        for g, sub in pdf.groupby("g"):
+            st = fam.make()
+            fam.update_pair(st, sub[key_col], sub["day"])
+            want[g] = fam.serialize(st)
+        assert set(got) == {"a", "b"} and got == want, key_col
 
 
 def test_activity_age_report_exact_regime(spark):
@@ -567,3 +573,54 @@ def test_window_activity_empty_input(spark):
 
     df = spark.createDataFrame([], "user string, ts timestamp")
     assert window_activity_report(df, "user", "ts").collect() == []
+
+
+def test_window_activity_from_table_checks_windows_without_snapshot(
+        spark, tmp_path):
+    """An invalid window fails before the table is read, also when the
+    table has no snapshot yet (it used to return an empty frame)."""
+    from zetasketch_spark.operators.incremental import SketchTable
+    from zetasketch_spark.operators.window_distinct import (
+        window_activity_from_table,
+    )
+
+    table = SketchTable(str(tmp_path / "empty"), ["role"], "user",
+                        TimeThetaFamily(k=64))
+    with pytest.raises(ValueError, match="windows must be"):
+        window_activity_from_table(spark, table, as_of="1970-01-10",
+                                   windows=(0,))
+    assert window_activity_from_table(spark, table,
+                                      as_of="1970-01-10").count() == 0
+
+
+def test_window_activity_from_table_matches_report(spark, tmp_path):
+    """The table answer emits the same rows as `window_activity_report`
+    over the same events; a null group renders as '(null)' in both."""
+    import pyspark.sql.functions as F
+
+    from zetasketch_spark.operators.incremental import SketchTable
+    from zetasketch_spark.operators.window_distinct import (
+        timetheta_partial,
+        window_activity_from_table,
+        window_activity_report,
+    )
+
+    rng = np.random.default_rng(3)
+    n = 2000
+    pdf = pd.DataFrame({
+        "role": rng.choice(["user", "assistant", None], size=n),
+        "user": [f"u{i}" for i in rng.integers(0, 400, size=n)],
+        "day": rng.integers(0, 20, size=n).astype(np.int64),
+    })
+    df = spark.createDataFrame(pdf).repartition(3)
+    fam = TimeThetaFamily(k=128)
+    table = SketchTable(str(tmp_path / "activity"), ["role"], "user", fam)
+    table.update(spark, timetheta_partial(df, ["role"], "user", "day", fam),
+                 fingerprint="d1", delta_is_partials=True)
+    got = sorted(tuple(r) for r in window_activity_from_table(
+        spark, table, as_of="1970-01-20", windows=(3, 10)).collect())
+    want = sorted(tuple(r) for r in window_activity_report(
+        df, "user", "day", k=128, windows=(3, 10), as_of="1970-01-20",
+        group_keys=["role"], time_expr=F.col("day")).collect())
+    assert got == want
+    assert {r[0] for r in got} == {"user", "assistant", "(null)"}

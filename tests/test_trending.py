@@ -168,3 +168,38 @@ def test_decayed_topk_partitioning_invariant_with_tree_fold(spark):
     a = [tuple(r) for r in decayed_topk_verified(few, "k", "ts", k=8).collect()]
     b = [tuple(r) for r in decayed_topk_verified(many, "k", "ts", k=8).collect()]
     assert a == b and len(a) == 8
+
+
+def test_kernel_weighted_cm_equals_per_partition_fold(spark):
+    """The weighted Count-Min partials of `decayed_topk_verified` — a
+    struct<key, weight> column through the one split kernel — equal a
+    per-partition ``add_weighted_series`` fold byte for byte (null keys,
+    zero and negative weights included; one batch per partition)."""
+    import pyspark.sql.functions as F
+
+    from zetasketch_spark.operators.agg import (PARTITION_COL, SKETCH_COL,
+                                                sketch_partial)
+    from zetasketch_spark.sketches.countmin import CountMinFamily
+
+    rng = np.random.default_rng(5)
+    n = 6000
+    pdf = pd.DataFrame({
+        "key": [None if i % 61 == 0 else f"t{z % 500}"
+                for i, z in enumerate(rng.zipf(1.3, n))],
+        "w": rng.integers(-2, 1 << 20, n),
+    })
+    wdf = spark.createDataFrame(pdf).repartition(7).localCheckpoint(
+        eager=True)
+    fam = CountMinFamily(width=512, depth=4, max_candidates=32)
+    got = {r[PARTITION_COL]: bytes(r[SKETCH_COL]) for r in sketch_partial(
+        wdf.select(F.struct("key", "w").alias("kw")), [], "kw",
+        fam).collect()}
+
+    def fold(pid, rows):
+        part = pd.DataFrame([tuple(r) for r in rows], columns=["key", "w"])
+        st = fam.make()
+        st.add_weighted_series(part["key"], part["w"])
+        yield pid, fam.serialize(st)
+
+    want = dict(wdf.rdd.mapPartitionsWithIndex(fold).collect())
+    assert len(want) == 7 and got == want

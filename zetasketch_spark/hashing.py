@@ -626,6 +626,15 @@ def fingerprint_str_series(series) -> np.ndarray:
     return out
 
 
+def fingerprint_canon_series(values) -> np.ndarray:
+    """The string-canonical key domain of theta, temporal theta and
+    Count-Min: fingerprints of each value's canonical rendering
+    (`canon_key_series`, per value), so sketches of the same logical keys
+    agree across dtypes, batches and fabrics (Arrow's nullable-int ->
+    float64 batch promotion must not fork the domain)."""
+    return fingerprint_str_series(canon_key_series(values))
+
+
 def fingerprint_arrow_array(arr) -> tuple[np.ndarray, np.ndarray | None]:
     """Hash a pyarrow Array zero-copy off its buffers. Returns
     ``(hashes uint64[n], valid bool[n] | None)`` — null slots hold garbage

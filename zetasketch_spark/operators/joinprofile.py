@@ -75,28 +75,19 @@ def _global_cm(df: DataFrame, key: str, width: int, depth: int):
         df, key, CountMinFamily(width=width, depth=depth, max_candidates=8))
 
 
-def _global_sketch(df: DataFrame, key: str, fam, fan_in: int = 64):
+def _global_sketch(df: DataFrame, key: str, fam):
     """One shuffle-free scan -> per-partition partials -> global state
-    (the join_key_profile execution shape, family-generic). Up to
-    ``fan_in`` input partitions the driver merges the partial blobs
-    directly; beyond that the salted executor-side tree
-    (``agg.sketch_merge`` tree_levels=2) folds them first, so the driver
-    never holds O(partitions) states — at 10^5+ partitions a direct
-    collect of ~100KB-per-partition counter blocks is gigabytes."""
-    from zetasketch_spark.operators.agg import (SKETCH_COL, sketch_merge,
+    (the join_key_profile execution shape, family-generic), folded by
+    ``agg.collect_merged_states``: past its fan-in bound the salted
+    executor-side tree folds the partials first, so the driver never
+    holds O(partitions) states — at 10^5+ partitions a direct collect of
+    ~100KB-per-partition counter blocks is gigabytes. Empty input gives
+    ``fam.make()``."""
+    from zetasketch_spark.operators.agg import (collect_merged_states,
                                                 sketch_partial)
 
-    partials = sketch_partial(df, [], key, fam)
-    if df.rdd.getNumPartitions() > fan_in:
-        partials = sketch_merge(partials, [], fam, tree_levels=2,
-                                fan_in=fan_in)
-    acc = None
-    for row in partials.collect():
-        if row[SKETCH_COL] is None:
-            continue
-        part = fam.deserialize(bytes(row[SKETCH_COL]))
-        acc = part if acc is None else fam.merge(acc, part)
-    return acc if acc is not None else fam.make()
+    states = collect_merged_states(sketch_partial(df, [], key, fam), [], fam)
+    return states[()] if states else fam.make()
 
 
 def cs_join_size_estimate(df_a: DataFrame, key_a: str, df_b: DataFrame,

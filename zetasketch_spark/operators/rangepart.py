@@ -50,18 +50,18 @@ BUCKET_COL = "_range_bucket"
 def kll_boundaries(df: DataFrame, col: str, n_parts: int,
                    k: int = 200) -> list[float]:
     """Interior range boundaries (length ``n_parts - 1``) from one
-    KLL pass over ``df[col]`` (numeric)."""
-    from zetasketch_spark.operators.agg import SKETCH_COL, sketch_partial
+    KLL pass over ``df[col]`` (numeric); the partials fold under
+    ``agg.collect_merged_states``' driver fan-in bound."""
+    from zetasketch_spark.operators.agg import (collect_merged_states,
+                                                sketch_partial)
     from zetasketch_spark.sketches.kll import KllFamily
 
     fam = KllFamily(k=k)
-    acc = KllSketch(k=k)
-    for row in sketch_partial(df.select(F.col(col).cast("double")
-                                        .alias(col)), [], col,
-                              fam).collect():
-        if row[SKETCH_COL] is not None:
-            acc.merge(KllSketch.deserialize(bytes(row[SKETCH_COL])))
-    return boundaries_from_sketch(acc, n_parts)
+    states = collect_merged_states(sketch_partial(
+        df.select(F.col(col).cast("double").alias(col)), [], col, fam),
+        [], fam)
+    return boundaries_from_sketch(states[()] if states else fam.make(),
+                                  n_parts)
 
 
 def boundaries_from_sketch(sketch: KllSketch, n_parts: int) -> list[float]:

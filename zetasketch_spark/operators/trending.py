@@ -27,11 +27,13 @@ floating-point:
   effectively does anyway).
 
 Execution shape: one shuffle-free scan builds per-partition WEIGHTED
-Count-Min partials (``CountMinSketch.add_weighted_series`` — the CM
-guarantees hold verbatim with N = total decayed weight), the driver
-merges O(partitions) states, and the exact top-k decayed scores come
-from one integer groupBy-sum — the same candidate-verified pattern as
-``verify.cm_topk_verified``.
+Count-Min partials on the one split kernel (``agg.sketch_partial``
+over a struct<key, weight> column, which ``CountMinFamily`` feeds to
+``CountMinSketch.add_weighted_series`` — the CM guarantees hold
+verbatim with N = total decayed weight), ``agg.collect_merged_states``
+folds them under its driver fan-in bound, and the exact top-k decayed
+scores come from one integer groupBy-sum — the same candidate-verified
+pattern as ``verify.cm_topk_verified``.
 """
 
 from __future__ import annotations
@@ -72,7 +74,11 @@ def decayed_topk_verified(df: DataFrame, key_col: str, ts_col: str,
     Returns ``key, decayed_weight, rank, trend_est_ok,
     trend_in_candidates`` (exactly k rows; fewer only if the input has
     fewer keys with a positive decayed score)."""
-    from zetasketch_spark.sketches.countmin import CountMinSketch
+    from concurrent.futures import ThreadPoolExecutor
+
+    from zetasketch_spark.operators.agg import (collect_merged_states,
+                                                sketch_partial)
+    from zetasketch_spark.sketches.countmin import CountMinFamily
 
     spark = df.sparkSession
     anchor = df.agg(F.max(F.to_date(F.col(ts_col))).alias("d")).collect()[0]["d"]
@@ -91,52 +97,10 @@ def decayed_topk_verified(df: DataFrame, key_col: str, ts_col: str,
         decayed_weight_col(ts_col, anchor, half_life_days, cap).alias("w")) \
         .filter(F.col("key").isNotNull())
 
-    def partial_fn(batches):
-        cm = CountMinSketch(width=width, depth=depth,
-                            max_candidates=max_candidates)
-        seen = False
-        for pdf in batches:
-            if len(pdf):
-                seen = True
-                cm.add_weighted_series(pdf["key"], pdf["w"])
-        if seen:
-            yield pd.DataFrame({"sketch": [cm.serialize()]})
-
-    parts = wdf.mapInPandas(partial_fn, "sketch binary")
-    fan_in = 64
-    if wdf.rdd.getNumPartitions() > fan_in:
-        # bound the driver's fan-in: fold the O(partitions) partial blobs
-        # executor-side first (CM merge is commutative addition and the
-        # weighted Misra-Gries candidate union is order-free, so the
-        # folded state is partitioning-independent)
-        def fold_fn(batches):
-            acc = None
-            for pdf in batches:
-                for b in pdf["sketch"]:
-                    part = CountMinSketch.deserialize(bytes(b))
-                    if acc is None:
-                        acc = part
-                    else:
-                        acc.merge(part)
-            if acc is not None:
-                yield pd.DataFrame({"sketch": [acc.serialize()]})
-
-        parts = parts.repartition(fan_in).mapInPandas(fold_fn,
-                                                      "sketch binary")
-    # the weighted-CM digest and the exact top-k are independent jobs
-    # over the same wdf — submit both from a 2-thread pool so the second
-    # back-fills executors freed by the first's tail (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _collect_parts():
-        acc = None
-        for row in parts.collect():
-            part = CountMinSketch.deserialize(bytes(row["sketch"]))
-            if acc is None:
-                acc = part
-            else:
-                acc.merge(part)
-        return acc
+    fam = CountMinFamily(width=width, depth=depth,
+                         max_candidates=max_candidates)
+    parts = sketch_partial(wdf.select(F.struct("key", "w").alias("kw")), [],
+                           "kw", fam)
 
     # orderBy + limit -> TakeOrderedAndProject (per-partition heaps, no
     # global sort or single-partition rank window over the unbounded key
@@ -147,10 +111,13 @@ def decayed_topk_verified(df: DataFrame, key_col: str, ts_col: str,
                 .orderBy(F.col("decayed_weight").desc(), F.col("key"))
                 .limit(k).collect())
 
+    # the weighted-CM digest and the exact top-k are independent jobs
+    # over the same wdf — submit both from a 2-thread pool so the second
+    # back-fills executors freed by the first's tail (guide §2.6)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        facc = pool.submit(_collect_parts)
+        facc = pool.submit(collect_merged_states, parts, [], fam)
         ftop = pool.submit(_collect_top)
-        acc, top = facc.result(), ftop.result()
+        acc, top = facc.result().get(()), ftop.result()
     if acc is None or acc.total == 0:
         return spark.createDataFrame([], out_schema)
     est = acc.point_query_series(pd.Series([r["key"] for r in top]))

@@ -2,11 +2,11 @@
 group — "how many distinct users were active in the last 1/7/30 days?"
 without a sketch per day bucket or a re-scan per window.
 
-How it scales (the 100 TB shape): stage 1 is the same
-one-pass-per-partition partial build every family uses
-(`operators/agg.py` — shuffle volume O(groups × partitions ×
-state_size), never raw keys), except the update consumes (key, time)
-PAIRS so each retained hash carries its exact last-seen time
+How it scales (the 100 TB shape): stage 1 is the one split kernel every
+family uses (`operators/agg.py::arrow_partials` around
+`fastscan.split_states` — shuffle volume O(groups × partitions ×
+state_size), never raw keys); its value is one struct<key, time> column,
+so each retained hash carries its exact first/last-seen time
 (`sketches/timetheta.py`). Merge reuses `sketch_merge` unchanged
 (blob-level, salted tree for hot groups). Every window answer is then a
 driver-side predicate count over k-sized samples — adding a window
@@ -23,166 +23,113 @@ int64 clock (e.g. epoch micros on TZ-aware tables).
 
 from __future__ import annotations
 
+import datetime
+
 import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from zetasketch_spark.operators.agg import (
-    PARTITION_COL,
-    ROWS_COL,
     SKETCH_COL,
-    _key_fields,
-    sketch_merge,
+    arrow_partials,
+    collect_merged_states,
 )
 from zetasketch_spark.sketches.timetheta import TimeThetaFamily
 
 _TIME_COL = "_tt_time"
+_PAIR_COL = "_tt_pair"
+_EPOCH = datetime.date(1970, 1, 1)
 
 
 def timetheta_partial(df: DataFrame, keys: list[str], key_col: str,
-                      time_col: str, family: TimeThetaFamily,
-                      use_arrow: bool | None = None) -> DataFrame:
+                      time_col: str, family: TimeThetaFamily) -> DataFrame:
     """Stage 1 for (key, time) pairs: per-(partition, group) temporal
-    theta partials. Output schema matches `operators.agg.sketch_partial`
-    so `sketch_merge`/`sketch_result` compose unchanged.
-
-    STRING (or dictionary-of-string) key columns take the `mapInArrow`
-    path by default: keys are fingerprinted straight off the Arrow
-    buffers (never materialized as Python objects — the same zero-copy
-    kernel as `ThetaFamily.prepare_arrow`), times read as int64 with the
-    joint validity mask applied before `add_pairs`. State-equal to the
-    pandas path by construction (both feed the same canonical hash
-    domain); other key types use the pandas fallback."""
-    out_schema = StructType(
-        _key_fields(df, keys)
-        + [StructField(SKETCH_COL, BinaryType()),
-           StructField(ROWS_COL, LongType()),
-           StructField(PARTITION_COL, IntegerType())]
-    )
-    keys_t = tuple(keys)
-
-    if use_arrow is None:
-        use_arrow = df.schema[key_col].dataType.simpleString() == "string"
-    if use_arrow:
-        return _timetheta_partial_arrow(df, keys, key_col, time_col,
-                                        family, out_schema)
-
-    def partial_fn(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        acc: dict = {}
-        rows: dict = {}
-        for pdf in batches:
-            if len(keys_t) == 0:
-                grouped = [((), pdf)]
-            else:
-                grouped = pdf.groupby(list(keys_t), sort=False, dropna=False)
-            for key, grp in grouped:
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                family.update_pair(state, grp[key_col], grp[time_col])
-                rows[key] += len(grp)
-        if acc:
-            yield pd.DataFrame(
-                [[*k, family.serialize(s), rows[k], pid]
-                 for k, s in acc.items()],
-                columns=[*keys_t, SKETCH_COL, ROWS_COL, PARTITION_COL],
-            )
-
-    return df.select(*keys, key_col, time_col).mapInPandas(
-        partial_fn, out_schema)
-
-
-def _timetheta_partial_arrow(df: DataFrame, keys: list[str], key_col: str,
-                             time_col: str, family: TimeThetaFamily,
-                             out_schema: StructType) -> DataFrame:
-    import numpy as np
-
-    keys_t = tuple(keys)
-
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from zetasketch_spark.hashing import fingerprint_arrow_array
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        acc: dict = {}
-        rows: dict = {}
-        for batch in batches:
-            karr = batch.column(batch.schema.get_field_index(key_col))
-            tarr = batch.column(batch.schema.get_field_index(time_col))
-            hashes, kvalid = fingerprint_arrow_array(karr)
-            hashes = np.asarray(hashes)
-            # int64 with nulls comes back float64+NaN; null times drop
-            # (same rule as add_series)
-            tnp = tarr.to_numpy(zero_copy_only=False)
-            valid = (np.ones(len(hashes), dtype=bool) if kvalid is None
-                     else kvalid.copy())
-            if tnp.dtype.kind == "f":
-                valid &= ~np.isnan(tnp)
-                tnp = np.where(valid, tnp, 0).astype(np.int64)
-            else:
-                tnp = tnp.astype(np.int64, copy=False)
-            if keys_t:
-                kpdf = pa.Table.from_batches([batch]) \
-                    .select(list(keys_t)).to_pandas()
-                groups = kpdf.groupby(list(keys_t), sort=False,
-                                      dropna=False).indices
-            else:
-                groups = {(): np.arange(batch.num_rows)}
-            for key, idx in groups.items():
-                if not isinstance(key, tuple):
-                    key = (key,)
-                state = acc.get(key)
-                if state is None:
-                    state = family.make()
-                    acc[key] = state
-                    rows[key] = 0
-                m = valid[idx]
-                take = idx[m] if not m.all() else idx
-                state.num_values += int(len(take))
-                state.add_pairs(hashes[take], tnp[take])
-                rows[key] += len(idx)
-        if acc:
-            out = pd.DataFrame(
-                [[*k, family.serialize(s), rows[k], pid]
-                 for k, s in acc.items()],
-                columns=[*keys_t, SKETCH_COL, ROWS_COL, PARTITION_COL],
-            )
-            yield pa.RecordBatch.from_pandas(
-                out, schema=to_arrow_schema(out_schema),
-                preserve_index=False)
-
-    return df.select(*keys, key_col, time_col).mapInArrow(fn, out_schema)
-
-
-def timetheta_agg(df: DataFrame, keys: list[str], key_col: str,
-                  time_col: str, k: int = 4096,
-                  tree_levels: int = 2) -> DataFrame:
-    """partial → salted-tree merge; returns (keys..., sketch, rows_seen)
-    with one serialized `TimeThetaSketch` per group."""
-    fam = TimeThetaFamily(k=k)
-    partials = timetheta_partial(df, keys, key_col, time_col, fam)
-    return sketch_merge(partials, keys, fam, tree_levels=tree_levels)
+    theta partials from the one split kernel, whose value is the
+    struct<key, time> column ``TimeThetaFamily.prepare_arrow`` reads.
+    Output schema is `operators.agg.sketch_partial`'s, so
+    `sketch_merge`/`sketch_result` compose unchanged."""
+    pair = F.struct(F.col(key_col), F.col(time_col).cast("bigint"))
+    return arrow_partials(df.select(*keys, pair.alias(_PAIR_COL)), keys,
+                          {SKETCH_COL: (_PAIR_COL, family)})
 
 
 _SCHEMA = ("window_days int, as_of_day string, active bigint, sd double, "
            "new_keys bigint, sd_new double, "
            "total_distinct bigint, rse double")
+_AGE_SCHEMA = ("bucket string, as_of_day string, last_seen bigint, "
+               "first_seen bigint, rse double")
+
+
+def _days(values, what: str) -> list[int]:
+    """Sorted distinct day counts, checked before any scan or read (an
+    invalid window must fail even on empty input, ADVICE r5)."""
+    days = sorted({int(v) for v in values})
+    if not days or days[0] < 1:
+        raise ValueError(f"{what} must be >= 1 day, got {days}")
+    return days
+
+
+def _day_number(iso: str) -> int:
+    return (datetime.date.fromisoformat(iso) - _EPOCH).days
+
+
+def _iso(day: int) -> str:
+    return (_EPOCH + datetime.timedelta(days=day)).isoformat()
+
+
+def _rendered(gcols: list[str]) -> list[Column]:
+    """Group values as strings with nulls as '(null)', the
+    `retention_report` convention."""
+    return [F.coalesce(F.col(g).cast("string"), F.lit("(null)")).alias(g)
+            for g in gcols]
+
+
+def _group_states(df: DataFrame, key_col: str, ts_col: str, k: int,
+                  as_of: str | None, gcols: list[str],
+                  time_expr: Column | None):
+    """``(as_of_day, {group: merged TimeThetaSketch})`` for the reports:
+    one keyed select (groups `_rendered`), the as-of day (default: the
+    data's max day, one column-pruned scan) and the per-group states
+    (``(0, {})`` when no row has a time), folded driver-side under
+    `collect_merged_states`' fan-in bound (one k-row sketch per group —
+    groups are a schema/domain-bounded dimension, not data-scale)."""
+    day = (time_expr if time_expr is not None
+           else F.unix_date(F.to_date(F.col(ts_col))))
+    keyed = df.select(
+        *_rendered(gcols), F.col(key_col),
+        day.cast("bigint").alias(_TIME_COL),
+    ).filter(F.col(_TIME_COL).isNotNull())
+    if as_of is None:
+        m = keyed.agg(F.max(_TIME_COL)).collect()[0][0]
+        if m is None:
+            return 0, {}
+        as_of_day = int(m)
+    else:
+        as_of_day = _day_number(as_of)
+    fam = TimeThetaFamily(k=k)
+    return as_of_day, collect_merged_states(
+        timetheta_partial(keyed, gcols, key_col, _TIME_COL, fam), gcols, fam)
+
+
+def _frame(spark, gcols: list[str], schema: str, rows: list) -> DataFrame:
+    cols = [*gcols, *[c.split()[0] for c in schema.split(", ")]]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=cols) if rows else [],
+        schema=", ".join([f"`{g}` string" for g in gcols] + [schema]))
+
+
+def _window_rows(sketches: dict, windows: list[int],
+                 as_of_day: int) -> list:
+    rows = []
+    for g in sorted(sketches):
+        sk = sketches[g]
+        for w in windows:
+            lo = as_of_day - w + 1
+            rows.append([*g, w, _iso(as_of_day), sk.estimate_since(lo),
+                         float(sk.estimate_sd_since(lo)),
+                         sk.estimate_new_since(lo),
+                         float(sk.estimate_sd_new_since(lo)),
+                         sk.estimate(), float(sk.rse())])
+    return rows
 
 
 def window_activity_report(df: DataFrame, key_col: str, ts_col: str,
@@ -217,66 +164,12 @@ def window_activity_report(df: DataFrame, key_col: str, ts_col: str,
     counts, which a (first, last)-timestamp summary cannot answer
     exactly. Snapshot the table daily (``window_activity_from_table``)
     when exact historical windows matter."""
-    import datetime
-
-    spark = df.sparkSession
     gcols = list(group_keys)
-    # validate BEFORE the scan/merge pipeline (and even on empty input):
-    # an invalid window used to fail only after the expensive job ran,
-    # and was silently accepted when the input had no groups (ADVICE r5)
-    windows = sorted({int(w) for w in windows})
-    if not windows or windows[0] < 1:
-        raise ValueError(f"windows must be >= 1 day, got {windows}")
-    day = (time_expr if time_expr is not None
-           else F.unix_date(F.to_date(F.col(ts_col))))
-    keyed = df.select(
-        *[F.coalesce(F.col(g).cast("string"), F.lit("(null)")).alias(g)
-          for g in gcols],
-        F.col(key_col),
-        day.cast("bigint").alias(_TIME_COL),
-    ).filter(F.col(_TIME_COL).isNotNull())
-
-    if as_of is None:
-        row = keyed.agg(F.max(_TIME_COL).alias("m")).collect()[0]
-        if row["m"] is None:
-            return spark.createDataFrame(
-                [], schema=", ".join([f"`{g}` string" for g in gcols]
-                                     + [_SCHEMA]))
-        as_of_day = int(row["m"])
-    else:
-        as_of_day = (datetime.date.fromisoformat(as_of)
-                     - datetime.date(1970, 1, 1)).days
-
-    fam = TimeThetaFamily(k=k)
-    # bounded driver state: one k-row sketch per group (groups are a
-    # schema/domain-bounded dimension, not data-scale); partials fold
-    # driver-side under collect_merged_states' fan_in bound (r6)
-    from zetasketch_spark.operators.agg import collect_merged_states
-
-    sketches = collect_merged_states(
-        timetheta_partial(keyed, gcols, key_col, _TIME_COL, fam),
-        gcols, fam)
-
-    as_of_iso = (datetime.date(1970, 1, 1)
-                 + datetime.timedelta(days=as_of_day)).isoformat()
-    rows = []
-    for g in sorted(sketches):
-        sk = sketches[g]
-        for w in windows:
-            lo = as_of_day - w + 1
-            rows.append([*g, w, as_of_iso, sk.estimate_since(lo),
-                         float(sk.estimate_sd_since(lo)),
-                         sk.estimate_new_since(lo),
-                         float(sk.estimate_sd_new_since(lo)),
-                         sk.estimate(), float(sk.rse())])
-    schema = ", ".join([f"`{g}` string" for g in gcols] + [_SCHEMA])
-    cols = [*gcols, *[c.split()[0] for c in _SCHEMA.split(", ")]]
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=cols) if rows else [], schema=schema)
-
-
-_AGE_SCHEMA = ("bucket string, as_of_day string, last_seen bigint, "
-               "first_seen bigint, rse double")
+    windows = _days(windows, "windows")
+    as_of_day, sketches = _group_states(df, key_col, ts_col, k, as_of,
+                                        gcols, time_expr)
+    return _frame(df.sparkSession, gcols, _SCHEMA,
+                  _window_rows(sketches, windows, as_of_day))
 
 
 def activity_age_report(df: DataFrame, key_col: str, ts_col: str,
@@ -293,62 +186,26 @@ def activity_age_report(df: DataFrame, key_col: str, ts_col: str,
     total distinct (up to per-bucket rounding) — the operational
     "how stale is my population" report, from the same temporal theta
     states as `window_activity_report`."""
-    import datetime
-
-    spark = df.sparkSession
     gcols = list(group_keys)
-    edges = sorted({int(e) for e in edges})
-    if not edges or edges[0] < 1:
-        raise ValueError(f"edges must be >= 1 day, got {edges}")
-    day = (time_expr if time_expr is not None
-           else F.unix_date(F.to_date(F.col(ts_col))))
-    keyed = df.select(
-        *[F.coalesce(F.col(g).cast("string"), F.lit("(null)")).alias(g)
-          for g in gcols],
-        F.col(key_col),
-        day.cast("bigint").alias(_TIME_COL),
-    ).filter(F.col(_TIME_COL).isNotNull())
-
-    if as_of is None:
-        row = keyed.agg(F.max(_TIME_COL).alias("m")).collect()[0]
-        if row["m"] is None:
-            return spark.createDataFrame(
-                [], schema=", ".join([f"`{g}` string" for g in gcols]
-                                     + [_AGE_SCHEMA]))
-        as_of_day = int(row["m"])
-    else:
-        as_of_day = (datetime.date.fromisoformat(as_of)
-                     - datetime.date(1970, 1, 1)).days
-
-    fam = TimeThetaFamily(k=k)
-    from zetasketch_spark.operators.agg import collect_merged_states
-
-    sketches = collect_merged_states(
-        timetheta_partial(keyed, gcols, key_col, _TIME_COL, fam),
-        gcols, fam)
-
-    # boundaries in day units: band i = [bound[i-1]+1 .. bound[i]] days
-    # old; recency_counts/cohort_counts bucket by time >= boundary
-    bounds = [as_of_day - e + 1 for e in edges]  # descending day numbers
+    edges = _days(edges, "edges")
+    as_of_day, sketches = _group_states(df, key_col, ts_col, k, as_of,
+                                        gcols, time_expr)
+    # band i = [edges[i-1]+1 .. edges[i]] days old; the bucket kernels
+    # take ascending day boundaries and bucket by time >= boundary
+    asc = sorted(as_of_day - e + 1 for e in edges)
     labels = ([f"<={edges[0]}d"]
               + [f"{edges[i - 1] + 1}-{edges[i]}d"
                  for i in range(1, len(edges))]
               + [f">{edges[-1]}d"])
-    as_of_iso = (datetime.date(1970, 1, 1)
-                 + datetime.timedelta(days=as_of_day)).isoformat()
     rows = []
     for g in sorted(sketches):
         sk = sketches[g]
-        asc = sorted(bounds)  # ascending for the bucket kernels
         rec = sk.recency_counts(asc)[::-1]  # newest band first
         coh = sk.cohort_counts(asc)[::-1]
         for label, r_, c_ in zip(labels, rec, coh):
-            rows.append([*g, label, as_of_iso, int(r_), int(c_),
+            rows.append([*g, label, _iso(as_of_day), int(r_), int(c_),
                          float(sk.rse())])
-    schema = ", ".join([f"`{g}` string" for g in gcols] + [_AGE_SCHEMA])
-    cols = [*gcols, *[c.split()[0] for c in _AGE_SCHEMA.split(", ")]]
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=cols) if rows else [], schema=schema)
+    return _frame(df.sparkSession, gcols, _AGE_SCHEMA, rows)
 
 
 def window_activity_from_table(spark, table, as_of: str,
@@ -357,43 +214,28 @@ def window_activity_from_table(spark, table, as_of: str,
     """The report, answered from an incrementally-maintained timetheta
     `SketchTable` (`operators/incremental.py`) instead of a fresh scan:
     read the (time-travelable) snapshot's per-group states — one compact
-    row per group — and emit the same rows as `window_activity_report`.
-    This is the daily-maintenance shape: fold today's delta
-    (`timetheta_partial` + ``update(delta_is_partials=True)``), then
-    answer any window from the table without touching history.
+    row per group — and emit the same rows as `window_activity_report`
+    (same row builder, group values rendered the same way). This is the
+    daily-maintenance shape: fold today's delta (`timetheta_partial` +
+    ``update(delta_is_partials=True)``), then answer any window from the
+    table without touching history.
 
     ``as_of`` (ISO date) is REQUIRED: the true max event day is a
     property of the full input that a sampled state cannot certify
     (the max over retained rows can under-read when the newest day's
     keys all hashed above theta), and the maintenance pipeline knows
     its data cutoff exactly — pass that."""
-    import datetime
-
-    from zetasketch_spark.operators.agg import SKETCH_COL
     from zetasketch_spark.sketches.timetheta import TimeThetaSketch
 
-    snap = table.read(spark, version=version)
+    windows = _days(windows, "windows")
     gcols = list(table.keys)
-    as_of_day = (datetime.date.fromisoformat(as_of)
-                 - datetime.date(1970, 1, 1)).days
-    rows = []
+    snap = table.read(spark, version=version)
+    sketches = {}
     if snap is not None:
         sketches = {
-            tuple(str(r[c]) for c in gcols):
+            tuple(r[g] for g in gcols):
                 TimeThetaSketch.deserialize(bytes(r[SKETCH_COL]))
-            for r in snap.collect() if r[SKETCH_COL] is not None}
-        for g in sorted(sketches):
-            sk = sketches[g]
-            for w in sorted({int(w) for w in windows}):
-                if w < 1:
-                    raise ValueError(f"windows must be >= 1 day, got {w}")
-                lo = as_of_day - w + 1
-                rows.append([*g, w, as_of, sk.estimate_since(lo),
-                             float(sk.estimate_sd_since(lo)),
-                             sk.estimate_new_since(lo),
-                             float(sk.estimate_sd_new_since(lo)),
-                             sk.estimate(), float(sk.rse())])
-    schema = ", ".join([f"`{g}` string" for g in gcols] + [_SCHEMA])
-    cols = [*gcols, *[c.split()[0] for c in _SCHEMA.split(", ")]]
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=cols) if rows else [], schema=schema)
+            for r in snap.select(*_rendered(gcols), SKETCH_COL).collect()
+            if r[SKETCH_COL] is not None}
+    return _frame(spark, gcols, _SCHEMA,
+                  _window_rows(sketches, windows, _day_number(as_of)))

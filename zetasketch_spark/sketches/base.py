@@ -137,6 +137,19 @@ class _HashPrepared:
         return h[self.valid[idx]]
 
 
+class _PairPrepared:
+    """A struct<a, b> value's two prepared fields, sliced together."""
+
+    __slots__ = ("a", "b")
+
+    def __init__(self, a, b):
+        self.a = a
+        self.b = b
+
+    def __getitem__(self, idx):
+        return self.a[idx], self.b[idx]
+
+
 class HllFamily(SketchFamily):
     """HyperLogLog++ approximate COUNT DISTINCT (reference parity core)."""
 

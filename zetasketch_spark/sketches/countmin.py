@@ -24,26 +24,14 @@ import numpy as np
 import pandas as pd
 
 from zetasketch_spark.hashing import (
-    fingerprint_int_array,
-    fingerprint_long_array,
+    canon_key_series,
+    fingerprint_canon_series,
     fingerprint_str_series,
 )
 from zetasketch_spark.sketches.base import SketchFamily, register_family
 
 _MAGIC = b"CMS2"
 _ENCODING_VERSION = 1
-
-
-def _hash_series(values: pd.Series) -> np.ndarray:
-    """CM hashes every key through its STRING form — one canonical
-    PER-VALUE rendering (`hashing.canon_key_series`), so updates, point
-    queries, and the candidate set always address the same counter cells
-    regardless of the column's dtype OR which batch carried the value
-    (Arrow's nullable-int -> float64 promotion must not fork the
-    domain)."""
-    from zetasketch_spark.hashing import canon_key_series
-
-    return fingerprint_str_series(canon_key_series(values))
 
 
 class CountMinSketch:
@@ -62,31 +50,12 @@ class CountMinSketch:
     # -- update --------------------------------------------------------------
 
     def add_series(self, values: pd.Series) -> None:
-        from zetasketch_spark.hashing import canon_key_series
-
         values = values.dropna()
         if len(values) == 0:
             return
         # aggregate duplicates within the batch first (value_counts on the
-        # RAW dtype — int64 groupby is far cheaper than string groupby),
-        # then canonicalize only the UNIQUE keys: canon is a pure per-value
-        # function, so counter cells and candidate keys still share one
-        # rendering across batches (see _hash_series). An object batch can
-        # in principle hold values that only collide post-canon (7 vs
-        # '7'), so re-group if the canonical index is not unique.
-        vc = values.value_counts()
-        vc.index = canon_key_series(pd.Series(vc.index.to_numpy())).to_numpy()
-        if not vc.index.is_unique:
-            vc = vc.groupby(level=0).sum()
-        counts = vc.to_numpy(dtype=np.int64)
-        self._add_hashed(fingerprint_str_series(vc.index.to_series()), counts)
-        self.total += int(counts.sum())
-        # fold the WHOLE batch into the candidate summary vectorized (no
-        # per-key Python loop), then apply the Misra-Gries decrement prune
-        cur = pd.Series(self.candidates, dtype="int64")
-        merged = vc.add(cur, fill_value=0).astype("int64") if len(cur) else vc
-        self.candidates = {str(k): int(v) for k, v in
-                           self._mg_prune_series(merged).items()}
+        # RAW dtype — int64 groupby is far cheaper than string groupby)
+        self._add_counts(values.value_counts())
 
     def add_weighted_series(self, keys: pd.Series, weights: pd.Series) -> None:
         """Weighted update: key k contributes weight w instead of 1 —
@@ -98,23 +67,31 @@ class CountMinSketch:
         dropped. Keys feed the counters in sorted canonical order
         (groupby); counters, total and candidate content do not depend
         on that order."""
-        from zetasketch_spark.hashing import canon_key_series
-
         keys = pd.Series(keys)
         weights = pd.Series(weights)
         mask = keys.notna() & weights.notna() & (weights > 0)
         keys, weights = keys[mask], weights[mask].astype("int64")
         if len(keys) == 0:
             return
-        ws = weights.groupby(keys.to_numpy()).sum()
-        ws.index = canon_key_series(pd.Series(ws.index.to_numpy())).to_numpy()
-        if not ws.index.is_unique:
-            ws = ws.groupby(level=0).sum()
-        counts = ws.to_numpy(dtype=np.int64)
-        self._add_hashed(fingerprint_str_series(ws.index.to_series()), counts)
+        self._add_counts(weights.groupby(keys.to_numpy()).sum())
+
+    def _add_counts(self, vc: pd.Series) -> None:
+        """Absorb per-raw-key counts: canonicalize only the UNIQUE keys —
+        canon is a pure per-value function, so counter cells, point
+        queries and candidate keys share one rendering across batches and
+        dtypes (`hashing.fingerprint_canon_series`). An object batch can
+        in principle hold values that only collide post-canon (7 vs '7'),
+        so re-group if the canonical index is not unique."""
+        vc.index = canon_key_series(pd.Series(vc.index.to_numpy())).to_numpy()
+        if not vc.index.is_unique:
+            vc = vc.groupby(level=0).sum()
+        counts = vc.to_numpy(dtype=np.int64)
+        self._add_hashed(fingerprint_str_series(vc.index.to_series()), counts)
         self.total += int(counts.sum())
+        # fold the WHOLE batch into the candidate summary vectorized (no
+        # per-key Python loop), then apply the Misra-Gries decrement prune
         cur = pd.Series(self.candidates, dtype="int64")
-        merged = ws.add(cur, fill_value=0).astype("int64") if len(cur) else ws
+        merged = vc.add(cur, fill_value=0).astype("int64") if len(cur) else vc
         self.candidates = {str(k): int(v) for k, v in
                            self._mg_prune_series(merged).items()}
 
@@ -149,7 +126,7 @@ class CountMinSketch:
     # -- query ---------------------------------------------------------------
 
     def point_query_series(self, keys: pd.Series) -> np.ndarray:
-        hashes = _hash_series(keys)
+        hashes = fingerprint_canon_series(keys)
         h1 = hashes & np.uint64(0xFFFFFFFF)
         h2 = (hashes >> np.uint64(32)) | np.uint64(1)
         est = np.full(len(keys), np.iinfo(np.int64).max, dtype=np.int64)
@@ -245,6 +222,26 @@ class CountMinFamily(SketchFamily):
 
     def update(self, state, values):
         state.add_series(values)
+        return state
+
+    def prepare_arrow(self, arr):
+        """A struct<key, weight> value slices to ``(keys, weights)``
+        pandas pairs for ``add_weighted_series`` (`operators/trending.py`)."""
+        import pyarrow as pa
+
+        if pa.types.is_struct(arr.type):
+            from zetasketch_spark.sketches.base import (_PairPrepared,
+                                                        _SeriesPrepared)
+
+            return _PairPrepared(*(_SeriesPrepared(f.to_pandas())
+                                   for f in arr.flatten()))
+        return super().prepare_arrow(arr)
+
+    def update_prepared(self, state, prepared_slice):
+        if isinstance(prepared_slice, tuple):
+            state.add_weighted_series(*prepared_slice)
+        else:
+            state.add_series(prepared_slice)
         return state
 
     def merge(self, a, b):

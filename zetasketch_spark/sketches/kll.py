@@ -26,6 +26,8 @@ from zetasketch_spark.sketches.base import SketchFamily, register_family
 _MAGIC = b"KLL2"
 _ENCODING_VERSION = 1
 _C = 2.0 / 3.0
+_MAX_K = 65535  # the published KLL range (Apache DataSketches: 8..65535)
+_MAX_LEVELS = 63  # level h weighs 2^h, an int64
 
 
 class KllSketch:
@@ -33,6 +35,8 @@ class KllSketch:
                  "encoding_version")
 
     def __init__(self, k: int = 200):
+        if not 8 <= k <= _MAX_K:
+            raise ValueError(f"KLL needs 8 <= k <= {_MAX_K}, got {k}")
         self.k = k
         self.levels: list[np.ndarray] = [np.empty(0, dtype=np.float64)]
         self.n = 0
@@ -151,24 +155,39 @@ class KllSketch:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "KllSketch":
+        """Parse a serialized state; a blob this module could not have
+        written (k out of range, n < 0, an impossible level count, a
+        level running past the buffer, truncation anywhere) raises
+        ValueError, never a bare ``struct.error`` or a silent short
+        parse."""
         from zetasketch_spark.sketches.wire import read_header
 
         version, off = read_header(data, _MAGIC, "KLL")
-        k, n, nlev, ctr, mn, mx = struct.unpack_from("<iqiqdd", data, off)
-        off += struct.calcsize("<iqiqdd")
-        sk = cls(k=k)
+        try:
+            k, n, nlev, ctr, mn, mx = struct.unpack_from("<iqiqdd", data, off)
+            off += struct.calcsize("<iqiqdd")
+            if n < 0 or not 0 <= nlev <= _MAX_LEVELS:
+                raise ValueError(
+                    f"corrupt KLL sketch: n={n} with {nlev} levels")
+            sk = cls(k=k)
+            levels = []
+            for _ in range(nlev):
+                (ln,) = struct.unpack_from("<i", data, off)
+                off += 4
+                if ln < 0 or off + 8 * ln > len(data):
+                    raise ValueError(
+                        f"corrupt KLL sketch: a level of {ln} items runs "
+                        f"past the {len(data)}-byte blob")
+                levels.append(np.frombuffer(data, dtype=np.float64, count=ln,
+                                            offset=off).copy())
+                off += ln * 8
+        except struct.error as e:
+            raise ValueError(f"truncated KLL sketch: {e}") from None
         sk.encoding_version = version  # trailing bytes ignored (forward compat)
         sk.n = n
         sk._rng_counter = ctr
         sk._min, sk._max = mn, mx
-        sk.levels = []
-        for _ in range(nlev):
-            (ln,) = struct.unpack_from("<i", data, off)
-            off += 4
-            sk.levels.append(np.frombuffer(data, dtype=np.float64, count=ln, offset=off).copy())
-            off += ln * 8
-        if not sk.levels:
-            sk.levels = [np.empty(0, dtype=np.float64)]
+        sk.levels = levels or [np.empty(0, dtype=np.float64)]
         return sk
 
 

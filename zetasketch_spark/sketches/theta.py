@@ -40,7 +40,7 @@ import struct
 import numpy as np
 import pandas as pd
 
-from zetasketch_spark.hashing import fingerprint_str_series
+from zetasketch_spark.hashing import fingerprint_canon_series
 from zetasketch_spark.sketches.base import SketchFamily, register_family
 
 _MAGIC = b"THT2"
@@ -48,15 +48,28 @@ _ENCODING_VERSION = 1
 _FULL = 1 << 64  # theta of an exact-mode sketch (no hash discarded)
 
 
-def _hash_series(values: pd.Series) -> np.ndarray:
-    """String-canonical key domain, same rule as Count-Min/Bloom: one
-    PER-VALUE canonical rendering (`hashing.canon_key_series`) for every
-    dtype, so cross-column/cross-fabric/cross-batch sketches of the same
-    logical keys intersect correctly (Arrow's nullable-int -> float64
-    batch promotion must not fork the domain)."""
-    from zetasketch_spark.hashing import canon_key_series
+def arrow_key_hashes(arr) -> tuple[np.ndarray, np.ndarray | None]:
+    """``(hashes, valid)`` of an Arrow key column, once per batch. STRING
+    columns (and dictionary-of-string — parquet's default for repetitive
+    keys) hash zero-copy off the Arrow buffers: a string is its own
+    canonical rendering, so this is byte-equal to the pandas path. Other
+    types hash their canonical rendering from one pandas Series;
+    ``valid`` masks nulls and, as ``Series.dropna`` does, NaN."""
+    import pyarrow as pa
 
-    return fingerprint_str_series(canon_key_series(values))
+    typ = arr.type
+    base_t = typ.value_type if pa.types.is_dictionary(typ) else typ
+    if pa.types.is_string(base_t) or pa.types.is_large_string(base_t):
+        from zetasketch_spark.hashing import fingerprint_arrow_array
+
+        hashes, valid = fingerprint_arrow_array(arr)
+        return np.asarray(hashes), valid
+    values = arr.to_pandas()
+    valid = values.notna().to_numpy()
+    hashes = np.zeros(len(values), dtype=np.uint64)
+    if valid.any():
+        hashes[valid] = fingerprint_canon_series(values[valid])
+    return hashes, None if valid.all() else valid
 
 
 class ThetaSketch:
@@ -78,7 +91,7 @@ class ThetaSketch:
         if len(values) == 0:
             return
         self.num_values += len(values)
-        self.add_hashes(_hash_series(values))
+        self.add_hashes(fingerprint_canon_series(values))
 
     def add_hashes(self, hashes: np.ndarray) -> None:
         hashes = np.asarray(hashes, dtype=np.uint64)
@@ -241,30 +254,14 @@ class ThetaFamily(SketchFamily):
         return state
 
     def prepare_arrow(self, arr):
-        """STRING columns (and dictionary-of-string — parquet's default
-        for repetitive keys) hash zero-copy off the Arrow buffers: a
-        string is its own canonical rendering, so this is byte-equal to
-        the pandas path. Every other type falls back to the generic
-        per-batch pandas materialization + canon (the rendering rules
-        live in one place, `hashing.canon_key_series`)."""
-        import pyarrow as pa
+        from zetasketch_spark.sketches.base import _HashPrepared
 
-        typ = arr.type
-        base_t = typ.value_type if pa.types.is_dictionary(typ) else typ
-        if pa.types.is_string(base_t) or pa.types.is_large_string(base_t):
-            from zetasketch_spark.hashing import fingerprint_arrow_array
-            from zetasketch_spark.sketches.base import _HashPrepared
+        return _HashPrepared(*arrow_key_hashes(arr))
 
-            hashes, valid = fingerprint_arrow_array(arr)
-            return _HashPrepared(np.asarray(hashes), valid)
-        return super().prepare_arrow(arr)
-
-    def update_prepared(self, state, prepared_slice):
-        if isinstance(prepared_slice, np.ndarray):  # pre-hashed strings
-            state.num_values += len(prepared_slice)
-            state.add_hashes(prepared_slice)
-            return state
-        return super().update_prepared(state, prepared_slice)
+    def update_prepared(self, state, hashes):
+        state.num_values += len(hashes)
+        state.add_hashes(hashes)
+        return state
 
     def merge(self, a, b):
         a.merge(b)

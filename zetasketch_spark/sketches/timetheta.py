@@ -65,20 +65,12 @@ import struct
 import numpy as np
 import pandas as pd
 
+from zetasketch_spark.hashing import fingerprint_canon_series
 from zetasketch_spark.sketches.base import SketchFamily, register_family
 
 _MAGIC = b"TTH2"
 _ENCODING_VERSION = 1
 _FULL = 1 << 64  # theta of an exact-mode sketch (no hash discarded)
-
-
-def _hash_series(values: pd.Series) -> np.ndarray:
-    """Same string-canonical key domain as theta/Count-Min/Bloom
-    (`hashing.canon_key_series`), so temporal sketches of the same
-    logical keys agree with the plain theta family across fabrics."""
-    from zetasketch_spark.hashing import canon_key_series, fingerprint_str_series
-
-    return fingerprint_str_series(canon_key_series(values))
 
 
 class TimeThetaSketch:
@@ -111,7 +103,8 @@ class TimeThetaSketch:
         self.num_values += int(len(keys))
         # null-free after the mask; integral float64 batches (Arrow's
         # nullable-int promotion) cast back exactly
-        self.add_pairs(_hash_series(keys), times.to_numpy(dtype=np.int64))
+        self.add_pairs(fingerprint_canon_series(keys),
+                       times.to_numpy(dtype=np.int64))
 
     def add_pairs(self, hashes: np.ndarray, times: np.ndarray) -> None:
         """Vectorized: filter under theta, then a sort-based
@@ -321,11 +314,11 @@ class TimeThetaSketch:
 
 
 class TimeThetaFamily(SketchFamily):
-    """Aggregator-contract family. The generic single-column harness
-    cannot feed (key, time) pairs, so the dedicated partial stage lives
-    in `operators/window_distinct.py::timetheta_partial`; merge/result
-    stages reuse `operators/agg.sketch_merge` / `sketch_result`
-    unchanged (they only touch serialized blobs)."""
+    """Aggregator-contract family over (key, time) pairs: one
+    struct<key, time> column on the split kernel
+    (`operators/window_distinct.py::timetheta_partial` builds it), or
+    ``update_pair`` over two pandas Series (SQL ``tt_init_agg``,
+    streaming)."""
 
     name = "timetheta"
     result_fields = [("estimate", "bigint")]
@@ -338,9 +331,37 @@ class TimeThetaFamily(SketchFamily):
 
     def update(self, state, values):
         raise TypeError(
-            "TimeThetaFamily needs (key, time) pairs; use update_pair() "
-            "via operators.window_distinct.timetheta_partial, not the "
-            "single-column harness")
+            "TimeThetaFamily needs (key, time) pairs: sketch one "
+            "struct<key, time> column (operators.window_distinct."
+            "timetheta_partial builds it) or call update_pair(state, "
+            "keys, times)")
+
+    def prepare_arrow(self, arr):
+        """Keys hash as ``ThetaFamily``'s do, times read as int64; one
+        validity mask drops a row whose key or time is null."""
+        import pyarrow as pa
+
+        from zetasketch_spark.sketches.base import _HashPrepared, _PairPrepared
+        from zetasketch_spark.sketches.theta import arrow_key_hashes
+
+        if not pa.types.is_struct(arr.type):
+            return self.update(None, arr)  # raises: a pair is required
+        keys, times = arr.flatten()
+        hashes, valid = arrow_key_hashes(keys)
+        if times.null_count:
+            tvalid = np.asarray(times.is_valid())
+            valid = tvalid if valid is None else valid & tvalid
+            times = times.fill_null(0)
+        times = np.asarray(times.to_numpy(zero_copy_only=False),
+                           dtype=np.int64)
+        return _PairPrepared(_HashPrepared(hashes, valid),
+                             _HashPrepared(times, valid))
+
+    def update_prepared(self, state, pair):
+        hashes, times = pair
+        state.num_values += len(hashes)
+        state.add_pairs(hashes, times)
+        return state
 
     def update_pair(self, state, keys, times):
         state.add_series(keys, times)

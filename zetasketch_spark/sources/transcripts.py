@@ -179,6 +179,11 @@ def generate_transcripts(n_turns: int, seed: int = 42,
     return pa.Table.from_arrays(cols, schema=SCHEMA)
 
 
+# peak RSS of one part writer per generated turn (measured: 4.3 KB at
+# 200k turns), which sizes the writer pool to the free memory
+_PEAK_BYTES_PER_TURN = 4400
+
+
 def write_transcripts_parquet(path: str, n_turns: int, seed: int = 42,
                               n_convs: int | None = None,
                               rows_per_file: int = 2_000_000,
@@ -213,10 +218,18 @@ def write_transcripts_parquet(path: str, n_turns: int, seed: int = 42,
         written += chunk
         part += 1
     if len(jobs) > 1:
+        # a writer the OOM killer takes must fail the build with
+        # BrokenProcessPool, not hang it (multiprocessing.Pool.map waits
+        # forever on a lost task)
+        from concurrent.futures import ProcessPoolExecutor
         from multiprocessing import get_context
 
-        with get_context("fork").Pool(min(16, len(jobs))) as pool:
-            pool.map(_write_one_part, jobs)
+        free = os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        workers = min(len(jobs), os.cpu_count() or 1,
+                      free // (_PEAK_BYTES_PER_TURN * rows_per_file))
+        with ProcessPoolExecutor(max(1, workers),
+                                 mp_context=get_context("fork")) as pool:
+            list(pool.map(_write_one_part, jobs))
     else:
         _write_one_part(jobs[0])
     with open(manifest, "w") as f:

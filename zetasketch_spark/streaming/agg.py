@@ -163,15 +163,12 @@ def streaming_window_activity(
     rows fold in exactly (max-timestamp merge is associative and
     value-idempotent); state per group is one k-row sketch + two
     scalars."""
-    import datetime
-
     import pyspark.sql.functions as F
 
+    from zetasketch_spark.operators.window_distinct import _days, _iso
     from zetasketch_spark.sketches.timetheta import TimeThetaFamily
 
-    wins = tuple(sorted({int(w) for w in windows}))
-    if not wins or wins[0] < 1:
-        raise ValueError(f"windows must be >= 1 day, got {windows}")
+    wins = _days(windows, "windows")
     fam = TimeThetaFamily(k=k)
 
     key_fields = [f for f in df.schema.fields if f.name in keys]
@@ -216,8 +213,7 @@ def streaming_window_activity(
             state.setTimeoutDuration(int(timeout_minutes * 60 * 1000))
         if max_day == _NO_DAY:
             return  # no timed rows yet: no window anchor to report
-        iso = (datetime.date(1970, 1, 1)
-               + datetime.timedelta(days=max_day)).isoformat()
+        iso = _iso(max_day)
         actives = [sk.estimate_since(max_day - w + 1) for w in wins]
         news = [sk.estimate_new_since(max_day - w + 1) for w in wins]
         yield pd.DataFrame(
