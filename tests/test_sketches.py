@@ -826,3 +826,55 @@ def test_kll_foreign_blob_typed_errors():
                             ("<i", 45, 1 << 28)]:
         with pytest.raises(ValueError):
             KllSketch.deserialize(flipped(fmt, off, value))
+
+
+def _flipped(blob, fmt, off, value):
+    import struct as _struct
+
+    m = bytearray(blob)
+    _struct.pack_into(fmt, m, off, value)
+    return bytes(m)
+
+
+def test_countmin_foreign_blob_typed_errors():
+    """A Count-Min blob this module could not have written raises
+    ValueError before allocating — never a bare struct.error, or a
+    MemoryError from a header claiming a 2^30 x 2^10 counter matrix."""
+    cm = CountMinSketch(width=64, depth=3, max_candidates=8)
+    cm.add_series(_zipf_strings(2_000, 40, 1.2, seed=3))
+    blob = cm.serialize()
+    assert CountMinSketch.deserialize(blob).serialize() == blob
+    for cut in range(len(blob)):
+        with pytest.raises(ValueError):
+            CountMinSketch.deserialize(blob[:cut])
+    # header (5 bytes), then width:i32 @5, depth:i32 @9, total:i64 @13,
+    # max_candidates:i32 @21, candidates:i32 @25
+    for fmt, off, value in [("<i", 5, 1 << 30), ("<i", 9, 1 << 10),
+                            ("<i", 5, 0), ("<i", 9, -1),
+                            ("<i", 25, -1), ("<i", 25, 1 << 28)]:
+        with pytest.raises(ValueError):
+            CountMinSketch.deserialize(_flipped(blob, fmt, off, value))
+    huge = _flipped(_flipped(blob, "<i", 5, 1 << 30), "<i", 9, 1 << 10)
+    with pytest.raises(ValueError):
+        CountMinSketch.deserialize(huge)
+
+
+def test_ddsketch_foreign_blob_typed_errors():
+    """A DDSketch blob this module could not have written raises
+    ValueError — never a bare struct.error or a silent short parse."""
+    from zetasketch_spark.sketches.ddsketch import DDSketch
+
+    dd = DDSketch(alpha=0.02)
+    dd.add_series(pd.Series(np.linspace(-50.0, 500.0, 3000)))
+    blob = dd.serialize()
+    assert DDSketch.deserialize(blob).serialize() == blob
+    for cut in range(len(blob)):
+        with pytest.raises(ValueError):
+            DDSketch.deserialize(blob[:cut])
+    # header (5 bytes), then alpha:f64 @5, max_buckets:i32 @13, n @17,
+    # zero_count @25, min @33, max @41; the positive store's length @49
+    for fmt, off, value in [("<d", 5, 0.0), ("<d", 5, 2.0),
+                            ("<d", 5, float("nan")), ("<i", 49, -1),
+                            ("<i", 49, 1 << 28)]:
+        with pytest.raises(ValueError):
+            DDSketch.deserialize(_flipped(blob, fmt, off, value))

@@ -28,6 +28,7 @@ the ``mapInArrow`` so Parquet scans read just those columns.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
@@ -248,14 +249,28 @@ def collect_merged_states(partials: DataFrame, keys: list[str],
     if partials.rdd.getNumPartitions() > fan_in:
         partials = sketch_merge(partials, keys, family, tree_levels=2,
                                 fan_in=fan_in)
-    acc: dict[tuple, object] = {}
-    for r in partials.collect():
-        if r[SKETCH_COL] is None:
-            continue
-        key = tuple(r[k] for k in keys)
-        s = family.deserialize(bytes(r[SKETCH_COL]))
-        acc[key] = s if key not in acc else family.merge(acc[key], s)
-    return acc
+    return {key: s for key, (_, s) in
+            driver_fold(partials.toArrow(), keys, family).items()
+            if s is not None}
+
+
+def driver_fold(table, keys: list[str],
+                family: SketchFamily) -> dict[tuple, tuple]:
+    """``{key_tuple: (row indices, merged state or None)}`` over a pyarrow
+    table of serialized states — the driver-side merge that
+    ``collect_merged_states`` and the small-``SketchTable`` fold share.
+    Each key's blobs merge in row order (``grouping.arrow_group_indices``
+    keeps indices ascending), so the order-sensitive families fold
+    exactly as a sequential merge of the rows would."""
+    from zetasketch_spark.operators.grouping import arrow_group_indices
+
+    if keys:
+        groups = arrow_group_indices({k: table.column(k) for k in keys})
+    else:
+        groups = {(): np.arange(table.num_rows)} if table.num_rows else {}
+    blobs = table.column(SKETCH_COL).to_pylist()
+    return {key: (idx, family.merge_states(blobs[i] for i in idx))
+            for key, idx in groups.items()}
 
 
 def sketch_result(merged: DataFrame, family: SketchFamily,

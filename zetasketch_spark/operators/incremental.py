@@ -7,9 +7,21 @@ states it as the point of the serialized aggregator contract,
 at 10^12-turn scale you cannot re-aggregate the full history when a day of
 data arrives. Instead a snapshot table holds one serialized sketch per key
 group; each arriving delta is sketched alone (one scan of the delta only)
-and merged into the snapshot (one shuffle on the key columns, prior rows +
-delta partials co-located by key). Cost per update is O(delta + n_keys),
-independent of history size.
+and its partial states are merged into the snapshot. Cost per update is
+O(delta + n_keys), independent of history size.
+
+Where the merge runs is one size rule. The delta's partial states are
+staged as parquet (one Spark job); then, when the uncompressed bytes of
+the files the fold would load — the prior snapshot plus this table's
+staged partial column, read from the parquet footers — are at most
+``LOCAL_FOLD_BYTES``, the driver folds them with pyarrow (partials first,
+then the prior snapshot, per key) and writes the new snapshot itself: no
+further Spark job. Above the cap the same files feed the distributed
+merge: one shuffle on the key columns, prior rows + delta partials
+co-located by key. ``results`` and ``rollup`` follow the same rule over
+the snapshot they read: a small one is merged and extracted on the
+driver and returned as a local DataFrame, so collecting it starts no
+Spark job.
 
 Storage layout (parquet stand-in for an Iceberg snapshot table, same seam
 note as ``operators/checkpoint.py``)::
@@ -17,17 +29,23 @@ note as ``operators/checkpoint.py``)::
     table_dir/
       v00001/…parquet        keys…, sketch binary, rows_seen long
       v00002/…parquet
+      v00003/_partials/      the staged delta partials, inside the writer's
+                             reserved version dir; removed once the fold
+                             commits (readers skip ``_`` names)
       snapshots.jsonl        append-only: one record per attempted commit —
                              version, parent version, the fingerprints NEW
                              in that version, n_keys, ts
       LATEST                 commit pointer — written last, atomically
 
 Crash safety: a version directory — and its snapshots.jsonl record — is
-garbage until the committed chain reaches it. ``update`` writes the new
-version's parquet first, then appends the snapshot record, then atomically
-replaces ``LATEST``; a crash anywhere before that last rename leaves the
-previous snapshot fully readable, and the next update writes to a fresh
-version number (max existing dir + 1), never reusing the orphan.
+garbage until the committed chain reaches it. ``update`` reserves the new
+version's directory, stages the delta's partials inside it, writes the
+new snapshot's parquet there, then appends the snapshot record, then
+atomically replaces ``LATEST``; a crash anywhere before that last rename
+leaves the previous snapshot fully readable (staged partials included,
+it is an orphan directory ``vacuum`` collects), and the next update
+writes to a fresh version number (max existing dir + 1), never reusing
+the orphan.
 ``applied_fingerprints`` walks the parent chain from the committed
 ``LATEST`` only, so an orphan record from a writer that died between the
 log append and the commit is never counted as applied — a replay of that
@@ -66,16 +84,28 @@ import fcntl
 import json
 import os
 import re
+import shutil
 import time
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    BinaryType,
+    LongType,
+    StructField,
+    StructType,
+    _parse_datatype_string,
+)
 
 from zetasketch_spark.operators.agg import (
     PARTITION_COL,
     ROWS_COL,
     SKETCH_COL,
+    driver_fold,
     sketch_merge,
     sketch_partial,
     sketch_result,
@@ -86,6 +116,112 @@ from zetasketch_spark.sketches.base import SketchFamily
 # 10s-trigger streaming sink gets there in ~12 days); a fixed {5} would
 # stop counting those dirs and brick version allocation at rollover
 _VDIR = re.compile(r"v(\d{5,})$")
+
+#: a fold or read whose parquet inputs hold at most this many uncompressed
+#: bytes (footer ``total_byte_size``) runs on the driver with pyarrow;
+#: above it, the distributed merge runs over the same files
+LOCAL_FOLD_BYTES = 64 << 20
+
+# staged delta partials, inside the writer's reserved version directory
+_STAGE = "_partials"
+# the footer key under which Spark records a parquet file's Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_files(path: str) -> list[str]:
+    """Data files of a snapshot or stage directory, in name (= task)
+    order; ``_``/``.``-prefixed entries are metadata or staging, as Spark
+    treats them."""
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet") and f[0] not in "._")
+
+
+def _footer_bytes(files: list[str], columns=None) -> int:
+    """Uncompressed bytes of ``columns`` (all when None) in ``files``,
+    summed from the parquet footers — nothing is loaded."""
+    total = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if columns is None:
+                total += rg.total_byte_size
+            else:
+                total += sum(rg.column(j).total_uncompressed_size
+                             for j in range(rg.num_columns)
+                             if rg.column(j).path_in_schema in columns)
+    return total
+
+
+def _snapshot_schema(key_fields) -> StructType:
+    """``keys…, sketch, rows_seen`` — nullable throughout, as Spark reads
+    any parquet file back."""
+    return StructType(
+        [StructField(f.name, f.dataType) for f in key_fields]
+        + [StructField(SKETCH_COL, BinaryType()),
+           StructField(ROWS_COL, LongType())])
+
+
+def _spark_schema(path: str) -> StructType:
+    """The Spark schema that Spark (and ``_write_snapshot``) records in a
+    parquet file's footer — the types ``spark.read.parquet`` returns,
+    ``timestamp_ntz`` kept apart from ``timestamp``."""
+    return StructType.fromJson(json.loads(
+        pq.read_schema(path).metadata[_SPARK_SCHEMA_KEY]))
+
+
+def _load(files: list[str], columns: dict[str, str],
+          schema: StructType) -> pa.Table:
+    """``files``' ``columns`` (``{file column: output name}``) as one
+    table cast to the Arrow form of ``schema``: INT96 timestamps decode as
+    microseconds and become ``timestamp[us, tz=UTC]``, the UTC instants
+    Spark reads them as."""
+    arrow = to_arrow_schema(schema)
+    parts = [pq.read_table(f, columns=list(columns),
+                           coerce_int96_timestamp_unit="us")
+             .select(list(columns))
+             .rename_columns(list(columns.values())).cast(arrow)
+             for f in files]
+    return pa.concat_tables(parts) if parts else arrow.empty_table()
+
+
+def _write_snapshot(table: pa.Table, schema: StructType, vpath: str) -> None:
+    """One parquet file in the Arrow form of ``schema``, recording the
+    Spark schema in the footer as Spark does, so ``spark.read.parquet``
+    and the driver read it back with the same types."""
+    arrow = to_arrow_schema(schema).with_metadata(
+        {_SPARK_SCHEMA_KEY: schema.json()})
+    pq.write_table(table.cast(arrow), os.path.join(vpath, "part-00000.parquet"))
+
+
+def _merge_by_key(table: pa.Table, keys: list[str],
+                  family: SketchFamily) -> pa.Table:
+    """``keys…, sketch, rows_seen`` with one row per distinct key of
+    ``table``: its states merged in row order (``agg.driver_fold``;
+    ``merge_serialized``'s bytes) and its ``rows_seen`` summed."""
+    groups = driver_fold(table, keys, family)
+    rows = table.column(ROWS_COL).to_numpy()
+    first = [int(idx[0]) for idx, _ in groups.values()]
+    cols = {k: table.column(k).take(first) for k in keys}
+    cols[SKETCH_COL] = pa.array(
+        [family.serialize(family.make() if s is None else s)
+         for _, s in groups.values()], pa.binary())
+    cols[ROWS_COL] = pa.array(
+        [int(rows[idx].sum()) for idx, _ in groups.values()], pa.int64())
+    return pa.table(cols)
+
+
+def _local_frame(spark: SparkSession, columns: dict, schema: StructType):
+    """A DataFrame over driver-held columns: built from Arrow it is a
+    LocalRelation, so collecting it (or a filter over it) starts no Spark
+    job. Result values convert as a pandas UDF's do (NaN -> null, unsafe
+    numeric casts)."""
+    arrow = to_arrow_schema(schema)
+    arrays = [c if isinstance(c, (pa.Array, pa.ChunkedArray))
+              else pa.array(c, from_pandas=True).cast(arrow.field(n).type,
+                                                      safe=False)
+              for n, c in columns.items()]
+    return spark.createDataFrame(pa.table(arrays, schema=arrow), schema)
 
 
 class ConcurrentUpdateError(RuntimeError):
@@ -322,6 +458,33 @@ class SketchTable:
 
     # -- core operations ------------------------------------------------
 
+    def _snapshot_path(self, version: int | None) -> str | None:
+        """The directory of a committed snapshot (see ``read``); None only
+        for an empty table's latest."""
+        if version is None:
+            v = self.latest_version()
+            return self._vpath(v) if v > 0 else None
+        chain = self._chain_versions()
+        if version not in chain or not os.path.isdir(self._vpath(version)):
+            raise ValueError(
+                f"version {version} is not a readable committed snapshot "
+                f"of {self.table_dir} (retained chain: {sorted(chain)}): "
+                f"either an orphan from a crashed/raced writer (never "
+                f"published), never written, or compacted away by "
+                f"vacuum()")
+        return self._vpath(version)
+
+    def _load_small(self, path: str):
+        """``(table, spark schema)`` of the snapshot at ``path`` when its
+        footers put it at most ``LOCAL_FOLD_BYTES``, else None."""
+        files = _parquet_files(path)
+        if not files or _footer_bytes(files) > LOCAL_FOLD_BYTES:
+            return None
+        schema = _spark_schema(files[0])
+        return _load(files, {n: n for n in schema.names}, schema), schema
+
+    # -- core operations ------------------------------------------------
+
     def read(self, spark: SparkSession,
              version: int | None = None) -> DataFrame | None:
         """A committed snapshot (``keys…, sketch, rows_seen``).
@@ -335,20 +498,32 @@ class SketchTable:
         exist (their history is folded into the checkpoint). Returns
         None only for an empty table's latest.
         """
-        if version is None:
-            v = self.latest_version()
-            if v == 0:
-                return None
-            return spark.read.parquet(self._vpath(v))
-        chain = self._chain_versions()
-        if version not in chain or not os.path.isdir(self._vpath(version)):
-            raise ValueError(
-                f"version {version} is not a readable committed snapshot "
-                f"of {self.table_dir} (retained chain: {sorted(chain)}): "
-                f"either an orphan from a crashed/raced writer (never "
-                f"published), never written, or compacted away by "
-                f"vacuum()")
-        return spark.read.parquet(self._vpath(version))
+        path = self._snapshot_path(version)
+        return None if path is None else spark.read.parquet(path)
+
+    def _base(self, fingerprint: str | None) -> tuple[int, dict | None]:
+        """``(committed version to build on, the no-op metrics when
+        fingerprint is already applied in its chain, else None)``."""
+        base_version = self.latest_version()
+        if fingerprint is not None and \
+                fingerprint in self.applied_fingerprints():
+            return base_version, {"version": base_version, "applied": False,
+                                  "reason": "fingerprint already applied",
+                                  "fingerprint": fingerprint}
+        return base_version, None
+
+    def _reserve_version(self) -> int:
+        """Allocate + RESERVE a version dir under the lock: two same-host
+        writers that both scanned the same max would otherwise pick the
+        same number and interleave parquet files into one directory
+        (mode('errorifexists') is a non-atomic check-then-act) — silent
+        snapshot corruption instead of the loud race error. A crash after
+        the reservation leaves an orphan dir: invisible (never
+        committed), number burned, vacuum collects it."""
+        with self._log_lock():
+            version = self._next_version()
+            os.makedirs(self._vpath(version), exist_ok=False)
+        return version
 
     def update(self, spark: SparkSession, delta: DataFrame,
                fingerprint: str | None = None,
@@ -356,11 +531,15 @@ class SketchTable:
                delta_is_partials: bool = False) -> dict:
         """Fold ``delta`` into the table; returns a metrics dict.
 
-        The plan scans ONLY the delta (stage-1 partials) plus the prior
-        snapshot (already one compact row per key), then shuffles once on
-        the key columns. ``tree_levels=2`` salts the merge for hot keys,
+        One Spark job scans ONLY the delta and stages its stage-1
+        partials as parquet in the new version's directory. At or under
+        ``LOCAL_FOLD_BYTES`` (the staged partials plus the prior
+        snapshot, already one compact row per key) the driver folds them
+        and writes the snapshot; above it they shuffle once on the key
+        columns, and ``tree_levels=2`` salts that merge for hot keys,
         same contract as ``sketch_agg``. With ``fingerprint`` set, a
-        replay of an already-applied delta is a committed no-op.
+        replay of an already-applied delta is a committed no-op that
+        starts no Spark job.
 
         ``delta_is_partials=True`` treats ``delta`` as ALREADY-COMPUTED
         stage-1 partials (``keys…, sketch, rows_seen, partition_id`` —
@@ -384,56 +563,52 @@ class SketchTable:
                     f"partial-stage columns {sorted(missing)}")
         else:
             self._check_value_domain(delta)
-        base_version = self.latest_version()
-        applied = self.applied_fingerprints()
-        if fingerprint is not None and fingerprint in applied:
-            return {"version": base_version, "applied": False,
-                    "reason": "fingerprint already applied",
-                    "fingerprint": fingerprint}
+        base_version, noop = self._base(fingerprint)
+        if noop is not None:
+            return noop
 
         partials = (delta.select(*self.keys, SKETCH_COL, ROWS_COL,
                                  PARTITION_COL)
                     if delta_is_partials else
                     sketch_partial(delta, self.keys, self.col, self.family))
-        # read the EXACT version this update builds on (not latest-at-read
-        # time) so the committed chain's parent pointer is always the
-        # snapshot whose states were actually folded in
-        prior = (spark.read.parquet(self._vpath(base_version))
-                 if base_version > 0 else None)
-        if prior is not None:
-            # the prior snapshot is itself a valid partial per key; tag it
-            # with a partition id outside the delta's range so the salted
-            # merge treats it as one more state to fold in
-            prior = prior.withColumn(PARTITION_COL, F.lit(-1).cast("int"))
-            partials = partials.unionByName(prior)
-        merged = sketch_merge(partials, self.keys, self.family,
-                              tree_levels=tree_levels)
+        version = self._reserve_version()
+        stage = os.path.join(self._vpath(version), _STAGE)
+        partials.write.parquet(stage)
+        out = self._fold(spark, base_version, version, stage,
+                         partials.schema, SKETCH_COL, fingerprint,
+                         tree_levels, t0)
+        shutil.rmtree(stage)
+        return out
 
-        # allocate + RESERVE the version dir under the lock: two same-host
-        # writers that both scanned the same max would otherwise pick the
-        # same number and interleave parquet files into one directory
-        # (mode('errorifexists') is a non-atomic check-then-act) — silent
-        # snapshot corruption instead of the loud race error. A crash
-        # after the reservation leaves an empty orphan dir: invisible
-        # (never committed), number burned, vacuum collects it.
-        with self._log_lock():
-            version = self._next_version()
-            vpath = self._vpath(version)
-            os.makedirs(vpath, exist_ok=False)
+    def _fold(self, spark: SparkSession, base_version: int, version: int,
+              stage: str, stage_schema: StructType, blob_col: str,
+              fingerprint: str | None, tree_levels: int, t0: float) -> dict:
+        """Merge the staged partials' ``blob_col`` with snapshot
+        ``base_version`` into the reserved ``version``, then log and
+        commit it."""
+        vpath = self._vpath(version)
         try:
-            # 'overwrite' targets only our freshly reserved, empty dir
-            merged.select(*self.keys, SKETCH_COL, ROWS_COL) \
-                  .write.mode("overwrite").parquet(vpath)
-            # the written files' footers hold the row count: no read job
-            n_keys = sum(pq.read_metadata(os.path.join(vpath, f)).num_rows
-                         for f in os.listdir(vpath)
-                         if f.endswith(".parquet") and f[0] not in "._")
+            stage_files = _parquet_files(stage)
+            # read the EXACT version this update builds on (not latest-at-
+            # read time) so the committed chain's parent pointer is always
+            # the snapshot whose states were actually folded in
+            prior_files = (_parquet_files(self._vpath(base_version))
+                           if base_version > 0 else [])
+            if (_footer_bytes(stage_files,
+                              {*self.keys, blob_col, ROWS_COL})
+                    + _footer_bytes(prior_files) <= LOCAL_FOLD_BYTES):
+                n_keys = self._fold_local(stage_files, stage_schema,
+                                          blob_col, prior_files, vpath)
+            else:
+                n_keys = self._fold_spark(spark, stage, stage_schema,
+                                          blob_col, base_version, vpath,
+                                          tree_levels)
         except Exception:
-            # the lazy read of the prior snapshot executes inside the
-            # write job above; if a concurrent vacuum collected our base
-            # version mid-job the failure is a confusing Spark
-            # FileNotFound — re-check and surface it as the retryable
-            # race error the caller's retry loop expects
+            # the prior snapshot is read by this fold; if a
+            # concurrent vacuum collected our base version meanwhile the
+            # failure is a confusing FileNotFound — re-check and surface
+            # it as the retryable race error the caller's retry loop
+            # expects
             if self.latest_version() != base_version:
                 raise ConcurrentUpdateError(
                     f"table advanced past v{base_version} while this "
@@ -477,14 +652,78 @@ class SketchTable:
                 "fingerprint": fingerprint, "parent": base_version,
                 "seconds": round(time.time() - t0, 3)}
 
+    def _fold_local(self, stage_files, stage_schema, blob_col, prior_files,
+                    vpath) -> int:
+        """The driver fold: per key, the staged partials then the prior
+        snapshot's state (the Spark path's union order), written as the
+        new snapshot with pyarrow. Returns n_keys."""
+        schema = _snapshot_schema([stage_schema[k] for k in self.keys])
+        table = pa.concat_tables([
+            _load(stage_files, {**{k: k for k in self.keys},
+                                blob_col: SKETCH_COL, ROWS_COL: ROWS_COL},
+                  schema),
+            _load(prior_files, {n: n for n in schema.names}, schema)])
+        merged = _merge_by_key(table, self.keys, self.family)
+        _write_snapshot(merged, schema, vpath)
+        return merged.num_rows
+
+    def _fold_spark(self, spark, stage, stage_schema, blob_col,
+                    base_version, vpath, tree_levels) -> int:
+        """The distributed fold, for folds above ``LOCAL_FOLD_BYTES``: one
+        shuffle on the key columns. Returns n_keys."""
+        partials = spark.read.schema(stage_schema).parquet(stage).select(
+            *self.keys, F.col(blob_col).alias(SKETCH_COL), ROWS_COL,
+            PARTITION_COL)
+        if base_version > 0:
+            # the prior snapshot is itself a valid partial per key; tag it
+            # with a partition id outside the delta's range so the salted
+            # merge treats it as one more state to fold in
+            prior = spark.read.parquet(self._vpath(base_version)) \
+                .withColumn(PARTITION_COL, F.lit(-1).cast("int"))
+            partials = partials.unionByName(prior)
+        merged = sketch_merge(partials, self.keys, self.family,
+                              tree_levels=tree_levels)
+        # 'append' adds the snapshot beside the stage it reads from, in
+        # our freshly reserved dir ('overwrite' would delete the stage)
+        merged.select(*self.keys, SKETCH_COL, ROWS_COL) \
+              .write.mode("append").parquet(vpath)
+        # the written files' footers hold the row count: no read job
+        return sum(pq.read_metadata(f).num_rows
+                   for f in _parquet_files(vpath))
+
     def results(self, spark: SparkSession, keep_sketch: bool = False,
                 version: int | None = None) -> DataFrame | None:
         """Extract the family's result fields from a snapshot (latest by
-        default; pass ``version`` for a time-travel read)."""
-        snap = self.read(spark, version=version)
-        if snap is None:
+        default; pass ``version`` for a time-travel read):
+        ``keys…, [sketch,] rows_seen, result fields``. A snapshot at most
+        ``LOCAL_FOLD_BYTES`` is extracted on the driver and returned as a
+        local DataFrame (collecting it starts no Spark job); a larger one
+        through the distributed result UDF."""
+        path = self._snapshot_path(version)
+        if path is None:
             return None
-        return sketch_result(snap, self.family, keep_sketch=keep_sketch)
+        small = self._load_small(path)
+        if small is None:
+            return sketch_result(spark.read.parquet(path), self.family,
+                                 keep_sketch=keep_sketch)
+        return self._result_frame(spark, *small, keep_sketch)
+
+    def _result_frame(self, spark, table, schema, keep_sketch):
+        """``table``'s columns plus each row's result fields as a local
+        DataFrame, in ``sketch_result``'s layout."""
+        fam = self.family
+        res = [fam.result(fam.deserialize(b))
+               for b in table.column(SKETCH_COL).to_pylist()]
+        fields = [StructField(n, _parse_datatype_string(t))
+                  for n, t in fam.result_fields]
+        cols = {n: table.column(n) for n in schema.names}
+        cols.update(zip([f.name for f in fields],
+                        zip(*res) if res else [[]] * len(fields)))
+        out = StructType(list(schema.fields) + fields)
+        if not keep_sketch:
+            del cols[SKETCH_COL]
+            out = StructType([f for f in out.fields if f.name != SKETCH_COL])
+        return _local_frame(spark, cols, out)
 
     def rollup(self, spark: SparkSession, keys: list[str],
                keep_sketch: bool = False, version: int | None = None,
@@ -501,16 +740,44 @@ class SketchTable:
         sliding-window shape: distinct-over-the-last-7-days from a
         (role, day) table is ``rollup(["role"],
         where=F.col("day") >= cutoff)``, merging only the selected days'
-        states instead of rescanning any raw history."""
+        states instead of rescanning any raw history.
+
+        A snapshot at most ``LOCAL_FOLD_BYTES`` is filtered (by Spark, on
+        a local frame), merged and extracted on the driver, and returned
+        as a local DataFrame whose collect starts no Spark job; a larger
+        one merges distributed, ``tree_levels=2`` salting hot coarse
+        keys."""
         missing = set(keys) - set(self.keys)
         if missing:
             raise ValueError(
                 f"rollup keys {sorted(missing)} are not grouping keys of "
                 f"this table (keys={self.keys}); a rollup can only DROP "
                 f"keys, never invent them")
-        snap = self.read(spark, version=version)
-        if snap is None:
+        path = self._snapshot_path(version)
+        if path is None:
             return None
+        small = self._load_small(path)
+        if small is None:
+            return self._rollup_spark(spark.read.parquet(path), keys,
+                                      keep_sketch, tree_levels, where)
+        table, schema = small
+        if where is not None:
+            # Spark evaluates the predicate on the driver
+            # (ConvertToLocalRelation): only the kept row numbers return
+            row = "__row__"
+            frame = _local_frame(
+                spark, {**{n: table.column(n) for n in schema.names},
+                        row: np.arange(table.num_rows)},
+                StructType(list(schema.fields)
+                           + [StructField(row, LongType())]))
+            table = table.take([r[0] for r in
+                                frame.filter(where).select(row).collect()])
+        return self._result_frame(
+            spark, _merge_by_key(table, list(keys), self.family),
+            _snapshot_schema([schema[k] for k in keys]), keep_sketch)
+
+    def _rollup_spark(self, snap, keys, keep_sketch, tree_levels, where):
+        """The distributed rollup, for snapshots above the cap."""
         if where is not None:
             snap = snap.filter(where)
         partials = snap.select(*keys, SKETCH_COL, ROWS_COL)
@@ -571,8 +838,6 @@ class SketchTable:
         run it with ``keep_versions`` large enough to cover their
         read horizon.
         """
-        import shutil
-
         # the WHOLE read-compact-replace runs under the log lock: without
         # it, a concurrent update's record appended between _log_records()
         # and the os.replace below would be silently dropped from the
@@ -636,15 +901,19 @@ def update_tables(spark: SparkSession, delta: DataFrame,
     arriving transcripts; updated independently, each table re-scans the
     delta. Here `multi_sketch_partial` computes every table's stage-1
     partials from one pass (each family's Arrow kernel on the shared
-    batch), the tiny partial-state frame is pinned with localCheckpoint,
-    and each table folds its own slice via
-    ``update(delta_is_partials=True)``.
+    batch), and ONE parquet write stages the tiny partial-state frame in
+    the first pending table's reserved version directory
+    (``vNNNNN/_partials``). Each table then folds its own column of the
+    stage under the same size rule as ``update``: on the driver at or
+    under ``LOCAL_FOLD_BYTES`` — so a first delivery starts one Spark
+    job in all — and distributed above it.
 
     All tables must share the same group keys. Each table logs the
     fingerprint in its OWN chain, so a crash between folds is safe:
     replaying the whole call no-ops the tables that committed and folds
     only the ones that did not — exactly-once per table, same contract
-    as calling update() per table.
+    as calling update() per table. A redelivery every table has applied
+    starts no Spark job.
 
     Returns ``{name: update-metrics}``.
     """
@@ -669,26 +938,30 @@ def update_tables(spark: SparkSession, delta: DataFrame,
     for t in tables.values():
         t._check_value_domain(delta)
     # scan only for the tables that have not applied this fingerprint: a
-    # redelivered delta runs no Spark job at all. The others get the raw
-    # delta, and update() re-checks the fingerprint under its own logic,
-    # so exactly-once per table holds even if a table moved meanwhile.
+    # redelivered delta runs no Spark job at all
     pending = {name: spec for name, spec in specs.items()
                if fingerprint is None
                or fingerprint not in tables[name].applied_fingerprints()}
-    # one scan; the result is O(partitions × keys) serialized states —
-    # pin it so each table's fold reuses the frame instead of rescanning
-    parts = (multi_sketch_partial(delta, keys, pending).localCheckpoint(
-        eager=True) if pending else None)
+    # one scan, one write: O(partitions × keys) serialized states that
+    # every pending table's fold reads back instead of rescanning
+    host = next(iter(pending), None)
+    if host is not None:
+        version = tables[host]._reserve_version()
+        stage = os.path.join(tables[host]._vpath(version), _STAGE)
+        parts = multi_sketch_partial(delta, keys, pending)
+        parts.write.parquet(stage)
     out = {}
     for name, t in tables.items():
-        if name in pending:
-            p = parts.select(*keys, F.col(name).alias(SKETCH_COL),
-                             ROWS_COL, PARTITION_COL)
-        else:
-            p = delta
-        out[name] = t.update(spark, p, fingerprint=fingerprint,
-                             tree_levels=tree_levels,
-                             delta_is_partials=name in pending)
+        t0 = time.time()
+        # re-checked per table: one that committed this fingerprint since
+        # the pending check above no-ops instead of folding it twice
+        base_version, noop = t._base(fingerprint)
+        out[name] = noop or t._fold(
+            spark, base_version,
+            version if name == host else t._reserve_version(), stage,
+            parts.schema, name, fingerprint, tree_levels, t0)
+    if host is not None:
+        shutil.rmtree(stage)
     return out
 
 

@@ -178,11 +178,25 @@ class CountMinSketch:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "CountMinSketch":
+        """Parse a serialized state; a blob this module could not have
+        written (non-positive dimensions, a negative candidate count,
+        counters or candidates running past the buffer, truncation
+        anywhere) raises ValueError before anything is allocated — never
+        a bare ``struct.error`` or a ``MemoryError``."""
         from zetasketch_spark.sketches.wire import read_header
 
         version, off = read_header(data, _MAGIC, "CountMin")
-        width, depth, total, maxc, ncand = struct.unpack_from("<iiqii", data, off)
+        try:
+            width, depth, total, maxc, ncand = struct.unpack_from(
+                "<iiqii", data, off)
+        except struct.error as e:
+            raise ValueError(f"truncated CountMin sketch: {e}") from None
         off += struct.calcsize("<iiqii")
+        if width <= 0 or depth <= 0 or ncand < 0 or \
+                off + 8 * width * depth + 12 * ncand + 4 > len(data):
+            raise ValueError(
+                f"corrupt CountMin sketch: {depth}x{width} counters and "
+                f"{ncand} candidates do not fit the {len(data)}-byte blob")
         sk = cls(width=width, depth=depth, max_candidates=maxc)
         n = width * depth
         sk.counters = np.frombuffer(data, dtype=np.int64, count=n, offset=off).reshape(depth, width).copy()

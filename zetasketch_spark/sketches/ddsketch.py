@@ -216,24 +216,35 @@ class DDSketch:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "DDSketch":
+        """Parse a serialized state; a blob this module could not have
+        written (alpha outside (0, 1), a negative or past-the-buffer
+        store length, truncation anywhere) raises ValueError, never a
+        bare ``struct.error``."""
         from zetasketch_spark.sketches.wire import read_header
 
         version, off = read_header(data, _MAGIC, "DDSketch")
-        alpha, mb, n, zc, mn, mx = struct.unpack_from("<diqqdd", data, off)
-        off += struct.calcsize("<diqqdd")
-        sk = cls(alpha=alpha, max_buckets=mb)
+        try:
+            alpha, mb, n, zc, mn, mx = struct.unpack_from("<diqqdd", data, off)
+            off += struct.calcsize("<diqqdd")
+            sk = cls(alpha=alpha, max_buckets=mb)
+            for store in (sk.pos, sk.neg):
+                (ln,) = struct.unpack_from("<i", data, off)
+                off += 4
+                if ln < 0 or off + 16 * ln > len(data):
+                    raise ValueError(
+                        f"corrupt DDSketch: a store of {ln} buckets runs "
+                        f"past the {len(data)}-byte blob")
+                idx = np.frombuffer(data, dtype=np.int64, count=ln, offset=off)
+                off += ln * 8
+                cnt = np.frombuffer(data, dtype=np.int64, count=ln, offset=off)
+                off += ln * 8
+                store.update(zip(idx.tolist(), cnt.tolist()))
+        except struct.error as e:
+            raise ValueError(f"truncated DDSketch: {e}") from None
         sk.encoding_version = version
         sk.n = n
         sk.zero_count = zc
         sk._min, sk._max = mn, mx
-        for store in (sk.pos, sk.neg):
-            (ln,) = struct.unpack_from("<i", data, off)
-            off += 4
-            idx = np.frombuffer(data, dtype=np.int64, count=ln, offset=off)
-            off += ln * 8
-            cnt = np.frombuffer(data, dtype=np.int64, count=ln, offset=off)
-            off += ln * 8
-            store.update(zip(idx.tolist(), cnt.tolist()))
         return sk
 
 
