@@ -878,3 +878,43 @@ def test_ddsketch_foreign_blob_typed_errors():
                             ("<i", 49, 1 << 28)]:
         with pytest.raises(ValueError):
             DDSketch.deserialize(_flipped(blob, fmt, off, value))
+
+
+def test_bloom_foreign_blob_typed_errors():
+    """A Bloom blob this module could not have written raises ValueError
+    before allocating — never a bare struct.error, a MemoryError from a
+    header claiming 2^40 bits, or a silently accepted k = 0."""
+    bf = BloomFilter(m=1024, k=3)
+    bf.add_hashes(np.arange(1, 200, dtype=np.uint64)
+                  * np.uint64(0x9E3779B97F4A7C15))
+    blob = bf.serialize()
+    assert BloomFilter.deserialize(blob).serialize() == blob
+    for cut in range(len(blob)):
+        with pytest.raises(ValueError):
+            BloomFilter.deserialize(blob[:cut])
+    # header (5 bytes), then m:i64 @5, k:i32 @13, n_added:i64 @17
+    for fmt, off, value in [("<q", 5, 1 << 40), ("<q", 5, 0),
+                            ("<q", 5, -64), ("<q", 5, 1000), ("<i", 13, 0),
+                            ("<i", 13, -1), ("<q", 17, -1)]:
+        with pytest.raises(ValueError):
+            BloomFilter.deserialize(_flipped(blob, fmt, off, value))
+
+
+def test_tdigest_foreign_blob_typed_errors():
+    """A t-digest blob this module could not have written raises
+    ValueError before allocating — never a bare struct.error, and never a
+    silently accepted negative count or zero compression."""
+    td = TDigest(delta=50.0)
+    td.add_series(pd.Series(np.random.default_rng(5).normal(size=2000)))
+    blob = td.serialize()
+    assert TDigest.deserialize(blob).serialize() == blob
+    for cut in range(len(blob)):
+        with pytest.raises(ValueError):
+            TDigest.deserialize(blob[:cut])
+    # header (5 bytes), then delta:f64 @5, n:i64 @13, centroids:i32 @21
+    for fmt, off, value in [("<d", 5, 0.0), ("<d", 5, -1.0),
+                            ("<d", 5, float("nan")), ("<d", 5, float("inf")),
+                            ("<q", 13, -5), ("<i", 21, -1),
+                            ("<i", 21, 1 << 28)]:
+        with pytest.raises(ValueError):
+            TDigest.deserialize(_flipped(blob, fmt, off, value))

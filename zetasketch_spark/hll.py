@@ -78,15 +78,13 @@ class IncompatiblePrecisionError(ValueError):
 # ---------------------------------------------------------------------------
 
 def _bit_length_u64(x: np.ndarray) -> np.ndarray:
-    """Per-element bit length of a uint64 array (0 -> 0), 6 vector passes."""
-    x = x.astype(np.uint64, copy=True)
-    r = np.zeros(x.shape, dtype=np.uint64)
-    for k in (32, 16, 8, 4, 2, 1):
-        kk = np.uint64(k)
-        m = x >= (_U1 << kk)
-        r[m] += kk
-        x[m] >>= kk
-    return r + x
+    """Per-element bit length of a uint64 array (0 -> 0): the binary
+    exponent ``frexp`` gives each 32-bit half, which float64 holds
+    exactly."""
+    x = x.astype(np.uint64, copy=False)
+    hi = np.frexp((x >> np.uint64(32)).astype(np.float64))[1]
+    lo = np.frexp((x & np.uint64(0xFFFFFFFF)).astype(np.float64))[1]
+    return np.where(hi > 0, hi + 32, lo).astype(np.uint64)
 
 
 def rho_w(hashes: np.ndarray, bits: int) -> np.ndarray:

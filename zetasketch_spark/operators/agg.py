@@ -28,6 +28,8 @@ the ``mapInArrow`` so Parquet scans read just those columns.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark import TaskContext
@@ -38,6 +40,7 @@ from pyspark.sql.types import (
     LongType,
     StructField,
     StructType,
+    _parse_datatype_string,
 )
 
 from zetasketch_spark.sketches.base import SketchFamily
@@ -45,6 +48,14 @@ from zetasketch_spark.sketches.base import SketchFamily
 SKETCH_COL = "sketch"
 ROWS_COL = "rows_seen"
 PARTITION_COL = "partition_id"
+
+
+@functools.lru_cache(maxsize=None)
+def sql_type(ddl: str):
+    """The Spark ``DataType`` of a DDL type string (a family's
+    ``result_fields`` types): parsed once per string, since each parse is
+    a JVM round trip."""
+    return _parse_datatype_string(ddl)
 
 
 def _key_fields(df: DataFrame, keys: list[str]) -> list[StructField]:
@@ -348,14 +359,12 @@ def merge_result(partials: DataFrame, keys: list[str],
     """Stages 2+3 fused: one ``applyInPandas`` merges each spec's blob
     column per key and emits ``keys + rows_seen + result fields`` (named
     ``<spec>_<field>`` when ``prefixed``)."""
-    from pyspark.sql.types import _parse_datatype_string
-
     fields = [(f"{n}_{fn}" if prefixed else fn, t)
               for n, (_, fam) in specs.items() for fn, t in fam.result_fields]
     out_schema = StructType(
         [f for f in partials.schema.fields if f.name in keys]
         + [StructField(ROWS_COL, LongType())]
-        + [StructField(n, _parse_datatype_string(t)) for n, t in fields]
+        + [StructField(n, sql_type(t)) for n, t in fields]
     )
 
     def merge_result_fn(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -40,10 +40,10 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StructField, StructType,
-    _parse_datatype_string)
+    BinaryType, IntegerType, LongType, StructField, StructType)
 
-from zetasketch_spark.operators.agg import PARTITION_COL, ROWS_COL, SKETCH_COL
+from zetasketch_spark.operators.agg import (
+    PARTITION_COL, ROWS_COL, SKETCH_COL, sql_type)
 from zetasketch_spark.operators.grouping import arrow_group_indices
 
 # row-group splits are bin-packed to this many bytes before the
@@ -369,7 +369,7 @@ def fold_splits(spark, path, keys, specs, derived=None, partition_filter=None,
     rdd, splits, part_keys, n_red = _scan(spark, path, keys, specs, derived,
                                           partition_filter)
     if key_fields is None:
-        key_fields = [StructField(k, _parse_datatype_string(t)) for k, t in
+        key_fields = [StructField(k, sql_type(t)) for k, t in
                       zip(keys, _plan_key_types(splits, keys, derived,
                                                 part_keys))]
     key_types = [f.dataType.simpleString() for f in key_fields]
@@ -377,7 +377,7 @@ def fold_splits(spark, path, keys, specs, derived=None, partition_filter=None,
     fields = list(key_fields) + [StructField(ROWS_COL, LongType())]
     for n, fam in zip(specs, fams):
         fields += [StructField(f"{n}_{fn}" if prefixed else fn,
-                               _parse_datatype_string(t))
+                               sql_type(t))
                    for fn, t in fam.result_fields]
     if keep_sketch:
         fields += [StructField(n, BinaryType()) for n in specs]
@@ -412,14 +412,16 @@ def sketch_agg_rdd(spark, path, keys, col, family, derived_keys=None,
     merge, entirely in the RDD runner — ``multi_sketch_agg_rdd`` with one
     spec and unprefixed result names.
 
-    Measured on this sandbox, Spark's SQL Arrow runner adds a ~2-3 s
-    constant per data-bearing Python stage (independent of bytes, cores,
-    and batch size), which dominates wall time and destroys the N->4N
-    scaling signal. The plain RDD pipe has ~5 ms/task overhead, so this
-    pipeline keeps the treeAggregate shape (partial per split -> pairwise
-    state merge -> estimate) with only serialized sketch states crossing
-    process boundaries. State equality with the DataFrame path is
-    asserted in tests (same cores, same bytes, same estimates).
+    Every Python task pays a fixed cost before its first row: on a
+    4-CPU local[4] box a 1-task Python RDD job takes ~270 ms against
+    ~130 ms for a JVM-only job with a shuffle, most of the difference
+    pyspark's per-task ``importlib.invalidate_caches()`` (~0.22 s in a
+    worker, which re-reads each zip entry on its ``sys.path``). So this
+    pipeline keeps the treeAggregate shape (partial per split ->
+    pairwise state merge -> estimate) in as few Python stages as it can,
+    with only serialized sketch states crossing process boundaries.
+    State equality with the DataFrame path is asserted in tests (same
+    cores, same bytes, same estimates).
 
     Returns a Spark DataFrame of ``keys + (rows_seen, estimate fields)``
     (``+ sketch`` with ``keep_sketch``).

@@ -18,10 +18,13 @@ staged partial column, read from the parquet footers — are at most
 then the prior snapshot, per key) and writes the new snapshot itself: no
 further Spark job. Above the cap the same files feed the distributed
 merge: one shuffle on the key columns, prior rows + delta partials
-co-located by key. ``results`` and ``rollup`` follow the same rule over
-the snapshot they read: a small one is merged and extracted on the
-driver and returned as a local DataFrame, so collecting it starts no
-Spark job.
+co-located by key. ``read``, ``results`` and ``rollup`` follow the same
+rule over the snapshot they read: a small one is loaded (and merged and
+extracted) on the driver and returned as a local DataFrame, so
+collecting ``results`` / ``rollup`` starts no Spark job, and SQL over
+``read`` plans no exchange. A larger one is scanned with the Spark
+schema its parquet footer records, so no schema-inference job runs
+either.
 
 Storage layout (parquet stand-in for an Iceberg snapshot table, same seam
 note as ``operators/checkpoint.py``)::
@@ -93,13 +96,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StructField,
-    StructType,
-    _parse_datatype_string,
-)
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from zetasketch_spark.operators.agg import (
     PARTITION_COL,
@@ -109,6 +106,7 @@ from zetasketch_spark.operators.agg import (
     sketch_merge,
     sketch_partial,
     sketch_result,
+    sql_type,
 )
 from zetasketch_spark.sketches.base import SketchFamily
 
@@ -168,6 +166,13 @@ def _spark_schema(path: str) -> StructType:
     ``timestamp_ntz`` kept apart from ``timestamp``."""
     return StructType.fromJson(json.loads(
         pq.read_schema(path).metadata[_SPARK_SCHEMA_KEY]))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the first
+    data file's footer instead of inferred: no schema-inference job."""
+    return spark.read.schema(_spark_schema(_parquet_files(path)[0])) \
+        .parquet(path)
 
 
 def _load(files: list[str], columns: dict[str, str],
@@ -487,7 +492,8 @@ class SketchTable:
 
     def read(self, spark: SparkSession,
              version: int | None = None) -> DataFrame | None:
-        """A committed snapshot (``keys…, sketch, rows_seen``).
+        """A committed snapshot (``keys…, sketch, rows_seen``), with the
+        schema and rows ``spark.read.parquet`` of its directory gives.
 
         ``version=None`` reads the latest; an explicit ``version`` is a
         time-travel read of a historical snapshot (the Iceberg
@@ -497,9 +503,23 @@ class SketchTable:
         versions below a ``vacuum`` compaction checkpoint no longer
         exist (their history is folded into the checkpoint). Returns
         None only for an empty table's latest.
+
+        A snapshot at most ``LOCAL_FOLD_BYTES`` is read eagerly into
+        driver memory (bounded by that cap) and returned as a
+        one-partition local frame: building it starts no Spark job, and a
+        ``GROUP BY`` over it (the SQL ``hll_count_merge`` read) plans no
+        exchange; collecting it as is starts one JVM-only job. A larger
+        one is a lazy parquet scan with the footer's schema.
         """
         path = self._snapshot_path(version)
-        return None if path is None else spark.read.parquet(path)
+        if path is None:
+            return None
+        small = self._load_small(path)
+        if small is None:
+            return _read_parquet(spark, path)
+        table, schema = small
+        return _local_frame(spark, {n: table.column(n) for n in schema.names},
+                            schema).coalesce(1)
 
     def _base(self, fingerprint: str | None) -> tuple[int, dict | None]:
         """``(committed version to build on, the no-op metrics when
@@ -678,7 +698,7 @@ class SketchTable:
             # the prior snapshot is itself a valid partial per key; tag it
             # with a partition id outside the delta's range so the salted
             # merge treats it as one more state to fold in
-            prior = spark.read.parquet(self._vpath(base_version)) \
+            prior = _read_parquet(spark, self._vpath(base_version)) \
                 .withColumn(PARTITION_COL, F.lit(-1).cast("int"))
             partials = partials.unionByName(prior)
         merged = sketch_merge(partials, self.keys, self.family,
@@ -698,13 +718,14 @@ class SketchTable:
         ``keys…, [sketch,] rows_seen, result fields``. A snapshot at most
         ``LOCAL_FOLD_BYTES`` is extracted on the driver and returned as a
         local DataFrame (collecting it starts no Spark job); a larger one
-        through the distributed result UDF."""
+        through the distributed result UDF, over a parquet scan with the
+        footer's schema."""
         path = self._snapshot_path(version)
         if path is None:
             return None
         small = self._load_small(path)
         if small is None:
-            return sketch_result(spark.read.parquet(path), self.family,
+            return sketch_result(_read_parquet(spark, path), self.family,
                                  keep_sketch=keep_sketch)
         return self._result_frame(spark, *small, keep_sketch)
 
@@ -714,8 +735,7 @@ class SketchTable:
         fam = self.family
         res = [fam.result(fam.deserialize(b))
                for b in table.column(SKETCH_COL).to_pylist()]
-        fields = [StructField(n, _parse_datatype_string(t))
-                  for n, t in fam.result_fields]
+        fields = [StructField(n, sql_type(t)) for n, t in fam.result_fields]
         cols = {n: table.column(n) for n in schema.names}
         cols.update(zip([f.name for f in fields],
                         zip(*res) if res else [[]] * len(fields)))
@@ -745,8 +765,8 @@ class SketchTable:
         A snapshot at most ``LOCAL_FOLD_BYTES`` is filtered (by Spark, on
         a local frame), merged and extracted on the driver, and returned
         as a local DataFrame whose collect starts no Spark job; a larger
-        one merges distributed, ``tree_levels=2`` salting hot coarse
-        keys."""
+        one merges distributed over a parquet scan with the footer's
+        schema, ``tree_levels=2`` salting hot coarse keys."""
         missing = set(keys) - set(self.keys)
         if missing:
             raise ValueError(
@@ -758,7 +778,7 @@ class SketchTable:
             return None
         small = self._load_small(path)
         if small is None:
-            return self._rollup_spark(spark.read.parquet(path), keys,
+            return self._rollup_spark(_read_parquet(spark, path), keys,
                                       keep_sketch, tree_levels, where)
         table, schema = small
         if where is not None:
@@ -830,11 +850,13 @@ class SketchTable:
         needs. Records above LATEST are preserved verbatim for the same
         in-flight-writer reason as the directories.
 
-        In-flight READERS: Spark reads are lazy, so a concurrent job
-        still consuming a superseded version's files when it is deleted
-        fails with a FileNotFound-style error (an in-flight ``update``
-        re-checks LATEST and converts this to the retryable
-        ``ConcurrentUpdateError``). When readers/writers overlap vacuum,
+        In-flight READERS: a snapshot above ``LOCAL_FOLD_BYTES`` is read
+        lazily, so a concurrent job still consuming a superseded
+        version's files when it is deleted fails with a FileNotFound-style
+        error (an in-flight ``update`` re-checks LATEST and converts this
+        to the retryable ``ConcurrentUpdateError``); a smaller one is
+        loaded when ``read`` / ``results`` / ``rollup`` is called. When
+        readers/writers overlap vacuum,
         run it with ``keep_versions`` large enough to cover their
         read horizon.
         """

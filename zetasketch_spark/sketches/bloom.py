@@ -152,11 +152,23 @@ class BloomFilter:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "BloomFilter":
+        """Parse a serialized state; a blob this module could not have
+        written (m not a positive multiple of 64, k < 1, a negative add
+        count, bits running past the buffer, truncation anywhere) raises
+        ValueError before anything is allocated — never a bare
+        ``struct.error`` or a ``MemoryError``."""
         from zetasketch_spark.sketches.wire import read_header
 
         version, off = read_header(data, _MAGIC, "Bloom")
-        m, k, n = struct.unpack_from("<qiq", data, off)
+        try:
+            m, k, n = struct.unpack_from("<qiq", data, off)
+        except struct.error as e:
+            raise ValueError(f"truncated Bloom filter: {e}") from None
         off += struct.calcsize("<qiq")
+        if m <= 0 or m % 64 or k < 1 or n < 0 or off + m // 8 > len(data):
+            raise ValueError(
+                f"corrupt Bloom filter: m={m} bits, k={k}, n_added={n} in "
+                f"a {len(data)}-byte blob")
         bf = cls(m=m, k=k)
         bf.words = np.frombuffer(data, dtype=np.uint64, count=m // 64, offset=off).copy()
         bf.n_added = n

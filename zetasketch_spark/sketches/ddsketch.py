@@ -175,27 +175,26 @@ class DDSketch:
         if self.n == 0:
             return [float("nan")] * len(qs)
         # global value order: negatives ascending (neg indices
-        # DESCENDING: larger |v| is smaller v), zeros, positives ascending
-        buckets: list[tuple[float, int]] = []
-        for i in sorted(self.neg, reverse=True):
-            buckets.append((-self._midpoint(i), self.neg[i]))
-        if self.zero_count:
-            buckets.append((0.0, self.zero_count))
-        for i in sorted(self.pos):
-            buckets.append((self._midpoint(i), self.pos[i]))
+        # DESCENDING: larger |v| is smaller v), zeros, positives ascending;
+        # midpoints are computed for the selected buckets only
+        neg = sorted(self.neg.items(), reverse=True)
+        buckets = (neg + ([(None, self.zero_count)] if self.zero_count
+                          else []) + sorted(self.pos.items()))
         counts = np.cumsum([c for _, c in buckets])
         out = []
         for q in qs:
             target = q * (self.n - 1)
             j = int(np.searchsorted(counts, target, side="right"))
             j = min(j, len(buckets) - 1)
+            i = buckets[j][0]
+            mid = (0.0 if i is None else -self._midpoint(i) if j < len(neg)
+                   else self._midpoint(i))
             # clamp into the OBSERVED value range: only tightens the
             # estimate (every bucket's members lie within [min, max]),
             # and it is what keeps the extremes sane when a bucket
             # midpoint falls outside the double range (inf / 0.0 for
             # values near DBL_MAX / denormals)
-            out.append(float(min(max(buckets[j][0], self._min),
-                                 self._max)))
+            out.append(float(min(max(mid, self._min), self._max)))
         return out
 
     # -- serde ---------------------------------------------------------------

@@ -15,6 +15,7 @@ vs exact numpy quantiles on seeded streams.
 
 from __future__ import annotations
 
+import math
 import struct
 
 import numpy as np
@@ -133,12 +134,25 @@ class TDigest:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "TDigest":
+        """Parse a serialized state; a blob this module could not have
+        written (δ not finite and positive, a negative count or centroid
+        count, centroids running past the buffer, truncation anywhere)
+        raises ValueError before anything is allocated — never a bare
+        ``struct.error``."""
         from zetasketch_spark.sketches.wire import read_header
 
         fmt = "<dqidd"
         version, off = read_header(data, _MAGIC, "t-digest")
-        delta, n, ncent, mn, mx = struct.unpack_from(fmt, data, off)
+        try:
+            delta, n, ncent, mn, mx = struct.unpack_from(fmt, data, off)
+        except struct.error as e:
+            raise ValueError(f"truncated t-digest: {e}") from None
         off += struct.calcsize(fmt)
+        if not (math.isfinite(delta) and delta > 0) or n < 0 or ncent < 0 \
+                or off + 16 * ncent > len(data):
+            raise ValueError(
+                f"corrupt t-digest: delta={delta}, n={n}, {ncent} centroids "
+                f"in a {len(data)}-byte blob")
         td = cls(delta=delta)
         td.encoding_version = version  # trailing bytes ignored (forward compat)
         td.n = n

@@ -33,8 +33,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BinaryType, LongType, StructField, StructType)
+    BinaryType, DoubleType, LongType, StringType, StructField, StructType)
 
+from zetasketch_spark.operators.agg import sql_type
 from zetasketch_spark.sketches.base import SketchFamily
 
 
@@ -58,7 +59,7 @@ def streaming_sketch_agg(
     out_schema = StructType(
         key_fields
         + [StructField("rows_seen", LongType())]
-        + [StructField(n, _sql_type(t)) for n, t in family.result_fields]
+        + [StructField(n, sql_type(t)) for n, t in family.result_fields]
     )
     state_schema = StructType([
         StructField("blob", BinaryType()),
@@ -95,12 +96,6 @@ def streaming_sketch_agg(
         .applyInPandasWithState(update_fn, out_schema, state_schema,
                                 "update", timeout)
     )
-
-
-def _sql_type(t: str):
-    from pyspark.sql.types import _parse_datatype_string
-
-    return _parse_datatype_string(t)
 
 
 def streaming_windowed_sketch_agg(
@@ -175,9 +170,9 @@ def streaming_window_activity(
     out_schema = StructType(
         key_fields
         + [StructField("rows_seen", LongType()),
-           StructField("as_of_day", _sql_type("string")),
+           StructField("as_of_day", StringType()),
            StructField("total_distinct", LongType()),
-           StructField("rse", _sql_type("double"))]
+           StructField("rse", DoubleType())]
         + [StructField(f"active_{w}d", LongType()) for w in wins]
         + [StructField(f"new_{w}d", LongType()) for w in wins]
     )
