@@ -4,8 +4,9 @@ suite; run from the repository root:
     python -m pytest benchmarks/ -p no:cacheprovider --benchmark-only
 
 Sizes follow the workloads: 125k hashes is one ``daily_rollup`` split's
-HLL update, ~100 buckets one ``table_maint`` DDSketch state, a sparse
-p=15 HLL one per-key snapshot state, and 600-byte strings the transcript
+HLL update and its ~150 group keys, ~100 buckets one ``table_maint``
+DDSketch state, 2048x5 counters one Count-Min state, a sparse p=15 HLL
+one per-key snapshot state, and 600-byte strings the transcript
 ``text`` column. Each benchmark also checks its output, so a faster
 wrong kernel fails here."""
 
@@ -17,6 +18,8 @@ import pytest
 
 from zetasketch_spark.hashing import fingerprint_arrow_array
 from zetasketch_spark.hll import HllSketch, _bit_length_u64, rho_w
+from zetasketch_spark.operators.grouping import arrow_group_indices
+from zetasketch_spark.sketches.countmin import CountMinSketch
 from zetasketch_spark.sketches.ddsketch import DDSketch
 
 _N_HASHES = 125_000
@@ -47,6 +50,52 @@ def test_ddsketch_quantiles(benchmark):
     assert 60 <= len(sk.pos) <= 160
     out = benchmark(sk.quantiles, (0.5, 0.9, 0.99))
     assert out == sorted(out) and sk._min <= out[0] <= out[-1] <= sk._max
+
+
+def test_ddsketch_deserialize(benchmark):
+    sk = DDSketch(alpha=0.01)
+    sk.add_array(np.random.default_rng(2).lognormal(6.0, 0.25, 20_000))
+    blob = sk.serialize()
+    assert 60 <= len(sk.pos) <= 160
+    back = benchmark(DDSketch.deserialize, blob)
+    assert back.serialize() == blob
+
+
+def test_countmin_deserialize(benchmark):
+    rng = np.random.default_rng(5)
+    keys = [f"tool_{i}" for i in rng.zipf(1.3, 50_000) % 1000]
+    sk = CountMinSketch(width=2048, depth=5)
+    sk.add_series(pa.array(keys).to_pandas())
+    blob = sk.serialize()
+    assert len(sk.candidates) > 100
+    back = benchmark(CountMinSketch.deserialize, blob)
+    assert back.serialize() == blob
+
+
+def test_hll_update(benchmark, hashes):
+    def update():
+        sk = HllSketch(precision=15)
+        sk.add_hashes(hashes)
+        return sk
+
+    sk = benchmark(update)
+    halves = HllSketch(precision=15)
+    halves.add_hashes(hashes[::2])
+    halves.add_hashes(hashes[1::2])
+    assert sk.serialize() == halves.serialize()
+    assert abs(sk.estimate() - _N_HASHES) <= 5 * 1.04 / 2**7.5 * _N_HASHES
+
+
+def test_arrow_group_indices(benchmark):
+    rng = np.random.default_rng(6)
+    roles = pa.array([f"role_{i}" for i in rng.integers(0, 150, _N_HASHES)])
+    groups = benchmark(arrow_group_indices, {"role": roles})
+    assert len(groups) == 150
+    assert sum(len(idx) for idx in groups.values()) == _N_HASHES
+    keys = roles.to_pylist()
+    for (key,), idx in list(groups.items())[:10]:
+        assert np.all(np.diff(idx) > 0)
+        assert {keys[i] for i in idx} == {key}
 
 
 def test_hll_sparse_deserialize(benchmark):

@@ -233,6 +233,26 @@ def test_checkpoint_resume(spark, transcripts_path, tmp_path):
     assert r1 == r2
 
 
+def test_query_signature_ignores_runtime_caches():
+    """A family that has sketched a batch (HllFamily.prepare_arrow
+    memoizes _arrow_value_type) signs like a pristine one, so
+    checkpointed_sketch_agg finds its own partials; a pristine family's
+    signature is pinned so existing checkpoints keep resuming, and a
+    parameter change still changes it."""
+    import pyarrow as pa
+
+    from zetasketch_spark.operators.checkpoint import query_signature
+    from zetasketch_spark.sketches.base import HllFamily
+
+    sig = query_signature(["role"], "conv_id", HllFamily(precision=13), 1)
+    assert sig == "88a9524154"
+    used = HllFamily(precision=13)
+    used.prepare_arrow(pa.array([1, 2, 3], type=pa.int64()))
+    assert query_signature(["role"], "conv_id", used, 1) == sig
+    assert query_signature(["role"], "conv_id",
+                           HllFamily(precision=14), 1) != sig
+
+
 def test_embedding_near_dups_recall(spark):
     """Planted near-duplicate vectors (cosine ~0.99) must all be found,
     and nothing else at threshold 0.95 over background gaussians."""

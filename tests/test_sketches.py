@@ -3,14 +3,29 @@
 
 from __future__ import annotations
 
+import ast
+import functools
+import importlib
+import pathlib
+import pkgutil
+import struct
+
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as hst
 
+import zetasketch_spark.sketches as sketches_pkg
+from zetasketch_spark.sketches.base import _REGISTRY, get_family
 from zetasketch_spark.sketches.bloom import BloomFilter, optimal_params
 from zetasketch_spark.sketches.countmin import CountMinSketch
 from zetasketch_spark.sketches.kll import KllSketch
 from zetasketch_spark.sketches.tdigest import TDigest
+
+for _mod in pkgutil.iter_modules(sketches_pkg.__path__):
+    importlib.import_module(f"{sketches_pkg.__name__}.{_mod.name}")
+#: every registered family, HLL included: the wire fuzz tests cover each
+_FAMILIES = sorted(_REGISTRY)
 
 
 # --- Count-Min ----------------------------------------------------------------
@@ -341,6 +356,17 @@ def _fuzz_feed(fam, family, st, vals):
     else:
         fam.update(st, vals)
 
+
+def _fuzz_values(family, n, mod):
+    """n values with mod distinct ones, in the family's input type."""
+    if family == "freqdirs":
+        return pd.Series([np.arange(8, dtype=float) * (i % mod)
+                          for i in range(n)])
+    if family in ("kll", "tdigest", "ddsketch"):
+        return pd.Series([float(i % mod) for i in range(n)])
+    return pd.Series([f"k{i % mod}" for i in range(n)])
+
+
 @pytest.mark.parametrize("family", ["countmin", "kll", "tdigest", "bloom", "theta", "ddsketch", "freqdirs", "countsketch", "timetheta"])
 def test_wire_format_versioned_forward_compat(family):
     """Every non-HLL family carries an explicit encoding_version and, like
@@ -384,35 +410,22 @@ def test_wire_format_versioned_forward_compat(family):
         fam.deserialize(bytes(blob[:4]) + bytes([0]) + bytes(blob[5:]))
 
 
-@pytest.mark.parametrize("family", ["countmin", "kll", "tdigest", "bloom", "theta", "ddsketch", "freqdirs", "countsketch", "timetheta"])
+@pytest.mark.parametrize("family", _FAMILIES)
 def test_truncated_blob_fails_loudly(family):
-    """Every truncation of a serialized state must raise (ValueError /
-    struct.error) — never return a silently-corrupt sketch. At 100 TB a
-    torn write or short read WILL happen; quiet partial parses poison
-    merges downstream."""
-    import struct as _struct
-
-    import pandas as pd
-
-    from zetasketch_spark.sketches.base import get_family
-
+    """Every truncation of a serialized state must raise ValueError —
+    never return a silently-corrupt sketch. At 100 TB a torn write or
+    short read WILL happen; quiet partial parses poison merges
+    downstream."""
     fam = get_family(family)
     st = fam.make()
-    if family == "freqdirs":
-        vals = pd.Series([np.arange(8, dtype=float) * (i % 97)
-                          for i in range(500)])
-    elif family in ("kll", "tdigest", "ddsketch"):
-        vals = pd.Series([float(i % 97) for i in range(500)])
-    else:
-        vals = pd.Series([f"k{i % 97}" for i in range(500)])
-    _fuzz_feed(fam, family, st, vals)
+    _fuzz_feed(fam, family, st, _fuzz_values(family, 500, 97))
     blob = fam.serialize(st)
     full = fam.serialize(fam.deserialize(blob))
     step = max(1, len(blob) // 53)
     for cut in range(0, len(blob), step):
         try:
             got = fam.deserialize(blob[:cut])
-        except (ValueError, _struct.error):
+        except ValueError:
             continue
         # a parse that 'succeeds' on a truncation must have recovered the
         # complete state (i.e. only trailing no-op bytes were cut)
@@ -720,28 +733,15 @@ def test_bloom_promoted_probe_batch_no_false_negatives():
     assert bf2.contains_series(pd.Series([1, 2], dtype="int64")).all()
 
 
-@pytest.mark.parametrize("family", ["countmin", "kll", "tdigest", "bloom",
-                                    "theta", "freqdirs", "countsketch",
-                                    "timetheta"])
+@pytest.mark.parametrize("family", _FAMILIES)
 def test_mutation_fuzz_never_hangs_or_crashes(family):
     """Beyond truncation: random single-byte mutations of a serialized
     state must either parse (possibly to a different valid state) or
-    raise a clean ValueError/struct.error — never segfault, hang, or
-    allocate unboundedly from a lying length field."""
-    import struct as _struct
-
-    from zetasketch_spark.sketches.base import get_family
-
+    raise a clean ValueError — never segfault, hang, or allocate
+    unboundedly from a lying length field."""
     fam = get_family(family)
     st = fam.make()
-    if family == "freqdirs":
-        vals = pd.Series([np.arange(8, dtype=float) * (i % 53)
-                          for i in range(400)])
-    elif family in ("kll", "tdigest"):
-        vals = pd.Series([float(i % 53) for i in range(400)])
-    else:
-        vals = pd.Series([f"k{i % 53}" for i in range(400)])
-    _fuzz_feed(fam, family, st, vals)
+    _fuzz_feed(fam, family, st, _fuzz_values(family, 400, 53))
     blob = bytearray(fam.serialize(st))
     rng = np.random.default_rng(1234)
     for _ in range(300):
@@ -757,34 +757,143 @@ def test_mutation_fuzz_never_hangs_or_crashes(family):
         try:
             got = fam.deserialize(bytes(mutant))
             fam.serialize(got)  # parsed states must re-serialize
-        except (ValueError, _struct.error, OverflowError):
+        except ValueError:
             continue
 
 
-def test_mutation_fuzz_hll_proto():
-    """Same single-byte mutation fuzz for the HLL AggregatorStateProto
-    parser (complements the existing truncation fuzz)."""
-    from zetasketch_spark.hll import HllSketch
+#: each struct family's payload header after the 5-byte envelope; its
+#: integer fields are the ones the fuzz sets to their maximum ('d' fields
+#: are doubles). HLL's header fields are proto varints (_header_variants).
+_HEADERS = {"bloom": "<qiq", "countmin": "<iiqii", "countsketch": "<iiQq",
+            "ddsketch": "<diqqdd", "freqdirs": "<iiqiqdd", "kll": "<iqiqdd",
+            "tdigest": "<dqidd", "theta": "<iqQi", "timetheta": "<iqQi"}
+#: small configurations keep the every-truncation loop cheap
+_SMALL = {"bloom": {"m": 1024, "k": 3}, "countsketch": {"width": 64, "depth": 3},
+          "countmin": {"width": 64, "depth": 3, "max_candidates": 8},
+          "ddsketch": {}, "freqdirs": {"ell": 4}, "hll": {"precision": 10},
+          "kll": {"k": 8}, "tdigest": {"delta": 20.0}, "theta": {"k": 16},
+          "timetheta": {"k": 16}}
 
-    sk = HllSketch(precision=12, sparse_precision=15)
-    sk.add_longs(np.arange(300, dtype=np.int64))
-    blob = bytearray(sk.serialize())
-    rng = np.random.default_rng(77)
-    for _ in range(300):
-        mutant = bytearray(blob)
-        op = int(rng.integers(0, 3))
-        pos = int(rng.integers(0, len(mutant)))
-        if op == 0:
-            mutant[pos] = int(rng.integers(0, 256))
-        elif op == 1:
-            mutant.insert(pos, int(rng.integers(0, 256)))
+
+@functools.cache
+def _small_blob(family):
+    fam = get_family(family, **_SMALL[family])
+    state = fam.make()
+    _fuzz_feed(fam, family, state, _fuzz_values(family, 300, 41))
+    return fam.serialize(state)
+
+
+def _header_variants(family, blob):
+    """The blob with each integer header field set to 2^31-1 (32-bit) or
+    2^63-1 (64-bit), one field at a time."""
+    if family == "hll":
+        return _hll_header_variants(blob)
+    out, off = [], 5
+    for code in _HEADERS[family][1:]:
+        if code in "iqQ":
+            out.append(_flipped(blob, "<" + code, off,
+                                2**31 - 1 if code == "i" else 2**63 - 1))
+        off += struct.calcsize("<" + code)
+    return out
+
+
+def _hll_header_variants(blob):
+    """HLL's header fields are varints: type, num_values,
+    encoding_version and value_type in the AggregatorStateProto; sparse
+    size, precision and sparse precision in its HLL submessage. The last
+    occurrence of a field wins, so appending one sets it."""
+    from zetasketch_spark.hll import _parse_proto, _put_varint
+
+    def with_field(msg, field, value):
+        out = bytearray(msg)
+        _put_varint(out, field << 3)
+        _put_varint(out, value)
+        return bytes(out)
+
+    inner = _parse_proto(blob)[112]
+    out = []
+    for value in (2**31 - 1, 2**63 - 1):
+        out += [with_field(blob, f, value) for f in (1, 2, 3, 4)]
+        for f in (2, 3, 4):
+            sub = with_field(inner, f, value)
+            msg = bytearray(blob)
+            _put_varint(msg, (112 << 3) | 2)
+            _put_varint(msg, len(sub))
+            out.append(bytes(msg) + sub)
+    return out
+
+
+def _parses_cleanly(fam, blob):
+    """A blob raises ValueError or parses to a state that re-serializes."""
+    try:
+        state = fam.deserialize(blob)
+    except ValueError:
+        return
+    fam.serialize(state)
+
+
+def test_fuzz_covers_every_registered_family():
+    assert set(_FAMILIES) == set(_SMALL) == set(_HEADERS) | {"hll"}
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_registry_wire_fuzz_fixed_cases(family):
+    """Every truncation, every other family's blob and each integer
+    header field at its maximum raise ValueError or parse to a state
+    that re-serializes — never struct.error, OverflowError or a huge
+    allocation."""
+    fam = get_family(family, **_SMALL[family])
+    blob = _small_blob(family)
+    for cut in range(len(blob)):
+        _parses_cleanly(fam, blob[:cut])
+    for other in _FAMILIES:
+        if other != family:
+            _parses_cleanly(fam, _small_blob(other))
+    for variant in _header_variants(family, blob):
+        _parses_cleanly(fam, variant)
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+@settings(max_examples=150, deadline=None)
+@given(edits=hst.lists(hst.tuples(hst.sampled_from(["flip", "insert", "delete"]),
+                                  hst.integers(0, 1 << 20),
+                                  hst.integers(0, 255)),
+                       min_size=1, max_size=4))
+def test_registry_wire_fuzz_mutations(family, edits):
+    """Bit flips and byte inserts / deletes anywhere in a state's blob
+    raise ValueError or parse to a state that re-serializes."""
+    fam = get_family(family, **_SMALL[family])
+    blob = bytearray(_small_blob(family))
+    for op, pos, byte in edits:
+        pos %= len(blob)
+        if op == "flip":
+            blob[pos] ^= 1 << (byte % 8)
+        elif op == "insert":
+            blob.insert(pos, byte)
         else:
-            del mutant[pos]
-        try:
-            got = HllSketch.deserialize(bytes(mutant))
-            got.serialize()
-        except (ValueError, OverflowError):
-            continue  # IndexError would be a dirty parse -> must not leak
+            del blob[pos]
+    _parses_cleanly(fam, bytes(blob))
+
+
+def test_only_wire_unpacks_sketch_bytes():
+    """Blob parsing stays in one module: no sketch module other than
+    wire.py calls struct.unpack* or np.frombuffer with an offset — each
+    reads its payload through wire.Reader."""
+    offenders = []
+    for path in sorted(pathlib.Path(sketches_pkg.__path__[0]).glob("*.py")):
+        if path.name == "wire.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            f = node.func
+            if (isinstance(f.value, ast.Name) and f.value.id == "struct"
+                    and "unpack" in f.attr) or (
+                    f.attr == "frombuffer"
+                    and any(kw.arg == "offset" for kw in node.keywords)):
+                offenders.append(f"{path.name}:{node.lineno} {f.attr}")
+    assert offenders == []
 
 
 def test_theta_containment_direct():

@@ -62,8 +62,10 @@ def query_signature(keys: list[str], col: str, family: SketchFamily,
                     tree_levels: int) -> str:
     """Identity of WHAT is being computed: two queries over the same input
     must never share checkpointed partials (a col/precision change with
-    the same job name would otherwise silently resume stale state)."""
-    cfg = {k: repr(v) for k, v in sorted(vars(family).items())}
+    the same job name would otherwise silently resume stale state).
+    Runtime caches are not parameters (``SketchFamily.params``): a family
+    that has sketched a batch signs like a pristine one."""
+    cfg = {k: repr(v) for k, v in sorted(family.params().items())}
     payload = json.dumps([type(family).__name__, cfg, list(keys), col,
                           tree_levels])
     return hashlib.sha256(payload.encode()).hexdigest()[:10]

@@ -265,15 +265,10 @@ class SketchTable:
 
     def _identity(self) -> dict:
         # family identity = class + its scalar/tuple parameters (JSON-safe,
-        # deterministic across processes; cached arrays etc. are excluded).
-        # Underscore-prefixed attrs are runtime caches, not parameters
-        # (e.g. HllFamily.prepare_arrow memoizes _arrow_value_type): a
-        # family instance that was exercised before the table was opened
-        # must hash to the same identity as a pristine one.
+        # deterministic across processes; cached arrays etc. are excluded;
+        # runtime caches are not parameters, SketchFamily.params).
         params = {}
-        for k, v in sorted(vars(self.family).items()):
-            if k.startswith("_"):
-                continue
+        for k, v in sorted(self.family.params().items()):
             if isinstance(v, tuple):
                 v = list(v)
             if v is None or isinstance(v, (int, float, str, bool, list)):

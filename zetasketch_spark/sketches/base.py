@@ -20,6 +20,8 @@ from typing import Any, Callable
 import numpy as np
 import pandas as pd
 
+from zetasketch_spark.hll import HllSketch
+
 
 class _SeriesPrepared:
     """Positional-slice view over a pandas Series (the generic
@@ -61,11 +63,15 @@ def quantile_result_fields(quantiles) -> list[tuple[str, str]]:
 
 
 class SketchFamily:
-    """Base class; subclasses define the five operations."""
+    """Base class; subclasses define ``make`` / ``update`` / ``result``
+    and name their ``state_type``, which supplies the rest."""
 
     name: str = "abstract"
     #: (column name, spark sql type string) of result() output
     result_fields: list[tuple[str, str]] = [("estimate", "bigint")]
+    #: the state class: ``merge`` / ``serialize`` / ``deserialize``
+    #: delegate to its methods of the same names
+    state_type: type
 
     def prepare_arrow(self, arr) -> Any:
         """Vectorize the whole Arrow column once per batch (e.g. hash it);
@@ -88,16 +94,24 @@ class SketchFamily:
         raise NotImplementedError
 
     def merge(self, a: Any, b: Any) -> Any:
-        raise NotImplementedError
+        a.merge(b)
+        return a
 
     def serialize(self, state: Any) -> bytes:
-        raise NotImplementedError
+        return state.serialize()
 
     def deserialize(self, data: bytes) -> Any:
-        raise NotImplementedError
+        return self.state_type.deserialize(bytes(data))
 
     def result(self, state: Any) -> tuple:
         raise NotImplementedError
+
+    def params(self) -> dict[str, Any]:
+        """The public attributes: the family's parameters. Underscore
+        attributes are runtime caches (e.g. HllFamily.prepare_arrow
+        memoizes ``_arrow_value_type``), so a family instance that has
+        run a batch has the same parameters as a pristine one."""
+        return {k: v for k, v in vars(self).items() if not k.startswith("_")}
 
     # -- conveniences shared by the harness ---------------------------------
 
@@ -155,6 +169,7 @@ class HllFamily(SketchFamily):
 
     name = "hll"
     result_fields = [("estimate", "bigint")]
+    state_type = HllSketch
 
     def __init__(self, precision: int = 15, sparse_precision: int | None = None,
                  no_sparse: bool = False, value_type: str | None = None):
@@ -172,8 +187,6 @@ class HllFamily(SketchFamily):
         self.value_type = value_type
 
     def make(self):
-        from zetasketch_spark.hll import HllSketch
-
         return HllSketch(precision=self.precision,
                          sparse_precision=self.sparse_precision,
                          no_sparse=self.no_sparse)
@@ -262,18 +275,6 @@ class HllFamily(SketchFamily):
             state.value_type = getattr(self, "_arrow_value_type", 0)
         state.add_hashes(np.asarray(hashes))
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state) -> bytes:
-        return state.serialize()
-
-    def deserialize(self, data: bytes):
-        from zetasketch_spark.hll import HllSketch
-
-        return HllSketch.deserialize(data)
 
     def result(self, state) -> tuple:
         return (int(state.estimate()),)

@@ -24,6 +24,7 @@ from zetasketch_spark.hashing import (
     fingerprint_str_series,
 )
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"BLM2"
 _ENCODING_VERSION = 1
@@ -144,8 +145,6 @@ class BloomFilter:
         self.n_added += other.n_added
 
     def serialize(self) -> bytes:
-        from zetasketch_spark.sketches.wire import pack_header
-
         return (pack_header(_MAGIC, _ENCODING_VERSION)
                 + struct.pack("<qiq", self.m, self.k, self.n_added)
                 + self.words.tobytes())
@@ -155,29 +154,23 @@ class BloomFilter:
         """Parse a serialized state; a blob this module could not have
         written (m not a positive multiple of 64, k < 1, a negative add
         count, bits running past the buffer, truncation anywhere) raises
-        ValueError before anything is allocated — never a bare
-        ``struct.error`` or a ``MemoryError``."""
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "Bloom")
-        try:
-            m, k, n = struct.unpack_from("<qiq", data, off)
-        except struct.error as e:
-            raise ValueError(f"truncated Bloom filter: {e}") from None
-        off += struct.calcsize("<qiq")
-        if m <= 0 or m % 64 or k < 1 or n < 0 or off + m // 8 > len(data):
+        ValueError before anything is allocated."""
+        r = Reader(data, _MAGIC, "Bloom")
+        m, k, n = r.unpack("<qiq")
+        if m <= 0 or m % 64 or k < 1 or n < 0:
             raise ValueError(
-                f"corrupt Bloom filter: m={m} bits, k={k}, n_added={n} in "
-                f"a {len(data)}-byte blob")
+                f"corrupt Bloom filter: m={m} bits, k={k}, n_added={n}")
+        words = r.array(np.uint64, m // 64)
         bf = cls(m=m, k=k)
-        bf.words = np.frombuffer(data, dtype=np.uint64, count=m // 64, offset=off).copy()
+        bf.words = words.copy()
         bf.n_added = n
-        bf.encoding_version = version  # trailing bytes beyond words are
-        return bf                      # ignored (forward compat)
+        bf.encoding_version = r.version  # trailing bytes ignored
+        return bf
 
 
 class BloomFamily(SketchFamily):
     name = "bloom"
+    state_type = BloomFilter
     result_fields = [("n_added", "bigint"), ("bits_set", "bigint"),
                      ("expected_fpr", "double")]
 
@@ -215,16 +208,6 @@ class BloomFamily(SketchFamily):
         # hashing.resolve_float64_hash_domain rule
         state.add_series(values, value_type=self.value_type)
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return BloomFilter.deserialize(bytes(data))
 
     def result(self, state):
         bits = int(np.unpackbits(state.words.view(np.uint8)).sum())

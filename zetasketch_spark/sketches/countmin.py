@@ -29,6 +29,7 @@ from zetasketch_spark.hashing import (
     fingerprint_str_series,
 )
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"CMS2"
 _ENCODING_VERSION = 1
@@ -167,8 +168,6 @@ class CountMinSketch:
         cand_keys = b"".join(key_blobs)
         cand_counts = np.fromiter((self.candidates[k] for k in keys),
                                   dtype=np.int64, count=len(keys))
-        from zetasketch_spark.sketches.wire import pack_header
-
         header = pack_header(_MAGIC, _ENCODING_VERSION) + struct.pack(
             "<iiqii", self.width, self.depth,
             self.total, self.max_candidates, len(self.candidates))
@@ -180,50 +179,39 @@ class CountMinSketch:
     def deserialize(cls, data: bytes) -> "CountMinSketch":
         """Parse a serialized state; a blob this module could not have
         written (non-positive dimensions, a negative candidate count,
-        counters or candidates running past the buffer, truncation
-        anywhere) raises ValueError before anything is allocated — never
-        a bare ``struct.error`` or a ``MemoryError``."""
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "CountMin")
-        try:
-            width, depth, total, maxc, ncand = struct.unpack_from(
-                "<iiqii", data, off)
-        except struct.error as e:
-            raise ValueError(f"truncated CountMin sketch: {e}") from None
-        off += struct.calcsize("<iiqii")
-        if width <= 0 or depth <= 0 or ncand < 0 or \
-                off + 8 * width * depth + 12 * ncand + 4 > len(data):
+        counters or candidates running past the buffer, key lengths that
+        do not sum to the key bytes, truncation anywhere) raises
+        ValueError before anything is allocated."""
+        r = Reader(data, _MAGIC, "CountMin")
+        width, depth, total, maxc, ncand = r.unpack("<iiqii")
+        if width <= 0 or depth <= 0:
             raise ValueError(
-                f"corrupt CountMin sketch: {depth}x{width} counters and "
-                f"{ncand} candidates do not fit the {len(data)}-byte blob")
+                f"corrupt CountMin sketch: {depth}x{width} counters")
+        counters = r.array(np.int64, width * depth)
+        counts = r.array(np.int64, ncand)
+        key_lens = r.array(np.int32, ncand)
+        (klen,) = r.unpack("<i")
+        key_bytes = r.array(np.uint8, klen).tobytes()
+        if (key_lens < 0).any() or int(key_lens.sum()) != klen:
+            raise ValueError(
+                f"corrupt CountMin sketch: candidate key lengths do not "
+                f"sum to the {klen} key bytes")
         sk = cls(width=width, depth=depth, max_candidates=maxc)
-        n = width * depth
-        sk.counters = np.frombuffer(data, dtype=np.int64, count=n, offset=off).reshape(depth, width).copy()
-        off += n * 8
-        counts = np.frombuffer(data, dtype=np.int64, count=ncand, offset=off)
-        off += ncand * 8
-        key_lens = np.frombuffer(data, dtype=np.int32, count=ncand, offset=off)
-        off += ncand * 4
-        (klen,) = struct.unpack_from("<i", data, off)
-        off += 4
-        if off + klen > len(data) or int(key_lens.sum()) != klen:
-            # bytes slicing would silently return SHORT keys on a torn
-            # write / truncated read — fail loudly instead
-            raise ValueError("truncated CountMin candidate keys")
+        sk.counters = counters.reshape(depth, width).copy()
         keys = []
-        pos = off
-        for ln in key_lens:
-            keys.append(data[pos:pos + int(ln)].decode("utf-8"))
-            pos += int(ln)
-        sk.candidates = dict(zip(keys, (int(c) for c in counts)))
+        pos = 0
+        for ln in key_lens.tolist():
+            keys.append(key_bytes[pos:pos + ln].decode("utf-8"))
+            pos += ln
+        sk.candidates = dict(zip(keys, counts.tolist()))
         sk.total = total
-        sk.encoding_version = version  # trailing bytes ignored (forward compat)
+        sk.encoding_version = r.version  # trailing bytes ignored
         return sk
 
 
 class CountMinFamily(SketchFamily):
     name = "countmin"
+    state_type = CountMinSketch
     result_fields = [("total", "bigint")]
 
     def __init__(self, width: int = 2048, depth: int = 5, max_candidates: int = 512):
@@ -257,16 +245,6 @@ class CountMinFamily(SketchFamily):
         else:
             state.add_series(prepared_slice)
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return CountMinSketch.deserialize(bytes(data))
 
     def result(self, state):
         return (state.total,)

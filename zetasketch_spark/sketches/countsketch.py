@@ -55,6 +55,7 @@ import numpy as np
 import pandas as pd
 
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"CSK2"
 _ENCODING_VERSION = 1
@@ -210,8 +211,6 @@ class CountSketch:
         self.total += other.total
 
     def serialize(self) -> bytes:
-        from zetasketch_spark.sketches.wire import pack_header
-
         return (pack_header(_MAGIC, _ENCODING_VERSION)
                 + struct.pack("<iiQq", self.width, self.depth,
                               self.seed, self.total)
@@ -219,24 +218,17 @@ class CountSketch:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "CountSketch":
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "CountSketch")
-        width, depth, seed, total = struct.unpack_from("<iiQq", data, off)
-        off += struct.calcsize("<iiQq")
-        # validate the header against the actual payload BEFORE sizing an
-        # allocation from it — a lying width/depth from a torn write must
-        # fail loudly, not allocate width*depth*8 bytes of garbage
+        r = Reader(data, _MAGIC, "CountSketch")
+        width, depth, seed, total = r.unpack("<iiQq")
         if width <= 0 or not 1 <= depth <= _MAX_DEPTH:
             raise ValueError(f"invalid CountSketch shape {depth}x{width}")
-        n = width * depth
-        if off + n * 8 > len(data):
-            raise ValueError("truncated CountSketch counters")
+        # the counters must fit the payload BEFORE width*depth sizes an
+        # allocation: a lying header from a torn write fails loudly
+        counters = r.array(np.int64, width * depth)
         sk = cls(width=width, depth=depth, seed=seed)
-        sk.counters = np.frombuffer(
-            data, dtype=np.int64, count=n, offset=off).reshape(depth, width).copy()
+        sk.counters = counters.reshape(depth, width).copy()
         sk.total = total
-        sk.encoding_version = version  # trailing bytes ignored (forward compat)
+        sk.encoding_version = r.version  # trailing bytes ignored
         return sk
 
 
@@ -246,6 +238,7 @@ class CountSketchFamily(SketchFamily):
     — the repetition-concentration statistic of the group's key column."""
 
     name = "countsketch"
+    state_type = CountSketch
     result_fields = [("f2_est", "double"), ("n", "bigint")]
 
     def __init__(self, width: int = 2048, depth: int = 5, seed: int = 0):
@@ -259,16 +252,6 @@ class CountSketchFamily(SketchFamily):
     def update(self, state, values):
         state.add_series(values)
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return CountSketch.deserialize(bytes(data))
 
     def result(self, state):
         return (state.f2_estimate(), state.total)

@@ -50,6 +50,7 @@ import pandas as pd
 
 from zetasketch_spark.sketches.base import (
     SketchFamily, quantile_result_fields, register_family)
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"DDS2"  # trailing digit = layout generation (wire.py convention)
 _ENCODING_VERSION = 1
@@ -61,7 +62,8 @@ class DDSketch:
                  "encoding_version")
 
     def __init__(self, alpha: float = 0.01, max_buckets: int = 2048):
-        if not 0.0 < alpha < 1.0:
+        # an alpha below ~1e-16 rounds gamma to 1.0: no bucket ratio
+        if not 0.0 < alpha < 1.0 or (1.0 + alpha) / (1.0 - alpha) == 1.0:
             raise ValueError(f"alpha must be in (0, 1), got {alpha}")
         self.alpha = float(alpha)
         self.max_buckets = int(max_buckets)
@@ -200,8 +202,6 @@ class DDSketch:
     # -- serde ---------------------------------------------------------------
 
     def serialize(self) -> bytes:
-        from zetasketch_spark.sketches.wire import pack_header
-
         parts = [pack_header(_MAGIC, _ENCODING_VERSION),
                  struct.pack("<diqqdd", self.alpha, self.max_buckets,
                              self.n, self.zero_count, self._min, self._max)]
@@ -217,30 +217,16 @@ class DDSketch:
     def deserialize(cls, data: bytes) -> "DDSketch":
         """Parse a serialized state; a blob this module could not have
         written (alpha outside (0, 1), a negative or past-the-buffer
-        store length, truncation anywhere) raises ValueError, never a
-        bare ``struct.error``."""
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "DDSketch")
-        try:
-            alpha, mb, n, zc, mn, mx = struct.unpack_from("<diqqdd", data, off)
-            off += struct.calcsize("<diqqdd")
-            sk = cls(alpha=alpha, max_buckets=mb)
-            for store in (sk.pos, sk.neg):
-                (ln,) = struct.unpack_from("<i", data, off)
-                off += 4
-                if ln < 0 or off + 16 * ln > len(data):
-                    raise ValueError(
-                        f"corrupt DDSketch: a store of {ln} buckets runs "
-                        f"past the {len(data)}-byte blob")
-                idx = np.frombuffer(data, dtype=np.int64, count=ln, offset=off)
-                off += ln * 8
-                cnt = np.frombuffer(data, dtype=np.int64, count=ln, offset=off)
-                off += ln * 8
-                store.update(zip(idx.tolist(), cnt.tolist()))
-        except struct.error as e:
-            raise ValueError(f"truncated DDSketch: {e}") from None
-        sk.encoding_version = version
+        store length, truncation anywhere) raises ValueError."""
+        r = Reader(data, _MAGIC, "DDSketch")
+        alpha, mb, n, zc, mn, mx = r.unpack("<diqqdd")
+        sk = cls(alpha=alpha, max_buckets=mb)
+        for store in (sk.pos, sk.neg):
+            (ln,) = r.unpack("<i")
+            idx = r.array(np.int64, ln)
+            cnt = r.array(np.int64, ln)
+            store.update(zip(idx.tolist(), cnt.tolist()))
+        sk.encoding_version = r.version  # trailing bytes ignored
         sk.n = n
         sk.zero_count = zc
         sk._min, sk._max = mn, mx
@@ -251,6 +237,7 @@ class DDSketchFamily(SketchFamily):
     """Relative-error quantiles through the shared aggregation harness."""
 
     name = "ddsketch"
+    state_type = DDSketch
 
     def __init__(self, alpha: float = 0.01, max_buckets: int = 2048,
                  quantiles: tuple = (0.5, 0.9, 0.99)):
@@ -274,16 +261,6 @@ class DDSketchFamily(SketchFamily):
     def update_prepared(self, state, values):
         state.add_array(np.asarray(values, dtype=np.float64))
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return DDSketch.deserialize(bytes(data))
 
     def result(self, state):
         return (*state.quantiles(self.quantiles), state.n)

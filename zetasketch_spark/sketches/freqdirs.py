@@ -64,6 +64,7 @@ import numpy as np
 import pandas as pd
 
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"FDS2"  # trailing digit = layout generation (wire.py convention)
 _ENCODING_VERSION = 1
@@ -247,8 +248,6 @@ class FrequentDirections:
     # -- serde -------------------------------------------------------------
 
     def serialize(self) -> bytes:
-        from zetasketch_spark.sketches.wire import pack_header
-
         dim = self.dim if self.dim is not None else -1
         head = struct.pack("<iiqiqdd", self.ell, dim, self.n, self.n_buf,
                            0, self.frob2, self.shrink_total)
@@ -258,12 +257,8 @@ class FrequentDirections:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "FrequentDirections":
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "FrequentDirections")
-        ell, dim, n, n_buf, _pad, frob2, shrink_total = struct.unpack_from(
-            "<iiqiqdd", data, off)
-        off += struct.calcsize("<iiqiqdd")
+        r = Reader(data, _MAGIC, "FrequentDirections")
+        ell, dim, n, n_buf, _pad, frob2, shrink_total = r.unpack("<iiqiqdd")
         # validate the header BEFORE allocating anything from it: a torn
         # write or bit-flip must raise, never trigger a huge zeros()
         # allocation or a silently-corrupt state (the torn-write contract
@@ -277,19 +272,16 @@ class FrequentDirections:
             raise ValueError(
                 "implausible FrequentDirections header (buffer would be "
                 f"{2 * ell} x {dim} floats)")
-        if dim >= 0 and len(data) < off + n_buf * dim * 8:
-            raise ValueError("truncated FrequentDirections blob")
         if not (n >= 0 and frob2 >= 0.0 and shrink_total >= 0.0):
             raise ValueError("corrupt FrequentDirections counters")
+        rows = r.array(np.float64, n_buf * dim)  # n_buf = 0 when dim = -1
         sk = cls(ell=ell, dim=dim if dim >= 0 else None)
-        sk.encoding_version = version
+        sk.encoding_version = r.version  # trailing bytes ignored
         sk.n = n
         sk.frob2 = frob2
         sk.shrink_total = shrink_total
-        if dim >= 0 and n_buf > 0:
-            rows = np.frombuffer(data, dtype=np.float64, count=n_buf * dim,
-                                 offset=off).reshape(n_buf, dim)
-            sk.buf[:n_buf] = rows
+        if n_buf:
+            sk.buf[:n_buf] = rows.reshape(n_buf, dim)
             sk.n_buf = n_buf
         return sk
 
@@ -408,6 +400,7 @@ class FreqDirsFamily(SketchFamily):
     ``__spark_entry__.q_embedding_norms`` for the gate pattern)."""
 
     name = "freqdirs"
+    state_type = FrequentDirections
     result_fields = [("n", "bigint"), ("dim", "int"),
                      ("err_certificate", "double"),
                      ("err_bound", "double")]
@@ -440,16 +433,6 @@ class FreqDirsFamily(SketchFamily):
         if rows.size:
             state.add_matrix(rows)
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return FrequentDirections.deserialize(bytes(data))
 
     def result(self, state):
         return (int(state.n), int(state.dim or 0),

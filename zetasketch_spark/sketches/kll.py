@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"KLL2"
 _ENCODING_VERSION = 1
@@ -143,8 +144,6 @@ class KllSketch:
     # -- serde ---------------------------------------------------------------------
 
     def serialize(self) -> bytes:
-        from zetasketch_spark.sketches.wire import pack_header
-
         parts = [pack_header(_MAGIC, _ENCODING_VERSION),
                  struct.pack("<iqiqdd", self.k, self.n, len(self.levels),
                              self._rng_counter, self._min, self._max)]
@@ -158,32 +157,15 @@ class KllSketch:
         """Parse a serialized state; a blob this module could not have
         written (k out of range, n < 0, an impossible level count, a
         level running past the buffer, truncation anywhere) raises
-        ValueError, never a bare ``struct.error`` or a silent short
-        parse."""
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "KLL")
-        try:
-            k, n, nlev, ctr, mn, mx = struct.unpack_from("<iqiqdd", data, off)
-            off += struct.calcsize("<iqiqdd")
-            if n < 0 or not 0 <= nlev <= _MAX_LEVELS:
-                raise ValueError(
-                    f"corrupt KLL sketch: n={n} with {nlev} levels")
-            sk = cls(k=k)
-            levels = []
-            for _ in range(nlev):
-                (ln,) = struct.unpack_from("<i", data, off)
-                off += 4
-                if ln < 0 or off + 8 * ln > len(data):
-                    raise ValueError(
-                        f"corrupt KLL sketch: a level of {ln} items runs "
-                        f"past the {len(data)}-byte blob")
-                levels.append(np.frombuffer(data, dtype=np.float64, count=ln,
-                                            offset=off).copy())
-                off += ln * 8
-        except struct.error as e:
-            raise ValueError(f"truncated KLL sketch: {e}") from None
-        sk.encoding_version = version  # trailing bytes ignored (forward compat)
+        ValueError, never a silent short parse."""
+        r = Reader(data, _MAGIC, "KLL")
+        k, n, nlev, ctr, mn, mx = r.unpack("<iqiqdd")
+        if n < 0 or not 0 <= nlev <= _MAX_LEVELS:
+            raise ValueError(f"corrupt KLL sketch: n={n} with {nlev} levels")
+        sk = cls(k=k)
+        levels = [r.array(np.float64, r.unpack("<i")[0]).copy()
+                  for _ in range(nlev)]
+        sk.encoding_version = r.version  # trailing bytes ignored
         sk.n = n
         sk._rng_counter = ctr
         sk._min, sk._max = mn, mx
@@ -222,6 +204,7 @@ def _prepare_float_arrow(arr):
 
 class KllFamily(SketchFamily):
     name = "kll"
+    state_type = KllSketch
 
     def __init__(self, k: int = 200, quantiles: tuple = (0.1, 0.5, 0.9, 0.99)):
         from zetasketch_spark.sketches.base import quantile_result_fields
@@ -250,16 +233,6 @@ class KllFamily(SketchFamily):
         state.levels[0] = np.concatenate([state.levels[0], arr])
         state._compress()
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return KllSketch.deserialize(bytes(data))
 
     def result(self, state):
         return (*state.quantiles(self.quantiles), state.n)

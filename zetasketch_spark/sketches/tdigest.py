@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"TDG2"
 _ENCODING_VERSION = 1
@@ -126,8 +127,6 @@ class TDigest:
 
     def serialize(self) -> bytes:
         self._compress()
-        from zetasketch_spark.sketches.wire import pack_header
-
         header = pack_header(_MAGIC, _ENCODING_VERSION) + struct.pack(
             "<dqidd", self.delta, self.n, len(self.means), self._min, self._max)
         return header + self.means.tobytes() + self.weights.tobytes()
@@ -137,34 +136,25 @@ class TDigest:
         """Parse a serialized state; a blob this module could not have
         written (δ not finite and positive, a negative count or centroid
         count, centroids running past the buffer, truncation anywhere)
-        raises ValueError before anything is allocated — never a bare
-        ``struct.error``."""
-        from zetasketch_spark.sketches.wire import read_header
-
-        fmt = "<dqidd"
-        version, off = read_header(data, _MAGIC, "t-digest")
-        try:
-            delta, n, ncent, mn, mx = struct.unpack_from(fmt, data, off)
-        except struct.error as e:
-            raise ValueError(f"truncated t-digest: {e}") from None
-        off += struct.calcsize(fmt)
-        if not (math.isfinite(delta) and delta > 0) or n < 0 or ncent < 0 \
-                or off + 16 * ncent > len(data):
-            raise ValueError(
-                f"corrupt t-digest: delta={delta}, n={n}, {ncent} centroids "
-                f"in a {len(data)}-byte blob")
+        raises ValueError before anything is allocated."""
+        r = Reader(data, _MAGIC, "t-digest")
+        delta, n, ncent, mn, mx = r.unpack("<dqidd")
+        if not (math.isfinite(delta) and delta > 0) or n < 0:
+            raise ValueError(f"corrupt t-digest: delta={delta}, n={n}")
+        means = r.array(np.float64, ncent)
+        weights = r.array(np.float64, ncent)
         td = cls(delta=delta)
-        td.encoding_version = version  # trailing bytes ignored (forward compat)
+        td.encoding_version = r.version  # trailing bytes ignored
         td.n = n
         td._min, td._max = mn, mx
-        td.means = np.frombuffer(data, dtype=np.float64, count=ncent, offset=off).copy()
-        off += ncent * 8
-        td.weights = np.frombuffer(data, dtype=np.float64, count=ncent, offset=off).copy()
+        td.means = means.copy()
+        td.weights = weights.copy()
         return td
 
 
 class TDigestFamily(SketchFamily):
     name = "tdigest"
+    state_type = TDigest
 
     def __init__(self, delta: float = 200.0, quantiles: tuple = (0.1, 0.5, 0.9, 0.99)):
         from zetasketch_spark.sketches.base import quantile_result_fields
@@ -196,16 +186,6 @@ class TDigestFamily(SketchFamily):
         if sum(len(b) for b in state._buffer) >= state._buffer_limit:
             state._compress()
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return TDigest.deserialize(bytes(data))
 
     def result(self, state):
         return (*state.quantiles(self.quantiles), state.n)

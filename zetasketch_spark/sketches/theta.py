@@ -42,6 +42,7 @@ import pandas as pd
 
 from zetasketch_spark.hashing import fingerprint_canon_series
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"THT2"
 _ENCODING_VERSION = 1
@@ -207,8 +208,6 @@ class ThetaSketch:
     # -- serde -----------------------------------------------------------------
 
     def serialize(self) -> bytes:
-        from zetasketch_spark.sketches.wire import pack_header
-
         theta_stored = 0 if self.theta == _FULL else self.theta
         return b"".join([
             pack_header(_MAGIC, _ENCODING_VERSION),
@@ -219,28 +218,20 @@ class ThetaSketch:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "ThetaSketch":
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "theta")
-        k, num_values, theta_stored, n_ret = struct.unpack_from("<iqQi", data, off)
-        off += struct.calcsize("<iqQi")
-        if n_ret < 0 or off + 8 * n_ret > len(data):
-            # a lying length must not swallow trailing (forward-compat)
-            # bytes into the retained set or read past the buffer
-            raise ValueError(
-                f"corrupt theta sketch: claims {n_ret} retained hashes "
-                f"but {len(data) - off} payload bytes remain")
+        r = Reader(data, _MAGIC, "theta")
+        k, num_values, theta_stored, n_ret = r.unpack("<iqQi")
+        retained = r.array(np.uint64, n_ret)
         sk = cls(k=k)
-        sk.encoding_version = version  # trailing bytes ignored (forward compat)
+        sk.encoding_version = r.version  # trailing bytes ignored
         sk.num_values = num_values
         sk.theta = _FULL if theta_stored == 0 else int(theta_stored)
-        sk.retained = np.frombuffer(data, dtype=np.uint64, count=n_ret,
-                                    offset=off).copy()
+        sk.retained = retained.copy()
         return sk
 
 
 class ThetaFamily(SketchFamily):
     name = "theta"
+    state_type = ThetaSketch
     result_fields = [("estimate", "bigint")]
 
     def __init__(self, k: int = 4096):
@@ -262,16 +253,6 @@ class ThetaFamily(SketchFamily):
         state.num_values += len(hashes)
         state.add_hashes(hashes)
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return ThetaSketch.deserialize(bytes(data))
 
     def result(self, state):
         return (state.estimate(),)

@@ -67,6 +67,7 @@ import pandas as pd
 
 from zetasketch_spark.hashing import fingerprint_canon_series
 from zetasketch_spark.sketches.base import SketchFamily, register_family
+from zetasketch_spark.sketches.wire import Reader, pack_header
 
 _MAGIC = b"TTH2"
 _ENCODING_VERSION = 1
@@ -256,8 +257,6 @@ class TimeThetaSketch:
     # -- serde -----------------------------------------------------------------
 
     def serialize(self) -> bytes:
-        from zetasketch_spark.sketches.wire import pack_header
-
         theta_stored = 0 if self.theta == _FULL else self.theta
         return b"".join([
             pack_header(_MAGIC, _ENCODING_VERSION),
@@ -270,18 +269,8 @@ class TimeThetaSketch:
 
     @classmethod
     def deserialize(cls, data: bytes) -> "TimeThetaSketch":
-        from zetasketch_spark.sketches.wire import read_header
-
-        version, off = read_header(data, _MAGIC, "time-theta")
-        k, num_values, theta_stored, n_ret = struct.unpack_from(
-            "<iqQi", data, off)
-        off += struct.calcsize("<iqQi")
-        if n_ret < 0 or off + 24 * n_ret > len(data):
-            # a lying length must not swallow trailing (forward-compat)
-            # bytes or read past the buffer
-            raise ValueError(
-                f"corrupt time-theta sketch: claims {n_ret} retained rows "
-                f"but {len(data) - off} payload bytes remain")
+        r = Reader(data, _MAGIC, "time-theta")
+        k, num_values, theta_stored, n_ret = r.unpack("<iqQi")
         if n_ret > k:
             # _quickselect/_combine rely on |retained| <= k; a blob
             # violating it would be accepted silently and inflate
@@ -289,27 +278,26 @@ class TimeThetaSketch:
             raise ValueError(
                 f"corrupt time-theta sketch: {n_ret} retained rows exceed "
                 f"k={k}")
-        sk = cls(k=k)
-        sk.encoding_version = version  # trailing bytes ignored
-        sk.num_values = num_values
-        sk.theta = _FULL if theta_stored == 0 else int(theta_stored)
-        sk.retained = np.frombuffer(data, dtype=np.uint64, count=n_ret,
-                                    offset=off).copy()
+        theta = _FULL if theta_stored == 0 else int(theta_stored)
+        retained = r.array(np.uint64, n_ret)
         # elementwise uint64 comparison (np.diff would wrap on a
         # decreasing pair and read as positive)
-        if n_ret and not (bool(np.all(sk.retained[1:] > sk.retained[:-1]))
-                          and int(sk.retained[-1]) < sk.theta):
+        if n_ret and not (bool(np.all(retained[1:] > retained[:-1]))
+                          and int(retained[-1]) < theta):
             # _combine's sorted-merge and the KMV estimator both rely on
             # a strictly-increasing retained array below theta (ADVICE r5)
             raise ValueError(
                 "corrupt time-theta sketch: retained hashes must be "
                 "strictly increasing and below theta")
-        off += 8 * n_ret
-        sk.last_ts = np.frombuffer(data, dtype=np.int64, count=n_ret,
-                                   offset=off).copy()
-        off += 8 * n_ret
-        sk.first_ts = np.frombuffer(data, dtype=np.int64, count=n_ret,
-                                    offset=off).copy()
+        last_ts = r.array(np.int64, n_ret)
+        first_ts = r.array(np.int64, n_ret)
+        sk = cls(k=k)
+        sk.encoding_version = r.version  # trailing bytes ignored
+        sk.num_values = num_values
+        sk.theta = theta
+        sk.retained = retained.copy()
+        sk.last_ts = last_ts.copy()
+        sk.first_ts = first_ts.copy()
         return sk
 
 
@@ -321,6 +309,7 @@ class TimeThetaFamily(SketchFamily):
     streaming)."""
 
     name = "timetheta"
+    state_type = TimeThetaSketch
     result_fields = [("estimate", "bigint")]
 
     def __init__(self, k: int = 4096):
@@ -366,16 +355,6 @@ class TimeThetaFamily(SketchFamily):
     def update_pair(self, state, keys, times):
         state.add_series(keys, times)
         return state
-
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
-    def serialize(self, state):
-        return state.serialize()
-
-    def deserialize(self, data):
-        return TimeThetaSketch.deserialize(bytes(data))
 
     def result(self, state):
         return (state.estimate(),)
